@@ -680,10 +680,11 @@ object Dedup {
     * star-heavy graphs; HashMin+jump is simpler and round-count-equivalent
     * for dedup-shaped graphs.
     *
-    * Small-graph fast path: below `collectThreshold` pairs the edge list is
+    * Small-graph fast path: up to `collectThreshold` pairs the edge list is
     * collected (two longs per pair — 2M pairs ≈ 32 MB) and solved by driver
-    * union-find, the same size-based judgment AQE applies when it broadcasts
-    * a small join side. This is NOT "the operator isn't distributed": the
+    * union-find, the same size-based judgment AQE applies when it
+    * broadcasts a small join side ([[graft.pipeline.Guarded.collectOrPin]]
+    * pins the pairs first, so either path computes them once). This is NOT "the operator isn't distributed": the
     * heavy work — shingling, minhashing, banding, the bucket join that
     * produced the pairs — already ran distributed, and the edge list is the
     * provably-small residue (pairs exist only inside LSH buckets). A 100 TB
@@ -721,30 +722,13 @@ object Dedup {
         s"connectedComponents: $c has non-integral type ${dt.simpleString} — " +
           "map node ids to longs before clustering")
     }
-    // r21 (verdict item 4, §5 fewer actions): the local-path election ran
-    // THREE fixed-cost jobs — checkpoint materialization, count, collect.
-    // (a) Skip the re-pin when the caller already handed us a pinned frame
-    //     (pq97 checkpoints the pair list itself — re-materializing a
-    //     LogicalRDD is a pure copy job); recompute of the projection over
-    //     cached blocks is cheaper than the copy on the distributed path
-    //     too, so this is scale-safe.
-    // (b) Replace count + collect with ONE limit-guarded collect (the
-    //     reElectAfterDeletion fast-path pattern): limit(guard+1) returns
-    //     every row iff the graph is sub-threshold — identical path choice
-    //     (length ≤ guard ⇔ count ≤ threshold) — and on the distributed
-    //     path CollectLimit stops scanning the pinned RDD after guard+1
-    //     rows, costing what the count used to.
     val spark = pairs.sparkSession
     import spark.implicits._
-    val base = pairs.select(col("id_a"), col("id_b"))
-    val prePinned = base.queryExecution.optimizedPlan.collectLeaves().forall {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case _ => false
+    val pinned = graft.pipeline.Guarded.collectOrPin(
+        pairs.select(col("id_a"), col("id_b")).as[(Long, Long)], collectThreshold) match {
+      case Left(es) => return (componentMinima(es).toSeq.toDF("id", "cluster_id"), 0)
+      case Right(p) => p
     }
-    val pinned = if (prePinned) base else base.localCheckpoint()
-    val guard = math.min(collectThreshold, (Int.MaxValue - 8L) / 2).toInt
-    val probe = pinned.limit(guard + 1).as[(Long, Long)].collect()
-    if (probe.length <= guard) return (unionFindLocal(spark, probe), 0)
     val sym = pinned
       .select(col("id_a").as("u"), col("id_b").as("v"))
       .union(pinned.select(col("id_b").as("u"), col("id_a").as("v")))
@@ -815,11 +799,11 @@ object Dedup {
     * the largest affected cluster — usually tiny, occasionally giant —
     * so its joins are left to the optimizer (broadcast when small,
     * shuffle when not; never force-collected). The delta itself computes
-    * driver-side in ONE guarded collect when the sub-graph is under the
-    * CC threshold (the takedown-wave fallback re-runs the distributed
-    * sub-graph CC). The corpus is never touched — everything here is
-    * (pairs, clusters) metadata, and the caller applies the delta with
-    * one broadcast join.
+    * driver-side in ONE guarded collect when the sub-graph's edges and
+    * survivors together number at most `collectThreshold` rows (the
+    * takedown-wave fallback re-runs the distributed sub-graph CC). The
+    * corpus is never touched — everything here is (pairs, clusters)
+    * metadata, and the caller applies the delta with one broadcast join.
     *
     * Inputs: `pairs` (id_a, id_b — the candidate-pair edge list the
     * clusters came from), `clusters` (id, cluster_id — [[
@@ -862,64 +846,45 @@ object Dedup {
       .join(removed, col("id_a") === col("__rm"), "left_anti")
       .join(removed, col("id_b") === col("__rm"), "left_anti")
       .select(col("id_a"), col("id_b"))
-    // FAST PATH (r19, probe-driven): everything here is takedown-bounded
-    // METADATA — the same boundedness argument that lets `members`
-    // broadcast lets the delta compute on the driver in 2 small jobs
-    // instead of the sub-CC's pin+count+collect plus a distributed
-    // aggregation (measured ≈4 fixed job overheads on the bench box for
-    // thousands-row inputs). The limit(+1) guard keeps the path honest: a
-    // takedown wave past the threshold falls back to the distributed
-    // shape rather than OOMing the driver.
+    // Everything here is takedown-bounded METADATA, so the delta computes
+    // on the driver when the survivor-restricted edges (t = 0) and the
+    // survivors (t = 1) together fit the guard; one frame sizes and
+    // collects both sides in one job. Past the guard the distributed
+    // shape runs over the pinned frame instead of OOMing the driver.
     import spark.implicits._
-    val guard = math.min(collectThreshold, (Int.MaxValue - 8L) / 2).toInt
-    // ONE job materializes both bounded sides (edges tagged 0, survivors
-    // tagged 1) — each extra job on a small input is pure fixed overhead
-    val local = subPairs
+    val tagged = subPairs
       .select(col("id_a").as("x"), col("id_b").as("y"), lit(0).as("t"))
       .unionByName(survivors
         .select(col("id").as("x"), col("old_cluster_id").as("y"), lit(1).as("t")))
-      .as[(Long, Long, Int)].limit(2 * guard + 2).collect()
-    val subLocal = local.collect { case (a, b, 0) => (a, b) }
-    val survLocal = local.collect { case (a, b, 1) => (a, b) }
-    if (local.length > 2 * guard + 1 || subLocal.length > guard || survLocal.length > guard) {
-      // distributed fallback: sub-graph CC + one aggregation
-      val subCc = connectedComponents(subPairs, collectThreshold = collectThreshold)
-        .select(col("id"), col("cluster_id").as("__nc"))
-      survivors
-        .join(subCc, Seq("id"), "left")
-        // isolated survivor (every neighbor removed): its own singleton keeper
-        .withColumn("__new_cluster", coalesce(col("__nc"), col("id")))
-        .groupBy(col("__new_cluster").as("new_keep_id"), col("old_cluster_id"))
-        .agg(count(lit(1)).as("n_members"))
-        // keeper unchanged (old minimum survived) -> nothing to reprocess
-        .filter(col("new_keep_id") =!= col("old_cluster_id"))
-    } else {
-      // driver union-find (path halving — the unionFindLocal core) over
-      // the survivor-restricted edges, then the delta grouping in place
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        while (parent.getOrDefault(x, x) != x) {
-          val p = parent.get(x)
-          val gp = parent.getOrDefault(p, p)
-          parent.put(x, gp)
-          x = gp
+      .as[(Long, Long, Int)]
+    graft.pipeline.Guarded.collectOrPin(tagged, collectThreshold) match {
+      case Left(rows) =>
+        val label = componentMinima(rows.collect { case (a, b, 0) => (a, b) })
+        val counts = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+        rows.foreach {
+          case (id, old, 1) =>
+            // isolated survivor (every neighbor removed): its own singleton keeper
+            val nc = label.getOrElse(id, id)
+            if (nc != old) counts((nc, old)) = counts.getOrElse((nc, old), 0L) + 1L
+          case _ =>
         }
-        x
-      }
-      subLocal.foreach { case (a, b) =>
-        parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-      }
-      val counts = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-      survLocal.foreach { case (id, old) =>
-        // isolated survivor (every neighbor removed): its own singleton keeper
-        val nc = if (parent.containsKey(id)) find(id) else id
-        if (nc != old) counts.update((nc, old), counts.getOrElse((nc, old), 0L) + 1L)
-      }
-      counts.iterator.map { case ((nc, old), n) => (nc, old, n) }.toSeq
-        .toDF("new_keep_id", "old_cluster_id", "n_members")
+        counts.iterator.map { case ((nc, old), n) => (nc, old, n) }.toSeq
+          .toDF("new_keep_id", "old_cluster_id", "n_members")
+      case Right(pinned) =>
+        def side(t: Int, x: String, y: String) =
+          pinned.filter(col("t") === t).select(col("x").as(x), col("y").as(y))
+        // distributed fallback: sub-graph CC + one aggregation
+        val subCc = connectedComponents(
+            side(0, "id_a", "id_b"), collectThreshold = collectThreshold)
+          .select(col("id"), col("cluster_id").as("__nc"))
+        side(1, "id", "old_cluster_id")
+          .join(subCc, Seq("id"), "left")
+          // isolated survivor (every neighbor removed): its own singleton keeper
+          .withColumn("__new_cluster", coalesce(col("__nc"), col("id")))
+          .groupBy(col("__new_cluster").as("new_keep_id"), col("old_cluster_id"))
+          .agg(count(lit(1)).as("n_members"))
+          // keeper unchanged (old minimum survived) -> nothing to reprocess
+          .filter(col("new_keep_id") =!= col("old_cluster_id"))
     }
   }
 
@@ -957,36 +922,29 @@ object Dedup {
         col("lbl") === col("j_id"))
       .select(col("id"), col("j_lbl").as("lbl"))
 
-  /** Driver union-find with path halving for sub-threshold edge lists —
-    * operates on the ALREADY-collected pair residue (never corpus data;
-    * the caller's limit-guarded collect is the only job), labels every
-    * node with its component minimum, and returns the (id, cluster_id)
-    * table re-parallelized so downstream joins plan normally.
+  /** Driver union-find with path halving over an ALREADY-collected
+    * sub-threshold edge list (never corpus data): maps every node of
+    * `edges` to its component minimum. Shared by the driver paths of
+    * [[connectedComponents]] and [[reElectAfterDeletion]].
     */
-  private def unionFindLocal(
-      spark: org.apache.spark.sql.SparkSession, es: Array[(Long, Long)]): DataFrame = {
-    import spark.implicits._
-    val parent = new java.util.HashMap[Long, Long]()
+  private def componentMinima(edges: Array[(Long, Long)]): scala.collection.mutable.LongMap[Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x0: Long): Long = {
       var x = x0
-      while (parent.getOrDefault(x, x) != x) {
-        val p = parent.get(x)
-        val gp = parent.getOrDefault(p, p)
-        parent.put(x, gp) // path halving
+      while (parent(x) != x) {
+        val gp = parent(parent(x))
+        parent(x) = gp // path halving
         x = gp
       }
       x
     }
-    es.foreach { case (a, b) =>
-      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val out = new Array[(Long, Long)](parent.size())
-    val it = parent.keySet().iterator()
-    var i = 0
-    while (it.hasNext) { val k = it.next(); out(i) = (k, find(k)); i += 1 }
-    out.toSeq.toDF("id", "cluster_id")
+    parent.keys.toArray.foreach(k => parent(k) = find(k))
+    parent
   }
 
   def contaminationFlags(

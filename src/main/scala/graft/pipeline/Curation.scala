@@ -25,22 +25,28 @@ import graft.sampling.Sampling
   */
 object Curation {
 
-  /** Handle over the stage-boundary caches one pipeline invocation created.
-    * Frames are held STRONGLY and deliberately so: the SQL `CacheManager`
+  /** Handle over the stage-boundary caches one pipeline invocation created:
+    * each stage's persisted frame and the RDD of its local checkpoint.
+    * Both are held STRONGLY and deliberately so: the SQL `CacheManager`
     * pins every cached plan until an explicit `unpersist`/`clearCache` — a
     * weak reference here would let GC collect the only wrapper able to
     * unpersist while the cache entry itself lives on, turning a bounded
     * leak into an unreleasable one. The lifecycle answer is scoping, not
-    * reference strength: each invocation's frames live on their own handle
+    * reference strength: each invocation's caches live on their own handle
     * and die at its [[release]].
     */
   final class StageCacheHandle private[Curation] () {
     private val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    private val checkpoints =
+      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
     private[Curation] def add(df: DataFrame): Unit = frames.add(df)
-    /** Unpersist every frame this handle tracked (idempotent). */
+    private[Curation] def add(rdd: org.apache.spark.rdd.RDD[_]): Unit = checkpoints.add(rdd)
+    /** Unpersist every frame and checkpoint this handle tracked (idempotent). */
     def release(blocking: Boolean = false): Unit = {
       var df = frames.poll()
       while (df != null) { df.unpersist(blocking); df = frames.poll() }
+      var rdd = checkpoints.poll()
+      while (rdd != null) { rdd.unpersist(blocking); rdd = checkpoints.poll() }
     }
   }
 
@@ -63,23 +69,22 @@ object Curation {
   private[pipeline] def persistStage(df: DataFrame): DataFrame = {
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     currentScope.value.add(p)
-    // r21: ALSO truncate the downstream logical plan at the stage boundary
-    // with a LAZY local checkpoint. The persist alone is the right
-    // execution plan (consumers share one materialization, and repeated
-    // invocations in a session hit the same cache entry), but every
-    // consumer Dataset still CARRIES the whole upstream tree through
-    // analysis — PlanCostProbe measured the mix pipelines spending
-    // 0.4-1.8 s/invocation of pure driver construction (DeduplicateRelations
-    // + checkAnalysis are quadratic in tree size for self-joining plans).
-    // localCheckpoint(eager=false) replaces the tree with a LogicalRDD over
-    // the persisted stage's execution RDD: downstream analysis cost
-    // collapses, laziness is preserved (nothing runs until the first
-    // consumer), within-invocation consumers share the checkpointed
-    // blocks, and across invocations the scan underneath still hits the
-    // persisted cache. Same truncation-for-driver-time trade the library
-    // already makes everywhere it localCheckpoints; results are unchanged
-    // (the oracle re-verifies all 166 rows).
-    p.localCheckpoint(eager = false)
+    // ALSO truncate the downstream logical plan at the stage boundary with
+    // a LAZY local checkpoint. The persist alone is the right execution
+    // plan (consumers share one materialization, and repeated invocations
+    // in a session hit the same cache entry), but every consumer Dataset
+    // would still CARRY the whole upstream tree through analysis, and
+    // DeduplicateRelations + checkAnalysis are quadratic in tree size for
+    // self-joining plans. The checkpoint replaces the tree with a
+    // LogicalRDD over the persisted stage: downstream analysis cost
+    // collapses, nothing runs until the first consumer, within-invocation
+    // consumers share the checkpointed blocks, and across invocations the
+    // scan underneath still hits the persisted cache. Its blocks belong to
+    // the invocation, so the handle releases them with the persist.
+    val cp = p.localCheckpoint(eager = false)
+    currentScope.value.add(
+      cp.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd)
+    cp
   }
 
   /** Build a pipeline plan with its stage caches registered to a PRIVATE

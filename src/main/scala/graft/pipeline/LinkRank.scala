@@ -25,13 +25,19 @@ import org.apache.spark.sql.functions._
   * join, one reduceByKey shuffle of the (dst, contribution) pairs — the
   * only data that crosses the wire per iteration — and one narrow left
   * join back to the node set; the dangling term is a single scalar
-  * aggregate. The loop body is RDD-level (r21): a DataFrame loop re-ran
+  * aggregate. The loop body is RDD-level: a DataFrame loop would re-run
   * the full Catalyst pipeline per iteration, which at any scale is pure
   * driver serial time. Iterations are a fixed small count (rank ordering
   * stabilizes in ~10 even on web graphs — the published convergence
   * behavior), so the loop cost is `iterations ×` that budget.
   */
 object LinkRank {
+
+  /** Iterations between rank checkpoints in the distributed loop: bounds
+    * its lineage, and lies above the 5-10 iterations PageRank's ordering
+    * needs, so such runs never checkpoint.
+    */
+  private[graft] val CheckpointEvery = 25
 
   /** `edges(src, dst)` → `(node, rank)` with `rank` in `scale` units.
     * Duplicate edges collapse first (a simple graph — host-graph edges
@@ -52,48 +58,40 @@ object LinkRank {
       .where(col("src").isNotNull && col("dst").isNotNull)
       .dropDuplicates("src", "dst")
     val srcType = edges.schema("src").dataType
-    val outSchema0 = org.apache.spark.sql.types.StructType(Seq(
+    val outSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node", srcType),
       org.apache.spark.sql.types.StructField("rank",
         org.apache.spark.sql.types.LongType, nullable = false)))
 
-    // Small-graph fast path (r21 — the connectedComponents/unionFindLocal
-    // posture applied here): ranks are METADATA (an id and a long per
-    // node), so below `collectThreshold` edges the whole recurrence runs
-    // on the driver off ONE limit-guarded collect of the deduped edge
-    // list — the iteration costs microseconds instead of a distributed
-    // job apiece. limit(guard+1) returns every row iff the graph is
-    // sub-threshold (identical path choice to CC's); past the guard the
-    // distributed RDD loop below is the real 100 TB shape.
-    val guard = math.min(collectThreshold, (Int.MaxValue - 8L) / 2).toInt
-    val probe = edges.limit(guard + 1).collect()
-    if (probe.length <= guard)
-      return localIntegerPageRank(
-        spark, probe, outSchema0, iterations, scale, dampNum, dampDen)
+    // Small-graph fast path: ranks are METADATA (an id and a long per
+    // node), so up to `collectThreshold` edges the whole recurrence runs on
+    // the driver off one guarded collect of the deduped edge list, in
+    // microseconds instead of a distributed job per iteration. Past the
+    // guard the RDD loop below is the real 100 TB shape; it reads the
+    // pinned edges, so either path computes them once.
+    val pinned = Guarded.collectOrPin(edges, collectThreshold) match {
+      case Left(rows) => return localIntegerPageRank(
+        spark, rows, outSchema, iterations, scale, dampNum, dampDen)
+      case Right(frame) => frame
+    }
 
-    // r21: the iteration runs on RDDs, not DataFrames. OptProbe attribution
-    // showed the r20 DataFrame loop's cost was almost entirely DRIVER work
-    // repeated per iteration — a full Catalyst pass (analyze, cache lookup,
-    // optimize, codegen source generation, AQE stage bookkeeping) for every
-    // localCheckpoint action, ~0.23 s/iteration at sf0.1 while the actual
-    // data work was microseconds (and checkpoint-every-2 measured exactly
-    // even: the saved materializations came back as doubled planning). The
-    // RDD loop plans nothing per iteration: edges are hash-partitioned by
-    // src ONCE; each iteration is one narrow co-partitioned join, one
-    // reduceByKey shuffle to dst, one narrow left join back to the node
-    // set, and ONE driver action (the dangling-mass sum). Completed shuffle
-    // stages are reused across the per-iteration actions, so nothing is
-    // recomputed and no per-iteration persist is needed — the same posture
-    // GraphX's Pregel loop uses, and the canonical 100 TB shape (the edge
-    // list never moves after the initial partitioning; only the rank table
-    // shuffles). Arithmetic is unchanged: the same scaled-long floor
-    // divisions on the same values, order-independent by integer-sum
-    // associativity (pq106/pq108 oracles re-prove bit-exactness).
+    // The iteration runs on RDDs, not DataFrames: a DataFrame loop pays a
+    // full Catalyst pass (analysis, optimization, codegen, AQE
+    // bookkeeping) per iteration, pure driver time next to microseconds of
+    // data work. Edges are hash-partitioned by src ONCE; each iteration is
+    // one narrow co-partitioned join, one reduceByKey shuffle to dst, one
+    // narrow left join back to the node set, and ONE driver action (the
+    // dangling-mass sum). Completed shuffle stages are reused across the
+    // per-iteration actions, so nothing is recomputed; the ranks are
+    // checkpointed every `CheckpointEvery` iterations so the lineage stays
+    // bounded (GraphX's Pregel posture). Arithmetic is the same scaled-long
+    // floor division as the driver path, order-independent by integer-sum
+    // associativity.
     val p = new org.apache.spark.HashPartitioner(
       math.max(1, spark.sparkContext.defaultParallelism))
     // (src, dst) with EXTERNAL key objects (String/Long ids), partitioned
     // by src so the per-iteration rank join is narrow
-    val edgePairs = edges.rdd.map(r => (r.get(0), r.get(1))).partitionBy(p)
+    val edgePairs = pinned.rdd.map(r => (r.get(0), r.get(1))).partitionBy(p)
     val outdeg = edgePairs.mapValues(_ => 1L).reduceByKey(p, _ + _)
     // (src, (dst, deg)): the per-edge denominator never changes — attach once
     val edgesDeg = edgePairs.join(outdeg, p)
@@ -104,7 +102,6 @@ object LinkRank {
       .leftOuterJoin(outdeg, p)
       .mapValues { case (_, deg) => deg.getOrElse(-1L) }
     val n = nodeDeg.count()
-    val outSchema = outSchema0
     if (n == 0) return spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
     val base = scale * (dampDen - dampNum) / (dampDen * n)
@@ -113,6 +110,7 @@ object LinkRank {
     var ranks = nodeDeg.mapValues(deg => (scale / n, deg))
     var it = 0
     while (it < iterations) {
+      if (it > 0 && it % CheckpointEvery == 0) ranks = ranks.localCheckpoint()
       // dangling mass: the one driver action per iteration (a tiny RDD
       // aggregate — no Catalyst, no codegen, reused upstream shuffles)
       val dm = ranks.aggregate(0L)(

@@ -165,8 +165,7 @@ object AsyncProcessing {
       keyFn: T => K,
       f: T => U)(
       implicit encU: Encoder[U]): Dataset[U] =
-    asyncKeyedImpl(ds, maxInFlight, policy)(keyFn,
-      (t, ec) => Future(f(t))(ec))
+    asyncKeyedImpl(ds, maxInFlight, policy)(keyFn, t => Future(f(t))(ioPool))
 
   /** True-async variant for future-returning I/O clients (async HTTP/RPC):
     * same per-key serial chaining and in-order emission, but an in-flight
@@ -195,7 +194,7 @@ object AsyncProcessing {
       f: T => Future[U])(
       implicit encU: Encoder[U]): Dataset[U] =
     asyncKeyedImpl(ds, maxInFlight, policy)(keyFn,
-      (t, _) => try f(t) catch { case scala.util.control.NonFatal(e) => Future.failed(e) })
+      t => try f(t) catch { case scala.util.control.NonFatal(e) => Future.failed(e) })
 
   /** One in-flight record: its result future, the gate successors chain on,
     * and a release-once latch for its permit (give-up and late completion
@@ -219,7 +218,7 @@ object AsyncProcessing {
       maxInFlight: Int,
       policy: CompletionPolicy[T, U])(
       keyFn: T => K,
-      run: (T, ExecutionContext) => Future[U])(
+      run: T => Future[U])(
       implicit encU: Encoder[U]): Dataset[U] = {
     ds.mapPartitions { it =>
       // Chain GLUE — the transformWith/andThen callbacks below (permit
@@ -244,7 +243,7 @@ object AsyncProcessing {
         val gate = Promise[Unit]()
         val released = new AtomicBoolean(false)
         val fut = prev.transformWith { _ =>
-          run(t, ioPool).andThen { case _ =>
+          run(t).andThen { case _ =>
             if (!released.getAndSet(true)) permits.release()
             gate.trySuccess(())
           }

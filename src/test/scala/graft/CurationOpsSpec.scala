@@ -476,9 +476,14 @@ class CurationOpsSpec extends SparkTestBase {
     assert(out(1L)._4 == "alpha beta gamma delta")
   }
 
+  /** RDDs created after `firstId` that still hold cached or checkpointed blocks. */
+  private def rddBlocksAfter(firstId: Int) =
+    spark.sparkContext.getRDDStorageInfo.filter(_.id > firstId).map(_.name).toSeq
+
   test("stage-boundary caches release on demand") {
     import spark.implicits._
     spark.catalog.clearCache()
+    val firstId = spark.sparkContext.emptyRDD[Int].id
     val scored = Seq((1L, "a", "en", 10, "x"), (2L, "b", "en", 20, "y"))
       .toDF("doc_id", "source", "stratum", "score", "txt")
       .select(col("doc_id"), col("source"), col("stratum"),
@@ -490,11 +495,15 @@ class CurationOpsSpec extends SparkTestBase {
     graft.pipeline.Curation.releaseStageCaches(blocking = true)
     assert(spark.sharedState.cacheManager.isEmpty,
       "releaseStageCaches must drop every pipeline-owned cached frame")
+    // the stage's local checkpoint holds blocks of its own
+    assert(rddBlocksAfter(firstId).isEmpty,
+      s"the mix run left RDD blocks after release: ${rddBlocksAfter(firstId)}")
   }
 
   test("scoped stage caches are isolated from the global release") {
     import spark.implicits._
     spark.catalog.clearCache()
+    val firstId = spark.sparkContext.emptyRDD[Int].id
     def scored(tag: String) = Seq((1L, "a", "en", 10, "x" + tag), (2L, "b", "en", 20, "y" + tag))
       .toDF("doc_id", "source", "stratum", "score", "txt")
       .select(col("doc_id"), col("source"), col("stratum"),
@@ -516,6 +525,8 @@ class CurationOpsSpec extends SparkTestBase {
     cachesA.release(blocking = true)
     assert(spark.sharedState.cacheManager.isEmpty,
       "scoped handle must drop its own frames on release")
+    assert(rddBlocksAfter(firstId).isEmpty,
+      s"the mix runs left RDD blocks after release: ${rddBlocksAfter(firstId)}")
   }
 
   test("term drift: zero on self, non-negative, and rises under a planted vocabulary shift") {

@@ -614,6 +614,25 @@ class DedupSpec extends SparkTestBase {
     assert(e.getMessage.contains("non-integral"))
   }
 
+  test("connectedComponents computes an uncached input once on the distributed path") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // a DataFrame over an uncached RDD: every scan of it recomputes the
+    // source, which the accumulator counts row by row
+    val computed = spark.sparkContext.longAccumulator("cc-source-rows")
+    val chain = (0L until 40L).map(i => (i, i + 1))
+    val rows = spark.sparkContext.parallelize(chain, 4).map { case (a, b) =>
+      computed.add(1L); Row(a, b)
+    }
+    val pairs = spark.createDataFrame(rows,
+      StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType))))
+    val got = Dedup.connectedComponents(pairs, collectThreshold = 0L)
+      .as[(Long, Long)].collect().toMap
+    assert(got == (0L to 40L).map(_ -> 0L).toMap, s"chain labels off: $got")
+    assert(computed.value == chain.size,
+      s"${chain.size} source rows computed ${computed.value} times")
+  }
+
   test("simHashBandedPairs validates band geometry") {
     val sims = Seq((1L, 5L)).toDF("id", "simhash")
     intercept[IllegalArgumentException] {

@@ -193,4 +193,39 @@ class LinkGraphSpec extends SparkTestBase {
     }
     assert(got == rank, "distributed integer PageRank diverged from the local reference")
   }
+
+  test("integerPageRank's distributed loop: input computed once, lineage bounded over 100 iterations") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    // a DataFrame over an uncached RDD: every scan of it recomputes the
+    // source, which the accumulator counts row by row
+    val computed = spark.sparkContext.longAccumulator("pagerank-source-rows")
+    val rnd = new scala.util.Random(20261019L)
+    // duplicate edges included: the dedup sits between the source and the pin
+    val es = (0 until 150).map(_ => (s"n${rnd.nextInt(30)}", s"n${rnd.nextInt(30)}"))
+    val rows = spark.sparkContext.parallelize(es, 4).map { case (s, d) =>
+      computed.add(1L); Row(s, d)
+    }
+    val edges = spark.createDataFrame(rows,
+      StructType(Seq(StructField("src", StringType), StructField("dst", StringType))))
+    def ranks(iterations: Int) = graft.pipeline.LinkRank.integerPageRank(
+      edges, iterations = iterations, collectThreshold = 0L)
+    val dist = ranks(100)
+    val got = dist.as[(String, Long)].collect().toMap
+    assert(computed.value == es.size, s"${es.size} source rows computed ${computed.value} times")
+    assert(got == graft.pipeline.LinkRank.integerPageRank(es.toDF("src", "dst"), iterations = 100)
+      .as[(String, Long)].collect().toMap,
+      "distributed RDD loop diverged from the local fast path at 100 iterations")
+    def depth(df: org.apache.spark.sql.DataFrame): Int = {
+      val memo = scala.collection.mutable.Map.empty[Int, Int]
+      def go(r: org.apache.spark.rdd.RDD[_]): Int =
+        memo.getOrElseUpdate(r.id, 1 + r.dependencies.map(d => go(d.rdd)).maxOption.getOrElse(0))
+      go(df.rdd)
+    }
+    // the loop checkpoints every CheckpointEvery iterations, so 100 of them
+    // leave no deeper a lineage than one uncheckpointed stretch
+    val window = ranks(graft.pipeline.LinkRank.CheckpointEvery)
+    assert(depth(dist) <= depth(window),
+      s"lineage grew with the iterations: ${depth(dist)} > ${depth(window)}")
+  }
 }
