@@ -248,14 +248,15 @@ object Bench {
 
     // Median-of-3 per query (was single-shot through round 3): on shared
     // container kernels a single rep occasionally absorbs a multi-second
-    // scheduler stall — VarianceProbe measured one query's warmed reps at
-    // 2.8 s to 27.2 s in one JVM — and a median absorbs one outlier where a
-    // single shot becomes it. The 3 reps run as 3 INTERLEAVED passes over
-    // the whole query set (round-5 change): back-to-back reps let one
-    // multi-minute container stall own all 3 reps of several consecutive
-    // queries (BENCH_r04's q01=32.7 s artifact spanned 8 adjacent queries);
-    // with ~11 min between a query's reps, a stall can poison at most one
-    // rep per query and the median stays clean. The raw reps and each rep's
+    // scheduler stall — a variance probe (HISTORY.md, "Retired probes")
+    // measured one query's warmed reps at 2.8 s to 27.2 s in one JVM — and
+    // a median absorbs one outlier where a single shot becomes it. The 3
+    // reps run as 3 INTERLEAVED passes over the whole query set (round-5
+    // change): back-to-back reps let one multi-minute container stall own
+    // all 3 reps of several consecutive queries (BENCH_r04's q01=32.7 s
+    // artifact spanned 8 adjacent queries); with ~11 min between a query's
+    // reps, a stall can poison at most one rep per query and the median
+    // stays clean. The raw reps and each rep's
     // wall-clock start are emitted so any stall is diagnosable from the
     // committed JSON alone. Any rep that throws marks the query failed —
     // a silently-recorded timing for a query that died is a lie (round-4
@@ -386,9 +387,10 @@ object Bench {
     // One timed rep of the with-I/O probe; all stream_* metrics describe
     // its window. Run 3 and report the median by throughput (plus the raw
     // reps): on shared container kernels a single ~1.5 s window swings with
-    // OS thread-wake scheduling — StreamLatencyProbe measured same-JVM reps
-    // at 26.6k→65.5k t/s with max latency 537→40 ms before this change —
-    // exactly the methodology the no-I/O floor already uses.
+    // OS thread-wake scheduling — a latency probe (HISTORY.md, "Retired
+    // probes") measured same-JVM reps at 26.6k→65.5k t/s with max latency
+    // 537→40 ms before this change — exactly the methodology the no-I/O
+    // floor already uses.
     val streamTasks = 50000L
     final case class StreamRep(
         tps: Double, latAvgMs: Double, latMaxMs: Double,
@@ -504,8 +506,8 @@ object Bench {
     // decode regression (a per-row allocation slip, a lost Inflater pool)
     // fails the BenchFloorSpec MB/s floor LOUDLY instead of surfacing as
     // pq99 bimodality. Block built once driver-side; the timed region is
-    // pure decode (the HttpProbe methodology, embedded so every driver
-    // bench records it).
+    // pure decode (the retired http_text probe's methodology, HISTORY.md
+    // "Retired probes", embedded so every driver bench records it).
     val httpMbps = {
       val bodyBytes = 20000
       val nDocs = 20000
@@ -644,16 +646,18 @@ object Bench {
     //     forked run output through StdoutOutput (raw passthrough);
     // (b) the per-query map only existed in the huge full record, which
     //     falls outside the driver's ~2,000-char tail window.
-    // So: print the CONTRACT line ({"metric","value","unit","queries",...,
-    // "sf"}) with a compact 3-decimal per-query seconds map — a full-stdout
-    // parser gets per-query timings — IMMEDIATELY followed by the short flat
-    // summary, which is what a tail-window parser sees complete. Additive:
-    // the full record, BENCH_SELF.json and the flat line are unchanged.
+    // So: print the CONTRACT line ({"metric":"per_query","value","unit",
+    // "queries",...,"sf"}) with a compact 3-decimal per-query seconds map —
+    // a full-stdout parser gets per-query timings — IMMEDIATELY followed by
+    // the short flat summary, which is what a tail-window parser sees
+    // complete. The two lines carry different metric tags, so a parser
+    // keyed on "metric":"total" reads only the flat summary. Additive: the
+    // full record, BENCH_SELF.json and the flat line are unchanged.
     val qsCompact = results.map { case (k, v) =>
       "\"" + k + "\":" + v.map(num(_, 3)).getOrElse("null")
     }.mkString("{", ",", "}")
     val perQueryLine =
-      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec",""" +
+      s"""{"metric":"per_query","value":${num(total, 3)},"unit":"sec",""" +
         s""""n_queries":${results.size},"n_failed":${failed.size},""" +
         s""""queries":$qsCompact,""" +
         s""""stream_tasks_per_sec":${num(tps, 1)},""" +

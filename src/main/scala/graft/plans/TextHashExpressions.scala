@@ -99,10 +99,10 @@ case class MinHashSigs(child: Expression, shingleSize: Int, k: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult = requireString(child, "minhash_sigs")
 
-  /** Zero-allocation shingle scan. Profiling (tools/HashCostProbe) put 65%
-    * of eval time in the old `substringSQL` + `HashSet[UTF8String]` pair —
-    * one UTF8String copy plus a boxed set entry per position — against only
-    * ~11% in md5 itself. Shingles here are byte ranges over the document's
+  /** Zero-allocation shingle scan. Profiling (HISTORY.md, "Retired probes")
+    * put 65% of eval time in the old `substringSQL` + `HashSet[UTF8String]`
+    * pair — one UTF8String copy plus a boxed set entry per position — against
+    * only ~11% in md5 itself. Shingles here are byte ranges over the document's
     * UTF-8 bytes (a char-position → byte-offset index is built in one pass),
     * deduplicated EXACTLY in an open-addressed table of positions: the FNV
     * hash only places a slot, equality is a byte-range compare, and UTF-8 is

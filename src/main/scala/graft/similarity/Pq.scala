@@ -290,14 +290,14 @@ object Pq {
     greedyBalance(rows.toSeq, m, d / m)
   }
 
-  /** The balanced-variance greedy shared by [[balancedPermutation]],
-    * [[trainOpq]]'s init and OpqProbe — ONE implementation so the
-    * tie-breaking can never drift between the distributed census path and
-    * the driver-sample path: largest-variance dim first, each to the
-    * least-loaded subspace with a free slot (ties → smaller subspace id),
-    * source-dim order within a subspace.
+  /** The balanced-variance greedy shared by [[balancedPermutation]] and
+    * [[trainOpq]]'s init — ONE implementation so the tie-breaking can never
+    * drift between the distributed census path and the driver-sample path:
+    * largest-variance dim first, each to the least-loaded subspace with a
+    * free slot (ties → smaller subspace id), source-dim order within a
+    * subspace.
     */
-  private[graft] def greedyBalance(variances: Seq[(Int, Double)], m: Int, w: Int): Seq[Int] = {
+  private def greedyBalance(variances: Seq[(Int, Double)], m: Int, w: Int): Seq[Int] = {
     val load = Array.fill(m)(0.0)
     val slots = Array.fill(m)(0)
     val assigned = Array.fill(m)(List.empty[Int])
@@ -312,10 +312,11 @@ object Pq {
 
   /** Per-subspace L2 k-means over in-memory rows (sequential, ties to the
     * smaller code, an emptied cluster keeps its centroid — pq39's rules);
-    * seeds are the first `k` rows' subvectors. Shared by [[trainOpq]] and
-    * OpqProbe so the diagnostic can never desynchronize from the trainer.
+    * seeds are the first `k` rows' subvectors. Used by [[trainOpq]]'s
+    * alternating loop (HISTORY.md, "Retired probes", has the per-iteration
+    * distortion diagnostic that also ran it).
     */
-  private[graft] def driverKmeans(
+  private def driverKmeans(
       xr: Array[Array[Double]], m: Int, k: Int, w: Int, iters: Int): Array[Array[Array[Double]]] = {
     val cb = Array.tabulate(m, k)((s, c) =>
       java.util.Arrays.copyOfRange(xr(c), s * w, (s + 1) * w))
@@ -342,7 +343,7 @@ object Pq {
   }
 
   /** Nearest-centroid reconstruction of one (already-rotated) row. */
-  private[graft] def driverReconstruct(
+  private def driverReconstruct(
       cb: Array[Array[Array[Double]]], x: Array[Double], m: Int, w: Int): Array[Double] = {
     val k = cb.head.length
     val d = m * w
@@ -366,7 +367,7 @@ object Pq {
   /** Per-dim variances of in-memory rows (sequential sums — deterministic
     * over the id-ordered sample without fixed-point freezing).
     */
-  private[graft] def sampleVariances(x: Array[Array[Double]], d: Int): Seq[(Int, Double)] = {
+  private def sampleVariances(x: Array[Array[Double]], d: Int): Seq[(Int, Double)] = {
     val n = x.length.toDouble
     (0 until d).map { j =>
       var sx = 0.0; var sxx = 0.0

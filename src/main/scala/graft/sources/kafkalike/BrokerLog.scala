@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * {{{
   *   <root>/<topic>/.partitions          # partition count (created once)
   *   <root>/<topic>/p<N>/<offset>.rec    # one record, offset = file name
-  *   <root>/<topic>/p<N>/.hw-<offset>    # log-end (high-water) marker, max wins
+  *   <root>/<topic>/p<N>/.hw-<offset>    # log-end (high-water) marker, max wins;
+  *                                       # only truncation writes one
   * }}}
   *
   * Offsets are REAL Kafka offsets, not list indices: the 20-digit zero-padded
@@ -25,9 +26,11 @@ import scala.jdk.CollectionConverters._
   * ordered across concurrent producers, and deleting a prefix of files
   * (retention / data loss) leaves the remaining offsets stable.
   *
-  * Like Kafka, the log-end offset NEVER regresses: every successful claim
-  * bumps a persisted per-partition high-water mark (`.hw`), so truncating ALL
-  * records leaves `offsetRange = (hw, hw)` — a consumer checkpoint past the
+  * Like Kafka, the log-end offset NEVER regresses. A record file is its own
+  * evidence of the log end, and [[truncateBefore]], the only code that
+  * deletes records, first raises a persisted per-partition high-water mark
+  * (`.hw-` markers) over its victims, so truncating ALL records leaves
+  * `offsetRange = (hw, hw)` — a consumer checkpoint past the
   * truncation point is detected as data loss instead of silently aliasing
   * re-produced offsets, exactly the property the `failOnDataLoss` contract
   * needs. At 100 TB this component is the test stand-in for a real broker;
@@ -151,8 +154,8 @@ object BrokerLog {
     * single scan racing create-then-prune bumps can miss both the new max
     * and the pruned runner-up. Re-scan until two consecutive scans agree
     * (markers only ever grow, so the max over all scans is safe to return);
-    * each racing scan requires a produce interleaved with it, so in practice
-    * this loop exits on the second scan.
+    * each racing scan requires a truncation interleaved with it, so in
+    * practice this loop exits on the second scan.
     */
   private def readHighWater(dir: Path): Long = {
     var best = hwMarkers(dir).map(markerValue).maxOption.getOrElse(0L)
@@ -202,14 +205,16 @@ object BrokerLog {
   }
 
   /** Append one record; returns its claimed offset. Concurrency-safe across
-    * producers: the hard-link claim is atomic, and the high-water bump right
-    * after makes the claim durable against truncation.
+    * producers: the hard-link claim is atomic. It writes no high-water
+    * marker: the claimed record file is itself the evidence of the new log
+    * end, and [[truncateBefore]] covers it with a marker before deleting it.
     *
     * `hint` (optional): start the claim probe at this offset instead of a
     * full end-of-log scan — pass the caller's last claimed offset + 1. The
     * claim loop makes any stale hint safe (an occupied slot advances one
     * step), so a sequential producer pays the directory scan ONCE per
-    * partition instead of once per record; a hint must never exceed the
+    * partition instead of once per record, and each hinted produce costs
+    * the same at any partition depth; a hint must never exceed the
     * true log end (last-claimed + 1 by construction cannot).
     *
     * A hint is only TRUSTED while its anchor record (`hint - 1`, the
@@ -243,7 +248,6 @@ object BrokerLog {
           case _: FileAlreadyExistsException => off += 1 // lost the race; next slot
         }
       }
-      bumpHighWater(dir, claimed + 1)
       claimed
     } finally Files.deleteIfExists(tmp)
   }
@@ -275,14 +279,13 @@ object BrokerLog {
   /** Delete all records below `offset` (retention / simulated data loss).
     * Offsets of surviving records — and the log-end mark — are unaffected.
     *
-    * The high-water cover lands BEFORE any file dies: produce() claims the
-    * offset (hard link) and only then bumps the mark, so a record inside
-    * that claim→bump window has its record file as the ONLY evidence of the
-    * log end. A sweep that deleted it without covering first would let a
-    * reader racing the sweep observe `offsetRange` regress (listing-derived
-    * end vanishes, marker still behind) until the producer's own deferred
-    * bump lands — found by ConcurrencyChaosSpec seed 20260817; the log-end
-    * monotonicity contract admits no transient dips.
+    * Only truncation writes `.hw-` markers, and the cover lands BEFORE any
+    * file dies: produce() writes no marker, so a record's file is the ONLY
+    * evidence of the log end it set. A sweep that deleted it without
+    * covering first would let a reader racing the sweep, or any later
+    * reader, observe `offsetRange` regress (listing-derived end vanishes,
+    * marker behind) — the race ConcurrencyChaosSpec seed 20260817 found;
+    * the log-end monotonicity contract admits no transient dips.
     */
   def truncateBefore(root: String, topic: String, partition: Int, offset: Long): Unit = {
     val dir = partDir(root, topic, partition)

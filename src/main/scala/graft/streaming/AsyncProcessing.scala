@@ -226,7 +226,7 @@ object AsyncProcessing {
       // parasitic: inline on whatever thread completed the previous stage.
       // Routing it through the pool cost a park/unpark handoff per hop
       // (~50 µs on a typical kernel, measured 0.3-1 ms on slow-thread-op
-      // container kernels — ChainHandoffProbe) for a few field writes.
+      // container kernels; HISTORY.md, "Retired probes") for a few field writes.
       // Blocking user work still runs on the pool: mapAsyncKeyed dispatches
       // f via Future(...)(ioPool); flatMapAsyncKeyed's f is non-blocking by
       // contract (future-returning client), so inlining it is exactly the
@@ -371,8 +371,15 @@ object AsyncProcessing {
     */
   private lazy val wheels: Array[Wheel] = Array.fill(4)(new Wheel)
 
-  /** A future that completes ~`delayMillis` later (±1 ms tick) without
-    * holding a thread.
+  /** A future that completes about `delayMillis` later without holding a
+    * thread. The deadline is read from the truncated millisecond clock
+    * (`System.currentTimeMillis() + delayMillis`) and the wheel fires at the
+    * first tick at or past it, so the future can complete up to 1 ms BEFORE
+    * `delayMillis` has elapsed (a call made late in a millisecond), and a
+    * chain of n delays up to n ms before their sum. It completes late by
+    * the ticker's scheduling delay (a 1 ms sleep plus a thread wake), which
+    * has no fixed bound. Callers that need a hard floor pass
+    * `delayMillis + 1`.
     */
   def delayed[U](delayMillis: Long)(value: => U): Future[U] = {
     val p = scala.concurrent.Promise[U]()

@@ -1,17 +1,29 @@
 package graft.tools
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{BenchMetrics, SparkEntry}
 
-/** Driver plan-cost attribution (r21, guide §1): OptProbe showed several
-  * heavy bench rows spend most of their time BEFORE the first task —
-  * this probe splits that driver time into construction (the query
-  * builder itself: eager per-call analysis of every DataFrame operator,
-  * plus any construction-time actions), cache lookup
-  * (CacheManager.useCachedData canonicalization), logical optimization,
-  * and physical planning, then prints Catalyst's own per-rule cumulative
-  * timings so a hot rule is named, not guessed.
+/** The per-query profile of registered queries. For each named query it
+  * prints one `PLANCOST` line, the median of three warmed reps of:
+  *  - driver time, split into construction (the query builder itself:
+  *    eager per-call analysis of every DataFrame operator, plus any
+  *    construction-time actions), analysis, cache lookup
+  *    (CacheManager.useCachedData canonicalization), logical optimization
+  *    and physical planning;
+  *  - execution seconds of a noop write of the built query;
+  *  - the jobs, stages, tasks and shuffle write/read KB that write
+  *    scheduled, from one SparkListener;
+  *  - GC ms and allocated MB over the whole rep.
+  * A query whose time is mostly construction needs a smaller expression
+  * tree; one that is mostly execution across many jobs needs fewer
+  * actions; one with few jobs but heavy shuffle bytes needs fewer or
+  * narrower exchanges. `-rules` adds Catalyst's own per-rule cumulative
+  * timings, so a hot rule is named, not guessed; the other modes are
+  * described where they run.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.PlanCostProbe [-rules] <query> [query...]
   */
@@ -47,30 +59,58 @@ object PlanCostProbe {
       .foreach(t => graft.Tables.table(spark, dir, t).write.format("noop").mode("overwrite").save())
     graft.Tables.events(spark, dir).write.format("noop").mode("overwrite").save()
 
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      // warm pass: construction actions, codegen, stage caches
-      try fn(spark, dir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[plancost] $name warmup failed: $e") }
-      val reps = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        val df = fn(spark, dir)
-        val t1 = System.nanoTime()
-        val qe = df.queryExecution
-        qe.analyzed
-        val t2 = System.nanoTime()
-        qe.withCachedData
-        val t3 = System.nanoTime()
-        qe.optimizedPlan
-        val t4 = System.nanoTime()
-        qe.executedPlan
-        val t5 = System.nanoTime()
-        (t1 - t0, t2 - t1, t3 - t2, t4 - t3, t5 - t4)
+    val jobs, stages, tasks = new AtomicInteger(0)
+    val shufW, shufR = new AtomicLong(0L)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        stages.incrementAndGet()
+        tasks.addAndGet(e.stageInfo.numTasks)
+        shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        shufR.addAndGet(m.shuffleReadMetrics.remoteBytesRead + m.shuffleReadMetrics.localBytesRead)
       }
-      def med(f: ((Long, Long, Long, Long, Long)) => Long): Double =
-        reps.map(f).sorted.apply(1) / 1e9
-      println(f"PLANCOST $name%-28s construct=${med(_._1)}%6.3f analyze=${med(_._2)}%6.3f " +
-        f"cacheLookup=${med(_._3)}%6.3f optimize=${med(_._4)}%6.3f physical=${med(_._5)}%6.3f")
+    })
+
+    // one bad name or runtime error must not abort the remaining queries
+    names.foreach { name =>
+      try {
+        val fn = SparkEntry.queries(name)
+        // warm pass: construction actions, codegen, stage caches
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        val reps = (1 to 3).map { _ =>
+          val gc0 = BenchMetrics.gcSnapshot()._2
+          val alloc0 = BenchMetrics.allocatedBytes()
+          val t0 = System.nanoTime()
+          val df = fn(spark, dir)
+          val t1 = System.nanoTime()
+          val qe = df.queryExecution
+          qe.analyzed
+          val t2 = System.nanoTime()
+          qe.withCachedData
+          val t3 = System.nanoTime()
+          qe.optimizedPlan
+          val t4 = System.nanoTime()
+          qe.executedPlan
+          val t5 = System.nanoTime()
+          Seq(jobs, stages, tasks).foreach(_.set(0)); shufW.set(0L); shufR.set(0L)
+          df.write.format("noop").mode("overwrite").save()
+          val t6 = System.nanoTime()
+          val gcMs = BenchMetrics.gcSnapshot()._2 - gc0
+          val allocMb = (BenchMetrics.allocatedBytes() - alloc0) / 1048576.0
+          // listener events are async; a short sleep drains the bus (the
+          // public API has no waitUntilEmpty)
+          Thread.sleep(150)
+          Seq((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, (t4 - t3) / 1e9, (t5 - t4) / 1e9,
+            (t6 - t5) / 1e9, jobs.get.toDouble, stages.get.toDouble, tasks.get.toDouble,
+            (shufW.get / 1024).toDouble, (shufR.get / 1024).toDouble, gcMs.toDouble, allocMb)
+        }
+        val m = reps.transpose.map(_.sorted.apply(1))
+        println(f"PLANCOST $name%-28s construct=${m(0)}%6.3f analyze=${m(1)}%6.3f " +
+          f"cacheLookup=${m(2)}%6.3f optimize=${m(3)}%6.3f physical=${m(4)}%6.3f exec=${m(5)}%6.3f " +
+          f"jobs=${m(6)}%3.0f stages=${m(7)}%3.0f tasks=${m(8)}%5.0f " +
+          f"shufW=${m(9)}%8.0fKB shufR=${m(10)}%8.0fKB gcMs=${m(11)}%5.0f allocMB=${m(12)}%6.0f")
+      } catch { case e: Throwable => System.err.println(s"[plancost] $name probe failed: $e") }
     }
     // -loop: rebuild the first query's plan continuously for ~60 s so an
     // external sampler (jstack) can attribute construction hotspots

@@ -12,8 +12,8 @@ object AsyncProcessingSpec {
   /** Concurrency gauge: how many guarded bodies are executing right now /
     * the high-water mark. The overlap assertion reads the high-water mark
     * directly instead of inferring overlap from wall time — on container
-    * kernels where a thread park/unpark costs ~0.3-1 ms (measured,
-    * ChainHandoffProbe) wall time is dominated by handoff scheduling noise
+    * kernels where a thread park/unpark costs ~0.3-1 ms (measured; HISTORY.md,
+    * "Retired probes") wall time is dominated by handoff scheduling noise
     * and a duration bound flaps.
     */
   val concurrent = new AtomicInteger(0)

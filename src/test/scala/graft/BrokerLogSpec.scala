@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -127,6 +128,28 @@ class BrokerLogSpec extends AnyFunSuite {
     assert(BrokerLog.offsetRange(root, "hw", 0) == (total, total),
       "racing bumps must never leave a regressed log-end mark")
     assert(BrokerLog.produce(root, "hw", 0, rec("k", "fresh")) == total)
+  }
+
+  test("hinted produce writes no high-water marker; truncation still preserves log-end") {
+    // a record file is its own evidence of the log end, so produce leaves
+    // the marker to truncateBefore; per-record markers made every produce
+    // list the partition directory and cost grow with partition depth
+    val root = freshRoot()
+    BrokerLog.createTopic(root, "nohw", 1)
+    var hint = -1L
+    (0 until 50).foreach { i =>
+      hint = BrokerLog.produce(root, "nohw", 0, rec(s"k$i", s"v$i"), hint) + 1
+    }
+    val dir = BrokerLog.topicDir(root, "nohw").resolve("p0")
+    val markers = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith(".hw-")).toSeq
+      finally s.close()
+    }
+    assert(markers.isEmpty, s"produce wrote high-water markers: $markers")
+    assert(BrokerLog.offsetRange(root, "nohw", 0) == (0L, 50L))
+    BrokerLog.truncateBefore(root, "nohw", 0, Long.MaxValue)
+    assert(BrokerLog.offsetRange(root, "nohw", 0) == (50L, 50L))
   }
 
   test("createTopic is idempotent; partition-count change is rejected") {

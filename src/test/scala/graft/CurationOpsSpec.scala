@@ -488,9 +488,15 @@ class CurationOpsSpec extends SparkTestBase {
       .toDF("doc_id", "source", "stratum", "score", "txt")
       .select(col("doc_id"), col("source"), col("stratum"),
         md5(col("txt")).as("ch"), col("score"))
-    val mixed = graft.pipeline.Curation.mixFromScored(
-      scored, keepFrac = 0.5, cap = 10, alpha = "prop", budget = 10L)
-    mixed.count() // materialize → the stage boundary is now cached
+    // three invocations on one input, as a long-lived session runs them:
+    // the 2nd and 3rd reuse the persisted stage, and each materialization
+    // adds checkpoint blocks of its own that the one release must free
+    val runs = (1 to 3).map { _ =>
+      graft.pipeline.Curation.mixFromScored(
+        scored, keepFrac = 0.5, cap = 10, alpha = "prop", budget = 10L)
+        .collect().map(_.toString).sorted.toSeq
+    }
+    assert(runs.distinct.size == 1, s"repeat invocations disagree: $runs")
     assert(!spark.sharedState.cacheManager.isEmpty, "stage cache expected after a mix run")
     graft.pipeline.Curation.releaseStageCaches(blocking = true)
     assert(spark.sharedState.cacheManager.isEmpty,
