@@ -72,8 +72,8 @@ object BenchMetrics {
 
   /** Cumulative JIT compilation wall ms across compiler threads (0 when
     * unsupported). A rep whose delta spikes ran concurrent tier-up /
-    * recompilation — the r19 pq99 lesson: its bimodal reps correlate with
-    * this counter, not with GC or box noise (`tools/pq99_probe_r20.json`).
+    * recompilation: bimodal reps can follow this counter rather than GC or
+    * box noise (pq99's did, `tools/pq99_probe_r20.json`).
     */
   def jitMs(): Long = {
     val b = java.lang.management.ManagementFactory.getCompilationMXBean
@@ -119,9 +119,9 @@ object BenchMetrics {
 
 object Bench {
 
-  /** Host/cgroup counters that separate "slow box" from "slow code" — the
-    * r18 verdict's gap: a degraded window was pinned to the container only
-    * by a same-day A/B, because nothing RECORDED the box state. These are
+  /** Host/cgroup counters that separate "slow box" from "slow code": without
+    * them a degraded window can be pinned to the container only by a
+    * same-day A/B, because nothing RECORDS the box state. These are
     * monotonic totals; reps log deltas, so the committed artifact alone
     * shows whether a slow rep ran under hypervisor steal (/proc/stat field
     * 8, USER_HZ ticks across all cpus) or cgroup CPU throttling (v2
@@ -165,12 +165,12 @@ object Bench {
         .orElse(v1.flatMap(_.get("nr_throttled"))).getOrElse(0L))
   }
 
-  /** Shuffle/block-store scratch on tmpfs when available (r21, guide §6):
-    * PlanCostProbe -floor measured the FIRST shuffle of a tiny query at
-    * ~0.41 s on this sandbox's overlay root fs vs ~0.21-0.33 s with local
-    * dirs on /dev/shm — pure transient-file churn (blockmgr data+index
-    * files), the same host artifact as the r20 state-store/segment tmpfs
-    * moves. Parameterized, not tuned: production points spark.local.dir
+  /** Shuffle/block-store scratch on tmpfs when available: PlanCostProbe
+    * -floor measured the FIRST shuffle of a tiny query at ~0.41 s with local
+    * dirs on an overlay root fs vs ~0.21-0.33 s on /dev/shm — pure
+    * transient-file churn (blockmgr data+index files), the same host cost
+    * that put the state-store and segment scratch on tmpfs.
+    * Parameterized, not tuned: production points spark.local.dir
     * (or the SPARK_LOCAL_DIRS env, which Spark gives precedence) at its
     * fast local disks; this default only replaces the harness box's slow
     * root fs when tmpfs exists, and falls back to the JVM default
@@ -246,32 +246,28 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] sf warmup $name failed: $e") }
     }
 
-    // Median-of-3 per query (was single-shot through round 3): on shared
-    // container kernels a single rep occasionally absorbs a multi-second
-    // scheduler stall — a variance probe (HISTORY.md, "Retired probes")
-    // measured one query's warmed reps at 2.8 s to 27.2 s in one JVM — and
-    // a median absorbs one outlier where a single shot becomes it. The 3
-    // reps run as 3 INTERLEAVED passes over the whole query set (round-5
-    // change): back-to-back reps let one multi-minute container stall own
-    // all 3 reps of several consecutive queries (BENCH_r04's q01=32.7 s
-    // artifact spanned 8 adjacent queries); with ~11 min between a query's
-    // reps, a stall can poison at most one rep per query and the median
-    // stays clean. The raw reps and each rep's
-    // wall-clock start are emitted so any stall is diagnosable from the
-    // committed JSON alone. Any rep that throws marks the query failed —
-    // a silently-recorded timing for a query that died is a lie (round-4
-    // lesson: a non-converging loop "benched" as 6.8 s for two rounds of
-    // bench output before the failure was noticed).
+    // Median-of-3 per query: on shared container kernels a single rep
+    // occasionally absorbs a multi-second scheduler stall — a variance
+    // probe (HISTORY.md, "Retired probes") measured one query's warmed reps
+    // at 2.8 s to 27.2 s in one JVM — and a median absorbs one outlier
+    // where a single shot becomes it. The 3 reps run as 3 INTERLEAVED
+    // passes over the whole query set: back-to-back reps let one
+    // multi-minute container stall own all 3 reps of several consecutive
+    // queries, while with minutes between a query's reps a stall can poison
+    // at most one rep per query and the median stays clean. The raw reps
+    // and each rep's wall-clock start are emitted so any stall is
+    // diagnosable from the committed JSON alone. Any rep that throws marks
+    // the query failed: a silently-recorded timing for a query that died
+    // reads as a measurement.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     val queryNames = SparkEntry.queries.keys.toSeq.sorted
     // Stateful/sketch-heavy rows whose first timed rep can pay a multi-second
     // one-time warmup (agg-buffer/JIT init that the distant untimed pass no
-    // longer covers once ~150 other queries ran in between): r17's dq24 reps
-    // were [3.86, 1.63, 0.39] — the committed median measured a cold start,
-    // not the plan. These rows get an untimed run IMMEDIATELY before each
-    // timed rep, so every rep measures warm steady state and a cold init can
-    // never masquerade as a regression (the per-rep raw log still shows any
-    // real movement).
+    // longer covers once ~150 other queries ran in between), so the median
+    // of their reps can measure a cold start, not the plan. These rows get
+    // an untimed run IMMEDIATELY before each timed rep, so every rep
+    // measures warm steady state and a cold init can never masquerade as a
+    // regression (the per-rep raw log still shows any real movement).
     val preWarmQueries = Set("dq24_windowed_distinct_sketch")
     // rep value None = the rep THREW: its elapsed time measures a crash, not
     // a timing, and recording it would contaminate the median with a number
@@ -280,9 +276,9 @@ object Bench {
     val repLog = scala.collection.mutable.Map.empty[String, Vector[(Double, Option[Double])]]
     // per-rep JVM fingerprint (GC ms, JIT compilation ms deltas): a slow rep
     // with a flat fingerprint is box noise; a slow rep whose JIT delta
-    // spikes is tier-up churn (pq99's r19 bimodality); a GC spike is heap
-    // pressure. Recorded for every rep so a bimodal query is attributable
-    // from the committed artifact alone (r19 verdict item 1b).
+    // spikes is tier-up churn; a GC spike is heap pressure. Recorded for
+    // every rep so a bimodal query is attributable from the committed
+    // artifact alone.
     val repJvm = scala.collection.mutable.Map.empty[String, Vector[(Long, Long)]]
     // box-state deltas per interleaved pass: a pass whose steal/throttle
     // delta spikes explains its slow reps from the artifact alone
@@ -501,7 +497,7 @@ object Bench {
     val cmsReps = Seq.fill(3) { System.gc(); cmsRep() }.sorted
     val cmsFullSec = cmsReps(1)
 
-    // http_text decode-chain throughput probe (r20): the gzip+chunked+
+    // http_text decode-chain throughput probe: the gzip+chunked+
     // charset-sniff arm — the full chain — at a fixed data shape, so a
     // decode regression (a per-row allocation slip, a lost Inflater pool)
     // fails the BenchFloorSpec MB/s floor LOUDLY instead of surfacing as
@@ -629,30 +625,18 @@ object Bench {
       Explain.writePlansMd(auditSession, sfDir, "PLANS.md",
         s"graft.Bench ${java.time.Instant.now()} @ $sfDir")
     } catch { case e: Throwable => System.err.println(s"[bench] PLANS.md regen failed: $e") }
-    // Final line = a FLAT compact summary. r13 re-printed the full record
-    // here and the driver logged parsed:null (its tail window is ~2,000 chars
-    // and the full line is ~10x that); r15's ≤1,500-char compact line STILL
-    // parsed null — it carried a NESTED "queries":{...} object plus sbt's
-    // "[info] " prefix, either of which defeats a lazy \{[^{}]*\} extractor.
-    // So the last stdout line is flat (no nested objects, no arrays), every
-    // number formatted under Locale.ROOT (an f"" interpolator uses the JVM
-    // default locale — under de_DE the decimal comma makes the line invalid
-    // JSON), and the same line is mirrored to stderr, which sbt does not
-    // prefix. The full per-query record lives in BENCH_SELF.json above.
-    // r21 driver-visibility fix (verdict r20 item 1): every BENCH_r*.json
-    // through round 20 has parsed:null. Root causes, now both addressed:
-    // (a) sbt's logger prefixed every application line with "[info] " /
-    //     "[error] ", so no line ever began with '{' — build.sbt now routes
-    //     forked run output through StdoutOutput (raw passthrough);
-    // (b) the per-query map only existed in the huge full record, which
-    //     falls outside the driver's ~2,000-char tail window.
-    // So: print the CONTRACT line ({"metric":"per_query","value","unit",
-    // "queries",...,"sf"}) with a compact 3-decimal per-query seconds map —
-    // a full-stdout parser gets per-query timings — IMMEDIATELY followed by
-    // the short flat summary, which is what a tail-window parser sees
-    // complete. The two lines carry different metric tags, so a parser
-    // keyed on "metric":"total" reads only the flat summary. Additive: the
-    // full record, BENCH_SELF.json and the flat line are unchanged.
+    // Two JSON lines close the run, each starting with '{' (build.sbt relays
+    // forked output unprefixed through StdoutOutput). First the CONTRACT
+    // line ({"metric":"per_query","value","unit","queries",...,"sf"}) with a
+    // compact 3-decimal per-query seconds map, for a full-stdout parser.
+    // Then, last, a FLAT compact summary for a parser that reads only a
+    // ~2,000-char tail window with a lazy \{[^{}]*\} extractor: no nested
+    // objects, no arrays, every number formatted under Locale.ROOT (an f""
+    // interpolator uses the JVM default locale — under de_DE the decimal
+    // comma makes the line invalid JSON), mirrored to stderr. The two lines
+    // carry different metric tags, so a parser keyed on "metric":"total"
+    // reads only the flat summary. The full per-query record lives in
+    // BENCH_SELF.json above.
     val qsCompact = results.map { case (k, v) =>
       "\"" + k + "\":" + v.map(num(_, 3)).getOrElse("null")
     }.mkString("{", ",", "}")

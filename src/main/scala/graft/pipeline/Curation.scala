@@ -26,27 +26,23 @@ import graft.sampling.Sampling
 object Curation {
 
   /** Handle over the stage-boundary caches one pipeline invocation created:
-    * each stage's persisted frame and the RDD of its local checkpoint.
-    * Both are held STRONGLY and deliberately so: the SQL `CacheManager`
-    * pins every cached plan until an explicit `unpersist`/`clearCache` — a
-    * weak reference here would let GC collect the only wrapper able to
-    * unpersist while the cache entry itself lives on, turning a bounded
-    * leak into an unreleasable one. The lifecycle answer is scoping, not
-    * reference strength: each invocation's caches live on their own handle
-    * and die at its [[release]].
+    * the persisted frame of each stage, the one copy a stage keeps
+    * ([[persistStage]] hands consumers a scan of that cache). Frames are
+    * held STRONGLY and deliberately so: the SQL `CacheManager` pins every
+    * cached plan until an explicit `unpersist`/`clearCache` — a weak
+    * reference here would let GC collect the only wrapper able to unpersist
+    * while the cache entry itself lives on, turning a bounded leak into an
+    * unreleasable one. The lifecycle answer is scoping, not reference
+    * strength: each invocation's caches live on their own handle and die at
+    * its [[release]].
     */
   final class StageCacheHandle private[Curation] () {
     private val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    private val checkpoints =
-      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
     private[Curation] def add(df: DataFrame): Unit = frames.add(df)
-    private[Curation] def add(rdd: org.apache.spark.rdd.RDD[_]): Unit = checkpoints.add(rdd)
-    /** Unpersist every frame and checkpoint this handle tracked (idempotent). */
+    /** Unpersist every frame this handle tracked (idempotent). */
     def release(blocking: Boolean = false): Unit = {
       var df = frames.poll()
       while (df != null) { df.unpersist(blocking); df = frames.poll() }
-      var rdd = checkpoints.poll()
-      while (rdd != null) { rdd.unpersist(blocking); rdd = checkpoints.poll() }
     }
   }
 
@@ -66,25 +62,19 @@ object Curation {
   private val currentScope =
     new scala.util.DynamicVariable[StageCacheHandle](globalStageCaches)
 
+  /** Persist `df` on the current handle and return a scan of that cache.
+    * The persist is the execution plan: consumers share one
+    * materialization, and a later invocation over the same plan hits the
+    * same cache entry. The returned frame's plan is a single `LogicalRDD`
+    * leaf over the persisted frame's executed RDD, so downstream Datasets
+    * no longer carry the upstream tree through analysis (DeduplicateRelations
+    * and checkAnalysis are quadratic in tree size on self-joining plans).
+    * The stage keeps one copy, the cache, which the handle releases.
+    */
   private[pipeline] def persistStage(df: DataFrame): DataFrame = {
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     currentScope.value.add(p)
-    // ALSO truncate the downstream logical plan at the stage boundary with
-    // a LAZY local checkpoint. The persist alone is the right execution
-    // plan (consumers share one materialization, and repeated invocations
-    // in a session hit the same cache entry), but every consumer Dataset
-    // would still CARRY the whole upstream tree through analysis, and
-    // DeduplicateRelations + checkAnalysis are quadratic in tree size for
-    // self-joining plans. The checkpoint replaces the tree with a
-    // LogicalRDD over the persisted stage: downstream analysis cost
-    // collapses, nothing runs until the first consumer, within-invocation
-    // consumers share the checkpointed blocks, and across invocations the
-    // scan underneath still hits the persisted cache. Its blocks belong to
-    // the invocation, so the handle releases them with the persist.
-    val cp = p.localCheckpoint(eager = false)
-    currentScope.value.add(
-      cp.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd)
-    cp
+    org.apache.spark.sql.graftbridge.GraftBridge.scanOf(p)
   }
 
   /** Build a pipeline plan with its stage caches registered to a PRIVATE

@@ -257,14 +257,18 @@ object ChaosMedium {
     graft.sources.kafkalike.BrokerLog.createTopic(root, topic, nPartitions)
     val checkpoint: String =
       java.nio.file.Files.createTempDirectory("graft-chaos-kafka-ckpt").toString
+    // last claimed offset + 1 per partition, the produce hint that spares
+    // each record an end-of-log scan (as GraftKafka's writer does)
+    private val next = Array.fill(nPartitions)(-1L)
     def write(spark: SparkSession, tasks: Seq[(String, Long)]): Unit =
       // driver-side sequential produce in sequence order: the sink's
       // key-hash routing sends a key to one partition, appends in order
       tasks.foreach { case (k, id) =>
-        graft.sources.kafkalike.BrokerLog.produce(root, topic,
-          math.floorMod(scala.util.hashing.MurmurHash3.stringHash(k), nPartitions),
+        val part = math.floorMod(scala.util.hashing.MurmurHash3.stringHash(k), nPartitions)
+        next(part) = 1 + graft.sources.kafkalike.BrokerLog.produce(root, topic, part,
           graft.sources.kafkalike.BrokerLog.Record(
-            k.getBytes("UTF-8"), id.toString.getBytes("UTF-8"), 1704067200000L + id, Seq.empty))
+            k.getBytes("UTF-8"), id.toString.getBytes("UTF-8"), 1704067200000L + id, Seq.empty),
+          hint = next(part))
       }
     def read(spark: SparkSession): DataFrame =
       spark.readStream.format("graft-kafka")

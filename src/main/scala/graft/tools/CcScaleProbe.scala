@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.dedup.Dedup
 
@@ -79,15 +80,8 @@ object CcScaleProbe {
       require(nClusters == chains,
         s"$label: expected $chains components, got $nClusters")
     } finally {
-      // listener bus is async: poll counters to rest before reading
-      def snap() = (tap.sw.sum(), tap.sr.sum())
-      var prev = snap(); var stable = 0
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val cur = snap()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
+      // the listener bus is async: drain it before reading the counters
+      GraftBridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(tap)
     }
     val sec = (System.nanoTime() - t0) / 1e9

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.{BenchMetrics, SparkEntry}
 
@@ -98,9 +99,8 @@ object PlanCostProbe {
           val t6 = System.nanoTime()
           val gcMs = BenchMetrics.gcSnapshot()._2 - gc0
           val allocMb = (BenchMetrics.allocatedBytes() - alloc0) / 1048576.0
-          // listener events are async; a short sleep drains the bus (the
-          // public API has no waitUntilEmpty)
-          Thread.sleep(150)
+          // listener events are async: drain the bus before reading
+          GraftBridge.drainListenerBus(spark.sparkContext)
           Seq((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, (t4 - t3) / 1e9, (t5 - t4) / 1e9,
             (t6 - t5) / 1e9, jobs.get.toDouble, stages.get.toDouble, tasks.get.toDouble,
             (shufW.get / 1024).toDouble, (shufR.get / 1024).toDouble, gcMs.toDouble, allocMb)

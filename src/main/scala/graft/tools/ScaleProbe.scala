@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.SparkEntry
 
@@ -185,21 +186,10 @@ object ScaleProbe {
     try {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      // wall time captured BEFORE the listener-drain polling below: the
-      // drain sleeps >=300 ms and would otherwise ride every reported sec
       sec = (System.nanoTime() - t0) / 1e9
     } finally {
-      // listener bus is async (and its drain API is private): poll until the
-      // counters stop moving before reading them
-      def snap() = (tap.input.sum(), tap.sw.sum(), tap.sr.sum(), tap.spill.sum())
-      var prev = snap()
-      var stable = 0
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val cur = snap()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
+      // the listener bus is async: drain it before reading the counters
+      GraftBridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(tap)
     }
     def mb(a: LongAdder) = a.sum() / 1048576.0

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.streaming.StreamOps
 
@@ -74,14 +75,7 @@ object SelfIdxScaleProbe {
           col("doc_id"), col("text"), indexDir,
           k = 16, bands = 4, shingleSize = 5).count()
       } finally {
-        def snap() = (tap.input.sum(), tap.sw.sum())
-        var prev = snap(); var stable = 0
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (stable < 3 && System.nanoTime() < deadline) {
-          Thread.sleep(100)
-          val cur = snap()
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
+        GraftBridge.drainListenerBus(spark.sparkContext)
         spark.sparkContext.removeSparkListener(tap)
       }
       val sec = (System.nanoTime() - t0) / 1e9

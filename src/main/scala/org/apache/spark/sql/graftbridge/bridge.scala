@@ -1,14 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{classic, Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Spark 4 moved Column to a backend-agnostic node representation; the
   * Expression<->Column bridge (`org.apache.spark.sql.classic.ExpressionUtils`)
   * is `private[sql]`. This shim, placed inside the `org.apache.spark.sql`
-  * package namespace (the standard extension-library idiom), re-exports just
-  * the two conversions the engine's custom expressions need.
+  * package namespace (the standard extension-library idiom), re-exports the
+  * two conversions the engine's custom expressions need, plus the two
+  * `private[spark]` hooks [[scanOf]] and [[drainListenerBus]].
   */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,4 +25,15 @@ object GraftBridge {
     case a: org.apache.spark.sql.internal.Alias if a.name.size == 1 => Some(a.name.head)
     case _ => None
   }
+
+  /** A frame whose plan is one `LogicalRDD` leaf over `ds`'s own executed
+    * RDD: the leaf `localCheckpoint` builds, with no checkpoint under it.
+    * Scanning it runs `ds`'s physical plan (for a persisted `ds`, a read of
+    * its cache), and the leaf keeps `ds`'s output partitioning and ordering.
+    */
+  def scanOf(ds: DataFrame): DataFrame = classic.Dataset.ofRows(ds.queryExecution.sparkSession,
+    LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, ds.isStreaming))
+
+  /** Block until every listener has seen every event posted so far. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -489,8 +489,8 @@ class CurationOpsSpec extends SparkTestBase {
       .select(col("doc_id"), col("source"), col("stratum"),
         md5(col("txt")).as("ch"), col("score"))
     // three invocations on one input, as a long-lived session runs them:
-    // the 2nd and 3rd reuse the persisted stage, and each materialization
-    // adds checkpoint blocks of its own that the one release must free
+    // the 2nd and 3rd reuse the persisted outer stage, and the one release
+    // must free every cache the runs made
     val runs = (1 to 3).map { _ =>
       graft.pipeline.Curation.mixFromScored(
         scored, keepFrac = 0.5, cap = 10, alpha = "prop", budget = 10L)
@@ -498,10 +498,13 @@ class CurationOpsSpec extends SparkTestBase {
     }
     assert(runs.distinct.size == 1, s"repeat invocations disagree: $runs")
     assert(!spark.sharedState.cacheManager.isEmpty, "stage cache expected after a mix run")
+    // one copy per stage boundary: the shared outer stage plus at most one
+    // inner stage per run hold blocks, and no second copy rides beside them
+    assert(rddBlocksAfter(firstId).size <= 4,
+      s"the mix runs hold more than one copy per stage: ${rddBlocksAfter(firstId)}")
     graft.pipeline.Curation.releaseStageCaches(blocking = true)
     assert(spark.sharedState.cacheManager.isEmpty,
       "releaseStageCaches must drop every pipeline-owned cached frame")
-    // the stage's local checkpoint holds blocks of its own
     assert(rddBlocksAfter(firstId).isEmpty,
       s"the mix run left RDD blocks after release: ${rddBlocksAfter(firstId)}")
   }
