@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.functions.TextFunctions
 import graft.sampling.Sampling
@@ -38,9 +39,21 @@ object Curation {
     */
   final class StageCacheHandle private[Curation] () {
     private val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    private[Curation] def add(df: DataFrame): Unit = frames.add(df)
+    private val scans = new java.util.IdentityHashMap[AnyRef, DataFrame]()
+    /** Track the persisted `p` and return the one scan of its cache entry. A
+      * later invocation whose stage hits that entry gets the identical
+      * `LogicalRDD` leaf, so the stages built on it hit their own entries
+      * too instead of persisting a new one per call.
+      */
+    private[Curation] def scanOf(p: DataFrame): DataFrame = {
+      frames.add(p)
+      GraftBridge.cacheEntryOf(p).fold(GraftBridge.scanOf(p)) { entry =>
+        scans.synchronized(scans.computeIfAbsent(entry, _ => GraftBridge.scanOf(p)))
+      }
+    }
     /** Unpersist every frame this handle tracked (idempotent). */
     def release(blocking: Boolean = false): Unit = {
+      scans.synchronized(scans.clear())
       var df = frames.poll()
       while (df != null) { df.unpersist(blocking); df = frames.poll() }
     }
@@ -69,13 +82,11 @@ object Curation {
     * leaf over the persisted frame's executed RDD, so downstream Datasets
     * no longer carry the upstream tree through analysis (DeduplicateRelations
     * and checkAnalysis are quadratic in tree size on self-joining plans).
-    * The stage keeps one copy, the cache, which the handle releases.
+    * The stage keeps one copy, the cache, which the handle releases; the
+    * handle hands out one scan per cache entry.
     */
-  private[pipeline] def persistStage(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    currentScope.value.add(p)
-    org.apache.spark.sql.graftbridge.GraftBridge.scanOf(p)
-  }
+  private[pipeline] def persistStage(df: DataFrame): DataFrame =
+    currentScope.value.scanOf(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Build a pipeline plan with its stage caches registered to a PRIVATE
     * handle instead of the global registry: `val (mix, caches) =

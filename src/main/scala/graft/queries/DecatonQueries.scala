@@ -907,9 +907,9 @@ object DecatonQueries {
       (s, dir) => {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        // one collect feeds BOTH the MemoryStream epochs and n (r20: the
-        // separate max() job and the collect() job fused; this harness is
-        // driver-resident by design — the replay stream is built from rows)
+        // one collect feeds BOTH the MemoryStream epochs and n (no separate
+        // max() job); this harness is driver-resident by design — the replay
+        // stream is built from rows
         val rows = docs.collect().map(r =>
           (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
         val n = rows.iterator.map(_._1).max + 1
@@ -923,9 +923,9 @@ object DecatonQueries {
         // (mod 100); only n-1 can hit a boundary — fail loudly if it would.
         require((n - 1) % 100 != 0,
           s"dq25 watermark n-1=${n - 1} would land on a window boundary")
-        // the refresh targets, precomputed eagerly (each is 512 longs) —
-        // r20: all three prefix censuses in ONE tokenize+aggregate pass
-        // (was three full scans; bit-identical per histogram)
+        // the refresh targets, precomputed eagerly (each is 512 longs): all
+        // three prefix censuses in ONE tokenize+aggregate pass, bit-identical
+        // per histogram to three separate scans
         val refs = graft.streaming.StreamOps.termBucketHistPrefixes(
           docs, col("doc_id"), col("text"),
           Seq(q100, math.min(2 * q100, n), n), nBuckets = 512)
@@ -959,9 +959,8 @@ object DecatonQueries {
         val ckptDir =
           if (tmpfsOk) java.nio.file.Files.createTempDirectory(ckptBase, "graft-dq25")
           else java.nio.file.Files.createTempDirectory("graft-dq25")
-        // bench-log which path was taken: r15 could not tell whether the
-        // 3.16 s warm median meant /dev/shm was absent in the driver sandbox
-        // (silent fallback) or the cost is the 6 state-store commits themselves
+        // log which path was taken, so a slow run tells a missing /dev/shm
+        // (silent fallback) apart from the cost of the 6 state-store commits
         System.err.println(s"[dq25] checkpoint=${if (tmpfsOk) "tmpfs" else "default-tmp"} dir=$ckptDir")
         val ckpt = ckptDir.toString
         val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
@@ -1177,7 +1176,7 @@ object DecatonQueries {
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
         val cb = graft.similarity.Pq.syntheticCodebooks(m = 8, k = 16, w = 8)
-        val root = Tables.stableScratchRoot("graft-dq28-index") // r20: tmpfs when available
+        val root = Tables.stableScratchRoot("graft-dq28-index") // tmpfs when available
         // two "micro-batches" through the real per-batch core; stable batch
         // ids make reruns overwrite their own segments (idempotent), and
         // the strict batch < batchId history filter keeps rep N's batch-0
@@ -1206,7 +1205,7 @@ object DecatonQueries {
       "dq29_selfindex_text",
       (s, dir) => {
         val d = Tables.documents(s, dir)
-        val root = Tables.stableScratchRoot("graft-dq29-index") // r20: tmpfs when available
+        val root = Tables.stableScratchRoot("graft-dq29-index") // tmpfs when available
         val n = 250L // stable cut: documents carry dense doc_ids from 0 (500 at sf≤0.01, 5000 at sf0.1)
         val f0 = graft.streaming.StreamOps.flagAndIndexTextBatch(
           d.filter(col("doc_id") < n), 0L, col("doc_id"), col("text"),
@@ -1235,14 +1234,14 @@ object DecatonQueries {
       "dq30_bm25_incremental",
       (s, dir) => {
         val d = Tables.documents(s, dir)
-        val root = Tables.stableScratchRoot("graft-dq30-stats") // r20: tmpfs when available
+        val root = Tables.stableScratchRoot("graft-dq30-stats") // tmpfs when available
         val n = 250L // stable cut (dense doc_ids from 0; 500 at sf≤0.01, 5000 at sf0.1)
         graft.retrieval.Bm25.appendBm25StatsSegment(
           d.filter(col("doc_id") < n), 0L, root, col("doc_id"), col("text"))
         graft.retrieval.Bm25.appendBm25StatsSegment(
           d.filter(col("doc_id") >= n), 1L, root, col("doc_id"), col("text"))
         graft.retrieval.Bm25.bm25TopKIncremental(
-          // r20: spread only the SCORING input (row-local BM25 over every
+          // spread only the SCORING input (row-local BM25 over every
           // doc); the stats appends above keep the unspread frame so each
           // segment stays one file
           s, root, Tables.spreadForRowWork(d), col("doc_id"), col("text"),

@@ -355,7 +355,7 @@ object PipelineQueries {
       (s, dir) => {
         // lang rides the same scan as the native simhash — no join-back;
         // the banded self-join then reuses ONE exchange for both sides
-        // (input spread: the 16-bit simhash gram pass dominates, r20)
+        // (input spread: the 16-bit simhash gram pass dominates)
         val d = Tables.spreadForRowWork(Tables.documents(s, dir))
         val sims = d.select(col("doc_id").as("id"),
           graft.functions.sim_hash(col("text"), 16).as("simhash"), col("lang"))
@@ -1071,8 +1071,7 @@ object PipelineQueries {
         val (d, _, pairs0) = lshSigsAndPairs(s, dir)
         // pin the LSH pair lineage: BOTH the full CC and the re-elect's
         // sub-graph CC materialize it, and unpinned each would recompute
-        // the whole shingle→minhash→band pipeline (r19 probe: ~1 s of the
-        // 2.6 s median was the second LSH pass)
+        // the whole shingle→minhash→band pipeline a second time
         val pairs = pairs0.localCheckpoint()
         val clusters = Dedup.connectedComponents(pairs)
         val removed = d.select(col("doc_id")).filter(col("doc_id") % 5 === 0)
@@ -1418,7 +1417,7 @@ object PipelineQueries {
           lit("@mail-ex.org or +1 (555) 01"), (col("doc_id") % 100).cast("string"),
           lit(" node 10.2."), (col("doc_id") % 256).cast("string"),
           lit(".7 via https://ex.org/d/"), col("doc_id").cast("string"))
-        Tables.spreadForRowWork(Tables.documents(s, dir)) // r20 input spread
+        Tables.spreadForRowWork(Tables.documents(s, dir)) // input spread
           .select(col("doc_id"), salt.as("salted"))
           .select(Seq(
             col("doc_id"),
@@ -1920,7 +1919,7 @@ object PipelineQueries {
     Q(
       "pq53_bm25_topk",
       (s, dir) => {
-        val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // r20 input spread
+        val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // input spread
         graft.retrieval.Bm25.bm25TopK(
           d, col("doc_id"), col("text"),
           Seq(
@@ -2481,7 +2480,7 @@ object PipelineQueries {
     Q(
       "pq68_bpe_tokens",
       (s, dir) => {
-        val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // r20 input spread
+        val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // input spread
         val merges = Seq(
           "t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n", "an" -> "d",
           "e" -> "r", "o" -> "n", "r" -> "e", "in" -> "g", "a" -> "t",
@@ -2660,7 +2659,7 @@ object PipelineQueries {
     Q(
       "pq73_markup_extract",
       (s, dir) => {
-        val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // r20 input spread
+        val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // input spread
         val html = concat(
           lit("<html><head><style>p { color: #333; }</style></head><body><h1>Doc "),
           col("doc_id"), lit("</h1>\n<p>"),
@@ -2951,10 +2950,10 @@ object PipelineQueries {
       },
       None),
 
-    // ---- the OPQ recall FLOOR as a registered row (r16 stretch #8, r17
-    // carry): per query vector, the INTEGER hit counts of pq80's OPQ
-    // IVF-PQ and pq66's plain synthetic-codebook IVF-PQ against the exact
-    // brute-force top-10, at the SAME fixed nprobe — the comparison that
+    // ---- the OPQ recall FLOOR as a registered row: per query vector, the
+    // INTEGER hit counts of pq80's OPQ IVF-PQ and pq66's plain
+    // synthetic-codebook IVF-PQ against the exact brute-force top-10, at
+    // the SAME fixed nprobe — the comparison that
     // previously lived only in PqSpec. Deterministic end to end (trainOpq
     // is sequential fixed-sweep, ivfAdcTopK is integer-ranked), but the
     // learned rotation has no SQL form (an SVD is not oracle-replayable),

@@ -1,11 +1,11 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicBoolean
-import java.util.concurrent.{Executors, Semaphore, TimeoutException}
+import java.util.concurrent.{Executors, LinkedBlockingQueue, TimeoutException}
 
 import scala.collection.mutable
 import scala.concurrent.duration._
-import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.{ExecutionContext, Future, Promise}
 
 import org.apache.spark.sql.{Dataset, Encoder}
 
@@ -19,9 +19,9 @@ sealed trait TimeoutDecision
 object TimeoutDecision {
   /** Grant the task another `timeout` period. */
   case object Extend extends TimeoutDecision
-  /** Abandon the task: its permit is released, its key unblocks, and the
-    * record is mapped through `onGiveUp` (an error-shaped row — the
-    * tri-state/error stream), so the batch completes instead of stalling.
+  /** Abandon the task: its key unblocks, and the record is emitted through
+    * `onGiveUp` (an error-shaped row — the tri-state/error stream), so the
+    * batch completes instead of stalling.
     */
   case object GiveUp extends TimeoutDecision
 }
@@ -30,20 +30,20 @@ object TimeoutDecision {
   * is called after each elapsed timeout period (n = extensions so far);
   * `onGiveUp` converts the abandoned task to the operator's output type.
   *
-  * `dynamicTimeoutMs`, when set, is consulted before EVERY await round, so a
+  * `dynamicTimeoutMs`, when set, is consulted before EVERY wait, so a
   * hot-reloaded `decaton.deferred.complete.timeout.ms` re-times in-flight
   * waits in the same JVM immediately and executor-side tasks from the next
   * trigger onward (the closure re-serializes per batch — the trigger-boundary
   * reload posture of SURVEY §2.8 P4). A negative value reproduces the
   * reference default `-1` = reaper disabled (`ProcessorProperties.java:196-198`):
-  * the await is unbounded and `onTimeout` never fires.
+  * the wait is unbounded and `onTimeout` never fires.
   */
 final case class CompletionPolicy[T, U](
     timeout: FiniteDuration,
     onTimeout: (T, Int) => TimeoutDecision,
     onGiveUp: T => U,
     dynamicTimeoutMs: Option[() => Long] = None) {
-  /** Timeout for the next await round. */
+  /** Timeout for the next wait. */
   def nextTimeout: Duration = dynamicTimeoutMs match {
     case Some(f) =>
       val ms = f()
@@ -65,7 +65,7 @@ object CompletionPolicy {
   /** Policy bound to the typed property registry's
     * `decaton.deferred.complete.timeout.ms` ([[graft.config.EngineProperties
     * .DeferredCompleteTimeoutMs]]): the timeout re-resolves from the live
-    * [[graft.config.DynamicProperty]] on every await round, so a config-file
+    * [[graft.config.DynamicProperty]] on every wait, so a config-file
     * edit re-times deferred completions without a query restart.
     */
   def fromProperty[T, U](
@@ -89,9 +89,15 @@ object CompletionPolicy {
   * pool, while chaining same-key records through dependent futures — a future
   * chain IS a per-key FIFO queue, so the reference's SERIAL_PROCESSING and
   * PROCESS_ORDERING guarantees hold inside each partition, and cross-key work
-  * overlaps freely. Back-pressure: a bounded in-flight window (results are
-  * emitted in input order, so at-least-once replay semantics per micro-batch
-  * are unchanged).
+  * overlaps freely.
+  *
+  * Emission contract (the reference's out-of-order commit, O1): same-key
+  * records leave in input order; records of different keys leave in
+  * completion order, so a slow record holds back only its own key.
+  * Back-pressure (O5, `max.pending.records`): a partition admits input while
+  * fewer than `maxInFlight` records are in flight, where in flight means
+  * admitted but not yet emitted. The micro-batch stays the commit unit, so
+  * at-least-once replay per micro-batch is unchanged.
   */
 object AsyncProcessing {
 
@@ -133,7 +139,7 @@ object AsyncProcessing {
     ExecutionContext.fromExecutorService(pool)
   }
 
-  /** Map `f` over the dataset with up to `maxInFlight` concurrent executions
+  /** Map `f` over the dataset with up to `maxInFlight` records in flight
     * per partition, same-key records strictly serial and in order. Each
     * in-flight record occupies one pool thread (blocking-client I/O — the
     * THREAD_POOL runtime analog); for future-returning clients use
@@ -153,10 +159,12 @@ object AsyncProcessing {
     mapAsyncKeyed(ds, maxInFlight, CompletionPolicy.failTask[T, U]())(keyFn, f)
 
   /** [[mapAsyncKeyed]] with an explicit T4 completion policy: a task that
-    * outlives `policy.timeout` triggers `policy.onTimeout` — EXTEND grants
-    * another period, GIVE_UP releases the task's permit, unblocks its key
-    * chain, and emits `policy.onGiveUp(task)` instead of stalling the
-    * partition.
+    * outlives `policy.timeout`, counted from the task's start, triggers
+    * `policy.onTimeout` — EXTEND grants another period, GIVE_UP emits
+    * `policy.onGiveUp(task)` in the task's place and unblocks its key chain
+    * instead of stalling the partition. The reaper watches the oldest
+    * in-flight record, as the reference's reaper watches the oldest
+    * uncommitted offset.
     */
   def mapAsyncKeyed[T, K, U](
       ds: Dataset[T],
@@ -168,11 +176,12 @@ object AsyncProcessing {
     asyncKeyedImpl(ds, maxInFlight, policy)(keyFn, t => Future(f(t))(ioPool))
 
   /** True-async variant for future-returning I/O clients (async HTTP/RPC):
-    * same per-key serial chaining and in-order emission, but an in-flight
-    * record holds NO thread — completion is driven by the client's own
-    * machinery. This is the VIRTUAL_THREAD-runtime analog
-    * (`VirtualThreadSubPartitions.java:34-81`): in-flight bound = permits,
-    * not threads, so tens of thousands of concurrent I/Os per executor are
+    * the same per-key chaining and emission contract — per-key order,
+    * completion order across keys — but an in-flight record holds NO thread:
+    * completion is driven by the client's own machinery. This is the
+    * VIRTUAL_THREAD-runtime analog (`VirtualThreadSubPartitions.java:34-81`):
+    * the bound is on records in flight (admitted but not yet emitted), not on
+    * threads, so tens of thousands of concurrent I/Os per executor are
     * practical.
     */
   def flatMapAsyncKeyed[T, K, U](
@@ -196,22 +205,30 @@ object AsyncProcessing {
     asyncKeyedImpl(ds, maxInFlight, policy)(keyFn,
       t => try f(t) catch { case scala.util.control.NonFatal(e) => Future.failed(e) })
 
-  /** One in-flight record: its result future, the gate successors chain on,
-    * and a release-once latch for its permit (give-up and late completion
-    * must not double-release).
+  /** One admitted record: the gate its same-key successor chains on, a
+    * settle-once latch (completion and give-up race, and only the winner
+    * emits the record), its outcome, and its T4 state: the start of its
+    * current timeout period (its start, moved on by each EXTEND) and the
+    * extensions granted so far.
     */
-  private final case class InFlight[T, U](
-      task: T,
-      fut: Future[U],
-      gate: Promise[Unit],
-      released: AtomicBoolean)
+  private final class InFlight[T, U](val task: T) {
+    val gate = Promise[Unit]()
+    val settled = new AtomicBoolean(false)
+    var result: scala.util.Try[U] = _
+    @volatile var periodStart = 0L
+    var extensions = 0
+  }
 
-  /** Shared machinery of the async operators. Same-key records chain on a
-    * GATE promise rather than on the result future directly: the gate
-    * completes on task completion OR on give-up, so an abandoned task
-    * releases its key for successors — mirroring the reference, where
-    * reaping a leaked completion lets the per-key queue advance
-    * (`OffsetStateReaper.java:50-72`).
+  /** Shared machinery of the async operators: the reference's out-of-order
+    * commit (`OutOfOrderCommitControl`) inside one partition. Records leave
+    * in COMPLETION order. A completion callback settles its record and puts
+    * it on the partition's completion queue BEFORE it completes the record's
+    * gate, and a same-key successor starts only on that gate, so per-key
+    * order holds by construction while keys overtake each other freely.
+    * Same-key records chain on the GATE rather than on the result: the gate
+    * also completes on give-up, so an abandoned record releases its key for
+    * successors, as reaping a leaked completion lets the reference's per-key
+    * queue advance (`OffsetStateReaper.java:50-72`).
     */
   private def asyncKeyedImpl[T, K, U](
       ds: Dataset[T],
@@ -221,84 +238,80 @@ object AsyncProcessing {
       run: T => Future[U])(
       implicit encU: Encoder[U]): Dataset[U] = {
     ds.mapPartitions { it =>
-      // Chain GLUE — the transformWith/andThen callbacks below (permit
-      // release, gate completion, dispatching the successor) — runs
-      // parasitic: inline on whatever thread completed the previous stage.
-      // Routing it through the pool cost a park/unpark handoff per hop
-      // (~50 µs on a typical kernel, measured 0.3-1 ms on slow-thread-op
-      // container kernels; HISTORY.md, "Retired probes") for a few field writes.
+      // Chain GLUE — the onComplete callbacks below (settling, enqueueing,
+      // gate completion, dispatching the successor) — runs parasitic: inline
+      // on whatever thread completed the previous stage. Routing it through
+      // the pool cost a park/unpark handoff per hop (~50 µs on a typical
+      // kernel, 0.3-1 ms on slow-thread-op container kernels; HISTORY.md,
+      // "Retired probes") for a few field writes.
       // Blocking user work still runs on the pool: mapAsyncKeyed dispatches
       // f via Future(...)(ioPool); flatMapAsyncKeyed's f is non-blocking by
       // contract (future-returning client), so inlining it is exactly the
       // "continuations run on the completing thread" posture its docs state.
       implicit val glue: ExecutionContext = ExecutionContext.parasitic
-      val permits = new Semaphore(maxInFlight)
+      val completed = new LinkedBlockingQueue[InFlight[T, U]]()
       val chains = mutable.Map.empty[K, Future[Unit]]
+      // admitted but not yet emitted, oldest first: its size is the in-flight
+      // count the admission bound holds (`max.pending.records`, O5), and its
+      // head is the record the T4 reaper watches
+      val pending = mutable.LinkedHashSet.empty[InFlight[T, U]]
 
-      var sincePrune = 0
-      val records: Iterator[InFlight[T, U]] = it.map { t =>
-        val k = keyFn(t)
-        val prev = chains.getOrElse(k, Future.unit)
-        permits.acquire() // bound total in-flight work (back-pressure, O5)
-        val gate = Promise[Unit]()
-        val released = new AtomicBoolean(false)
-        val fut = prev.transformWith { _ =>
-          run(t).andThen { case _ =>
-            if (!released.getAndSet(true)) permits.release()
-            gate.trySuccess(())
+      def admit(t: T): Unit = {
+        val rec = new InFlight[T, U](t)
+        // become the key's chain tail, and start once the previous tail's gate completes
+        chains.put(keyFn(t), rec.gate.future).getOrElse(Future.unit).onComplete { _ =>
+          rec.periodStart = System.nanoTime()
+          run(t).onComplete { r =>
+            if (rec.settled.compareAndSet(false, true)) { rec.result = r; completed.put(rec) }
+            rec.gate.trySuccess(())
           }
         }
-        chains(k) = gate.future
+        pending += rec
         // prune completed chains so high-cardinality partitions don't retain
-        // one completed future per distinct key (consumer thread only — the
-        // map is never touched from callbacks, so no race)
-        sincePrune += 1
-        if (sincePrune >= 1024) {
-          sincePrune = 0
-          chains.filterInPlace((_, cf) => !cf.isCompleted)
-        }
-        InFlight(t, fut, gate, released)
+        // one completed future per distinct key. Only the gates of records in
+        // flight are incomplete, so a prune at twice the bound keeps about
+        // `maxInFlight` and the next one is `maxInFlight` admissions away
+        // (consumer thread only — the map is never touched from callbacks)
+        if (chains.size > 2 * maxInFlight) chains.filterInPlace((_, cf) => !cf.isCompleted)
       }
 
-      // sliding in-flight window: emit in input order, keep the pipe full
       new Iterator[U] {
-        private val window = mutable.Queue.empty[InFlight[T, U]]
-        private def fill(): Unit =
-          while (window.size < maxInFlight && records.hasNext) window += records.next()
-        def hasNext: Boolean = { fill(); window.nonEmpty }
+        def hasNext: Boolean = {
+          while (pending.size < maxInFlight && it.hasNext) admit(it.next())
+          pending.nonEmpty
+        }
+        /** The next settled record: the next completion, or the oldest
+          * pending record once the policy gives it up. That record has
+          * started, or is about to: its same-key predecessor has been
+          * emitted, so the predecessor's gate is complete or completes right
+          * after its enqueue. Its timeout therefore counts from its start.
+          */
         def next(): U = {
-          fill()
-          val rec = window.dequeue()
-          var extensions = 0
-          while (true) {
-            try return Await.result(rec.fut, policy.nextTimeout)
-            catch {
-              case _: TimeoutException if rec.fut.isCompleted =>
-                // Await.result rethrows a COMPLETED future's own
-                // TimeoutException (an async client's internal deadline)
-                // verbatim — indistinguishable by type from the await's
-                // wall-clock timeout. Only an incomplete future is a
-                // wall-clock timeout; a completed one re-awaits at zero to
-                // return a completion that raced the deadline, or to
-                // propagate the task's REAL failure (an Extend policy would
-                // otherwise busy-spin on the instantly-rethrown exception,
-                // and GiveUp would silently swallow it).
-                return Await.result(rec.fut, Duration.Zero)
-              case _: TimeoutException =>
-                policy.onTimeout(rec.task, extensions) match {
-                  case TimeoutDecision.Extend =>
-                    extensions += 1
-                  case TimeoutDecision.GiveUp =>
-                    // abandon: free the permit exactly once (a late completion
-                    // finds `released` already set), unblock the key chain,
-                    // surface the record as an error-shaped row
-                    if (!rec.released.getAndSet(true)) permits.release()
-                    rec.gate.trySuccess(())
-                    return policy.onGiveUp(rec.task)
-                }
+          if (!hasNext) throw new NoSuchElementException("no more records")
+          var rec: InFlight[T, U] = null
+          while (rec == null) {
+            val head = pending.head
+            rec = policy.nextTimeout match {
+              case d: FiniteDuration if !head.settled.get =>
+                val start = if (head.periodStart != 0L) head.periodStart else System.nanoTime()
+                completed.poll(start + d.toNanos - System.nanoTime(), NANOSECONDS)
+              case _ => completed.take() // head settled (queued, or about to be), or -1 = never
+            }
+            if (rec == null && !head.settled.get) policy.onTimeout(head.task, head.extensions) match {
+              case TimeoutDecision.Extend =>
+                head.extensions += 1
+                head.periodStart = System.nanoTime()
+              case TimeoutDecision.GiveUp if head.settled.compareAndSet(false, true) =>
+                // abandon: emit the error-shaped row now, then unblock the
+                // key (a late completion finds the record already settled)
+                head.result = scala.util.Try(policy.onGiveUp(head.task))
+                head.gate.trySuccess(())
+                rec = head
+              case TimeoutDecision.GiveUp => // completed meanwhile: it is queued
             }
           }
-          throw new IllegalStateException("unreachable")
+          pending -= rec
+          rec.result.get // a failed task fails the Spark task
         }
       }
     }

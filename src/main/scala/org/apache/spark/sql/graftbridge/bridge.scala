@@ -10,8 +10,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Expression<->Column bridge (`org.apache.spark.sql.classic.ExpressionUtils`)
   * is `private[sql]`. This shim, placed inside the `org.apache.spark.sql`
   * package namespace (the standard extension-library idiom), re-exports the
-  * two conversions the engine's custom expressions need, plus the two
-  * `private[spark]` hooks [[scanOf]] and [[drainListenerBus]].
+  * two conversions the engine's custom expressions need, plus the
+  * `private[spark]` hooks [[scanOf]], [[cacheEntryOf]] and
+  * [[drainListenerBus]].
   */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -33,6 +34,13 @@ object GraftBridge {
     */
   def scanOf(ds: DataFrame): DataFrame = classic.Dataset.ofRows(ds.queryExecution.sparkSession,
     LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, ds.isStreaming))
+
+  /** The cache entry `ds` reads from, if it is cached: the builder of its
+    * `InMemoryRelation`, one object per entry however many plans hit it.
+    */
+  def cacheEntryOf(ds: DataFrame): Option[AnyRef] =
+    ds.queryExecution.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder)
 
   /** Block until every listener has seen every event posted so far. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

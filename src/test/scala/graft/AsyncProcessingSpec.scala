@@ -204,13 +204,69 @@ class AsyncProcessingSpec extends SparkTestBase {
     assert(g.value.exists(_.isFailure) && (g.value.get.failed.get eq boom))
   }
 
-  test("async keyed map preserves input order within a partition") {
+  test("async keyed map keeps each key's input order and delivers every record") {
     import spark.implicits._
     val tasks = spark.range(500).map(i => (s"k${i % 7}", i))
       .repartition(2, org.apache.spark.sql.functions.col("_1"))
-    // record per-partition input order, compare to output order
+    // per-partition input order, compared to output order key by key: keys
+    // leave in completion order, so only each key's own order is promised
     val inOrder = tasks.mapPartitions(it => it.map(_._2)).collect().toSeq
     val outOrder = AsyncProcessing.mapAsyncKeyed(tasks, 32)(_._1, t => t._2).collect().toSeq
-    assert(outOrder == inOrder)
+    assert(outOrder.groupBy(_ % 7) == inOrder.groupBy(_ % 7), "a key's outputs left out of its input order")
+    assert(outOrder.sorted == inOrder.sorted, "output multiset differs from the input")
+  }
+
+  test("a slow record holds back only its own key: finished records of other keys overtake it") {
+    import spark.implicits._
+    // one partition, the slow record admitted first: it must not hold the
+    // 200 fast records of other keys behind it
+    val tasks = spark.range(201).map(i => (if (i == 0L) "slow" else s"k${i % 16}", i))
+      .repartition(1)
+    val out = AsyncProcessing.flatMapAsyncKeyed(tasks, maxInFlight = 8)(
+      _._1,
+      t => AsyncProcessing.delayed(if (t._2 == 0L) 1000L else 2L)(t._2)).collect().toSeq
+    assert(out.sorted == (0L to 200L), "every record must be delivered once")
+    assert(out.last == 0L, s"the slow record must leave last, left at ${out.indexOf(0L)}")
+  }
+
+  test("T4: the timeout counts from a task's start, not from its admission") {
+    import spark.implicits._
+    import scala.concurrent.duration._
+    AsyncProcessingSpec.timeoutCalls.set(0)
+    // one key: the 200 ms successor waits 350 ms behind its predecessor, so
+    // it is 550 ms past admission when it completes, but 200 ms past its start
+    val tasks = spark.range(2).map(i => ("k", i.toLong)).repartition(1)
+    val policy = graft.streaming.CompletionPolicy[(String, Long), Long](
+      timeout = 400.millis,
+      onTimeout = (_, _) => { AsyncProcessingSpec.timeoutCalls.incrementAndGet(); graft.streaming.TimeoutDecision.GiveUp },
+      onGiveUp = _ => -1L)
+    val out = AsyncProcessing.flatMapAsyncKeyed[(String, Long), String, Long](tasks, maxInFlight = 8, policy)(
+      _._1,
+      t => AsyncProcessing.delayed(if (t._2 == 0L) 350L else 200L)(t._2)).collect().toSeq
+    assert(out == Seq(0L, 1L), s"no task may give up: $out")
+    assert(AsyncProcessingSpec.timeoutCalls.get() == 0, "the timeout fired on a task within its time")
+  }
+
+  test("T4: one never-completing task among 2,000 gives up exactly once; every other task is delivered") {
+    import spark.implicits._
+    import scala.concurrent.duration._
+    import scala.concurrent.Promise
+    AsyncProcessingSpec.timeoutCalls.set(0)
+    val n = 2000L
+    val stuck = 500L
+    // the stuck task's key (k4) chains its successors behind it; the other
+    // keys flow past it until its successors fill the in-flight bound
+    val tasks = spark.range(n).map(i => (s"k${i % 16}", i.toLong)).repartition(1)
+    val policy = graft.streaming.CompletionPolicy[(String, Long), (Long, Boolean)](
+      timeout = 300.millis,
+      onTimeout = (_, _) => { AsyncProcessingSpec.timeoutCalls.incrementAndGet(); graft.streaming.TimeoutDecision.GiveUp },
+      onGiveUp = t => (t._2, false))
+    val out = AsyncProcessing.flatMapAsyncKeyed[(String, Long), String, (Long, Boolean)](tasks, maxInFlight = 8, policy)(
+      _._1,
+      t => if (t._2 == stuck) Promise[(Long, Boolean)]().future
+           else AsyncProcessing.delayed(1L)((t._2, true))).collect().toSeq
+    assert(out.map(_._1).sorted == (0L until n), "every task must be delivered once")
+    assert(out.filterNot(_._2).map(_._1) == Seq(stuck), "only the stuck task may give up")
+    assert(AsyncProcessingSpec.timeoutCalls.get() == 1, s"timeout fired ${AsyncProcessingSpec.timeoutCalls.get()} times")
   }
 }
