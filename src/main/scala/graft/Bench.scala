@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.metrics.QueryProfile
 
 /** Benchmark entry: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). Each query is forced through the
@@ -64,12 +64,6 @@ object BenchMetrics {
     latMax.get() / 1e6
   }
 
-  def gcSnapshot(): (Long, Long) = {
-    import scala.jdk.CollectionConverters._
-    val beans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-    (beans.map(_.getCollectionCount).sum, beans.map(_.getCollectionTime).sum)
-  }
-
   /** Cumulative JIT compilation wall ms across compiler threads (0 when
     * unsupported). A rep whose delta spikes ran concurrent tier-up /
     * recompilation: bimodal reps can follow this counter rather than GC or
@@ -79,17 +73,6 @@ object BenchMetrics {
     val b = java.lang.management.ManagementFactory.getCompilationMXBean
     if (b != null && b.isCompilationTimeMonitoringSupported) b.getTotalCompilationTime else 0L
   }
-
-  /** Total allocated bytes across live threads (approximation: threads that
-    * die mid-window under-count, threads born mid-window count from zero).
-    */
-  def allocatedBytes(): Long =
-    java.lang.management.ManagementFactory.getThreadMXBean match {
-      case tm: com.sun.management.ThreadMXBean =>
-        val ids = tm.getAllThreadIds
-        tm.getThreadAllocatedBytes(ids).filter(_ > 0).sum
-      case _ => 0L
-    }
 
   def threadCount(): Int =
     java.lang.management.ManagementFactory.getThreadMXBean.getThreadCount
@@ -165,52 +148,9 @@ object Bench {
         .orElse(v1.flatMap(_.get("nr_throttled"))).getOrElse(0L))
   }
 
-  /** Shuffle/block-store scratch on tmpfs when available: PlanCostProbe
-    * -floor measured the FIRST shuffle of a tiny query at ~0.41 s with local
-    * dirs on an overlay root fs vs ~0.21-0.33 s on /dev/shm — pure
-    * transient-file churn (blockmgr data+index files), the same host cost
-    * that put the state-store and segment scratch on tmpfs.
-    * Parameterized, not tuned: production points spark.local.dir
-    * (or the SPARK_LOCAL_DIRS env, which Spark gives precedence) at its
-    * fast local disks; this default only replaces the harness box's slow
-    * root fs when tmpfs exists, and falls back to the JVM default
-    * otherwise. PID-keyed and swept on exit so overlapping JVMs never
-    * collide and tmpfs RAM is returned.
-    */
-  def tmpfsLocalDir(): Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (!shm.isDirectory || !shm.canWrite) return None
-    val d = new java.io.File(shm, s"graft-local-${ProcessHandle.current().pid()}")
-    if (!d.isDirectory && !d.mkdirs()) return None
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).getOrElse(Array.empty).foreach(rm)
-        p.delete(): Unit
-      }
-      rm(d)
-    }))
-    Some(d.getAbsolutePath)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = tmpfsLocalDir().fold(builder0)(d => builder0.config("spark.local.dir", d))
-      // the Janino codegen cache is an LRU of 100 generated classes; this
-      // workload has ~77 distinct plans × several codegen stages each, so at
-      // the default size interleaved reps (and any production session running
-      // a full query suite) recompile every stage on every run — measured as
-      // a ~0.1-0.5 s fixed tax per query rep at sf0.1. Static conf: must be
-      // set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     // JVM/session warm-up outside the timed region: exercise codegen and the
     // parquet read paths (incl. the events nanos conversion) once
@@ -290,7 +230,7 @@ object Bench {
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () } // the timed rep reports the failure
       val wallStart = System.currentTimeMillis() / 1e3
-      val (_, gcMs0) = BenchMetrics.gcSnapshot()
+      val (_, gcMs0) = QueryProfile.gcSnapshot()
       val jit0 = BenchMetrics.jitMs()
       val t0 = System.nanoTime()
       val dur =
@@ -302,7 +242,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: $e")
           None
         }
-      val (_, gcMs1) = BenchMetrics.gcSnapshot()
+      val (_, gcMs1) = QueryProfile.gcSnapshot()
       repLog(name) = repLog.getOrElse(name, Vector.empty) :+ ((wallStart, dur))
       repJvm(name) = repJvm.getOrElse(name, Vector.empty) :+
         ((gcMs1 - gcMs0, BenchMetrics.jitMs() - jit0))
@@ -394,8 +334,8 @@ object Bench {
         gcCount: Long, gcTimeMs: Long, allocMb: Long, cpuMs: Long, threads: Int)
     def streamRep(): StreamRep = {
       BenchMetrics.reset()
-      val (gcCount0, gcTime0) = BenchMetrics.gcSnapshot()
-      val alloc0 = BenchMetrics.allocatedBytes()
+      val (gcCount0, gcTime0) = QueryProfile.gcSnapshot()
+      val alloc0 = QueryProfile.allocatedBytes()
       val cpu0 = BenchMetrics.cpuSnapshot()
       val st0 = System.nanoTime()
       locally {
@@ -420,7 +360,7 @@ object Bench {
         require(n == streamTasks)
       }
       val streamSecs = (System.nanoTime() - st0) / 1e9
-      val (gcCount1, gcTime1) = BenchMetrics.gcSnapshot()
+      val (gcCount1, gcTime1) = QueryProfile.gcSnapshot()
       StreamRep(
         tps = streamTasks / streamSecs,
         latAvgMs = if (BenchMetrics.latN.sum() == 0) 0.0
@@ -431,7 +371,7 @@ object Bench {
         latP99Ms = BenchMetrics.percentileMs(0.99),
         latP999Ms = BenchMetrics.percentileMs(0.999),
         gcCount = gcCount1 - gcCount0, gcTimeMs = gcTime1 - gcTime0,
-        allocMb = (BenchMetrics.allocatedBytes() - alloc0) / (1024 * 1024),
+        allocMb = (QueryProfile.allocatedBytes() - alloc0) / (1024 * 1024),
         cpuMs = BenchMetrics.cpuDeltaNanos(cpu0, BenchMetrics.cpuSnapshot()) / 1000000,
         // thread count captured at rep end — describes the probe window, not
         // post-benchmark steady state

@@ -164,16 +164,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static audit: AQE off so the pre-execution plan carries codegen ids
-      // (prod sessions keep AQE on; it only re-plans at runtime)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // static audit: AQE off so the pre-execution plan carries codegen ids
+    // (prod sessions keep AQE on; it only re-plans at runtime)
+    val spark = Sessions.local(overrides = Seq("spark.sql.adaptive.enabled" -> "false"))
 
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

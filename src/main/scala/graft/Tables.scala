@@ -43,7 +43,7 @@ object Tables {
     * same operators at a shared store instead.
     */
   private lazy val scratchRoot: java.nio.file.Path = {
-    // tmpfs when available (r20): the WARC/jsonl segment harnesses write
+    // tmpfs when available: the WARC/jsonl segment harnesses write
     // and re-read these per invocation, and /dev/shm skips the root-fs
     // commit cost the same way dq25's state-store checkpoint does
     val shm = java.nio.file.Paths.get("/dev/shm")
@@ -70,17 +70,17 @@ object Tables {
     * idempotently), on tmpfs when available: the per-invocation parquet
     * segment writes pay the filesystem's commit/fsync cost, which on the
     * root fs dominated these queries' bench time the same way dq25's
-    * state-store fsyncs did (the r15 finding that moved its checkpoint to
-    * /dev/shm). Swept by the same shutdown hook as [[scratchDir]] so tmpfs
-    * RAM is returned on JVM exit; the segments are tiny (KBs) and every
+    * state-store fsyncs did before its checkpoint moved to /dev/shm.
+    * Swept by the same shutdown hook as [[scratchDir]] so tmpfs RAM is
+    * returned on JVM exit; the segments are tiny (KBs) and every
     * invocation rewrites its own batches from the parquet inputs, so
     * nothing computed ever survives a rerun as an input.
     */
   private lazy val stableRootBase: java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) {
-      // PID-keyed (r21, ADVICE): a fixed shared path meant that when two
-      // graft JVMs overlap (Bench and Verify), the first to exit swept the
+      // PID-keyed: a fixed shared path meant that when two graft
+      // JVMs overlap (Bench and Verify), the first to exit swept the
       // second's LIVE dq28/29/30 segment stores mid-run. The pid suffix is
       // stable within a JVM (the rerun-overwrite contract the segment
       // stores rely on) and unique across JVMs, so each hook deletes only
@@ -124,7 +124,7 @@ object Tables {
     * q25 +0.7 s, pq51 +0.3 s with a blanket spread; pq84 −0.5 s, pq05
     * −0.3 s where the row work dominates).
     *
-    * Known gap (ADVICE r20, documented rather than fixed): the bytes<split
+    * Known gap (documented rather than fixed): the bytes<split
     * trigger assumes a multi-split input parallelizes itself, but a single
     * FILE with a single ROW GROUP larger than one split still scans as one
     * task, so the spread silently stops applying at that intermediate

@@ -7,7 +7,7 @@ import graft.functions.{TextFunctions, UrlFunctions}
 import graft.pipeline.WebCuration
 import graft.quality.GopherRules
 
-/** Crawl-front curation queries (round 16, second half): the stages a
+/** Crawl-front curation queries: the stages a
   * web-scale pipeline runs between the frontier and dedup — URL-level
   * curation (canonical-URL dedup, domain blocklists, per-domain caps) and
   * the published heuristic document filters (Gopher rules, C4 line
@@ -174,7 +174,7 @@ object CrawlQueries {
     Q(
       "pq84_gopher_rules",
       (s, dir) => {
-        val d  = Tables.spreadForRowWork(Tables.documents(s, dir)) // r20 input spread
+        val d  = Tables.spreadForRowWork(Tables.documents(s, dir)) // row work dominates
         val id = col("doc_id")
         val toks = split(col("text"), " ")
         val nLines = ((size(toks) + 7) / 8).cast("int")
@@ -661,10 +661,9 @@ object CrawlQueries {
     """))
 
   /** Content-coding coverage census ([[graft.functions.http_coding_unsupported]]
-    * beside [[graft.functions.http_text]]) — the r19 verdict's
-    * observability demand: a modern crawl negotiating `Accept-Encoding`
-    * sees `zstd` (RFC 8878, now a decode arm via the zstd-jni Spark
-    * ships) and `br` (no public pure-JVM decoder available offline — must
+    * beside [[graft.functions.http_text]]), for observability: a modern
+    * crawl negotiating `Accept-Encoding` sees `zstd` (RFC 8878, now a
+    * decode arm via the zstd-jni Spark ships) and `br` (no public pure-JVM decoder available offline — must
     * be a COUNTED loss, not a silent null). Four arms (doc_id % 4): gzip
     * and zstd decode to the exact payload with a null census column; a
     * `Content-Encoding: br` body and a `Transfer-Encoding: br, chunked`
@@ -864,7 +863,7 @@ object CrawlQueries {
   private def pq105: Q = Q(
     "pq105_link_graph",
     (s, dir) => {
-      val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // r20 input spread
+      val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // row work dominates
       val id = col("doc_id")
       val host = concat(lit("https://h"), id % 5, lit(".example.org"))
       val page = concat(host, lit("/a/b/page"), id)
@@ -1001,7 +1000,7 @@ object CrawlQueries {
   private def pq107: Q = Q(
     "pq107_anchor_text",
     (s, dir) => {
-      val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // r20 input spread
+      val d = Tables.spreadForRowWork(Tables.documents(s, dir)) // row work dominates
       val id = col("doc_id")
       val host = concat(lit("https://h"), id % 5, lit(".example.org"))
       val page = concat(host, lit("/page"), id)

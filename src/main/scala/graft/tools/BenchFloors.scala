@@ -1,15 +1,15 @@
 package graft.tools
 
-/** The bench floor-regression gate (round-19, variance-hardened round-20):
-  * `BENCH_SELF.json` carries each query's warm-min (`queries_min` — the
-  * floor a plan can hit on this box) beside the median;
+/** The bench floor-regression gate: `BENCH_SELF.json` carries each
+  * query's warm-min (`queries_min` — the floor a plan can hit on this box)
+  * beside the median;
   * `tools/bench_floor_windows.json` pins the warm-min maps of the last ≤5
   * committed definitive sf0.1 windows. A query's floor is the MEDIAN of
   * its committed window mins, and the gate fires when a new warm min
   * exceeds `floor × max(factor, slack × spread)` where
   * `spread = max(window mins) / floor` — the per-query variance band.
   *
-  * Why median-of-windows instead of the r19 ratcheted `min(old, new)`:
+  * Why median-of-windows instead of a ratcheted `min(old, new)`:
   * the ratchet converted ONE unrepresentatively fast window into a
   * permanent tripwire — pq99's committed 0.33 s floor failed the very
   * next driver window (1.18 s) on identical code, because the query is
@@ -154,10 +154,10 @@ object BenchFloors {
   }
 }
 
-/** Append a definitive sf0.1 window's warm mins to the committed history
-  * (the round-end ritual the r19 ratchet did by hand). Refuses non-sf0.1
-  * artifacts; keeps the 5 most recent windows; replaces a window with the
-  * same id (re-running a round's bench updates, not duplicates).
+/** Append a definitive sf0.1 window's warm mins to the committed history.
+  * Refuses non-sf0.1 artifacts; keeps the 5 most recent windows; replaces
+  * a window with the same id (re-running a round's bench updates, not
+  * duplicates).
   *
   * Usage: runMain graft.tools.FloorPin <windowId> [benchSelfPath]
   */

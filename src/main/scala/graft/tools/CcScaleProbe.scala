@@ -1,13 +1,11 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.dedup.Dedup
+import graft.metrics.QueryProfile
+import graft.tools.Probe.{num, timed}
 
 /** Third scale point for the connected-components jump loop, on a SYNTHETIC
   * graph whose diameter is controlled exactly: `chains` disjoint paths of
@@ -27,7 +25,9 @@ import graft.dedup.Dedup
   *
   * Writes `CC_SCALE_PROBE.json` (committed artifact; sibling of
   * SCALE_PROBE.json, kept separate so ScaleProbe's own rewrite of that file
-  * cannot drop this entry). Run: `runMain graft.tools.CcScaleProbe`.
+  * cannot drop this entry).
+  *
+  * Usage: runMain graft.tools.Probe cc
   */
 object CcScaleProbe {
 
@@ -43,17 +43,6 @@ object CcScaleProbe {
         ((col("id") / (len - 1)).cast("long") +
           ((col("id") % (len - 1)) + 1) * chains).as("id_b"))
 
-  private final class Tap extends SparkListener {
-    val sw = new LongAdder; val sr = new LongAdder
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        sw.add(m.shuffleWriteMetrics.bytesWritten)
-        sr.add(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-  }
-
   final case class Point(
       label: String, chains: Long, len: Long, nodes: Long,
       rounds: Int, sec: Double, shuffleWriteMb: Double) {
@@ -64,42 +53,23 @@ object CcScaleProbe {
 
   def measure(spark: SparkSession, label: String, chains: Long, len: Long): Point = {
     val edges = chainGraph(spark, chains, len)
-    val tap = new Tap
-    spark.sparkContext.addSparkListener(tap)
-    val t0 = System.nanoTime()
-    var rounds = 0
-    try {
+    val ((rounds, sec), p) = QueryProfile.run(spark)(timed {
       // collectThreshold=0 forces the distributed jump loop (the thing
       // under measurement) regardless of edge count
       val (labels, r) = Dedup.connectedComponentsRounds(
         edges, maxIter = 25, collectThreshold = 0L)
-      rounds = r
       // correctness gate inside the probe: every chain collapses to its own
       // minimum node id = the chain index, so distinct clusters == chains
       val nClusters = labels.select(col("cluster_id")).distinct().count()
       require(nClusters == chains,
         s"$label: expected $chains components, got $nClusters")
-    } finally {
-      // the listener bus is async: drain it before reading the counters
-      GraftBridge.drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(tap)
-    }
-    val sec = (System.nanoTime() - t0) / 1e9
-    Point(label, chains, len, chains * len, rounds, sec, tap.sw.sum() / 1048576.0)
+      r
+    })
+    Point(label, chains, len, chains * len, rounds, sec, p.shuffleWriteBytes / 1048576.0)
   }
 
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def num(v: Double, dp: Int): String =
-      String.format(java.util.Locale.ROOT, "%." + dp + "f", Double.box(v))
+  def run(ctx: Probe.Ctx): Probe.Result = {
+    val spark = ctx.spark
 
     // warm pass: plan compilation + listener machinery out of the window
     measure(spark, "warm", chains = 1000L, len = 32L)
@@ -132,11 +102,6 @@ object CcScaleProbe {
         s""""per_round_per_node_ratio":${num(perNodeRatio, 3)},""" +
         s""""per_round_shuffle_flat":$perNodeFlat,""" +
         s""""diam_10x_rounds_logarithmic":$diamLog,"all_ok":$ok}"""
-    println(json)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("CC_SCALE_PROBE.json"), json + "\n")
-    catch { case e: Throwable => System.err.println(s"[cc-scale] write failed: $e") }
-    spark.stop()
-    if (!ok) sys.exit(1)
+    Probe.Result(json, "CC_SCALE_PROBE.json", ok)
   }
 }

@@ -1,13 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.tools.Probe.{num, timed}
 
 /** Decomposes dq25's warm cost (the bench set's most expensive query) into
   * its harness floor: the query drives a REAL 6-micro-batch streaming run
-  * per rep, so the question from the r15 verdict is whether the ~2-3 s warm
-  * median is (a) tmpfs being unavailable (ruled out separately — the bench
-  * now logs `checkpoint=tmpfs`), (b) fixable harness overhead, or (c) the
+  * per rep, so the question is whether the ~2-3 s warm median is (a) tmpfs
+  * being unavailable (ruled out separately — the bench now logs
+  * `checkpoint=tmpfs`), (b) fixable harness overhead, or (c) the
   * state-store commit protocol itself. Three measurements, same session
   * settings as the query (noDataMicroBatches off, 4 shuffle partitions,
   * /dev/shm checkpoints, 6 addData+processAllAvailable cycles):
@@ -23,22 +24,17 @@ import org.apache.spark.sql.functions._
   * dq25 − stateful_min = the query's own work (3 reference censuses + the
   * drift aggregation); stateful_min − stateless = the state-commit
   * protocol; stateless = the irreducible 6-batch harness. Writes
-  * `tools/dq25_floor.json`. Run: `runMain graft.tools.Dq25FloorProbe`.
+  * `tools/dq25_floor.json`; it reports and checks no property.
+  *
+  * Usage: runMain graft.tools.Probe dq25floor [sfDir]
   */
 object Dq25FloorProbe {
 
   private def medianOf3(f: => Double): Seq[Double] = Seq.fill(3)(f).sorted
 
-  def main(args: Array[String]): Unit = {
+  def run(ctx: Probe.Ctx): Probe.Result = {
+    import ctx.{args, spark}
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def ckptDir(): String = {
       val base = java.nio.file.Paths.get("/dev/shm")
@@ -67,40 +63,31 @@ object Dq25FloorProbe {
             .agg(count(lit(1)).as("n"))
         else base.select(count(lit(1)).as("n")) // per-batch agg, no state
       val ckpt = ckptDir()
-      val t0 = System.nanoTime()
-      val q = frame.writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode(if (stateful) "append" else "complete")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.collect(); ()
-        }.start()
-      try {
-        // 6 batches: the dq25 shape (3 epochs, 1 refresh cadence, 2 flushes)
-        (0 until 6).foreach { i =>
-          in.addData((i * 1000L + 1L, "x"), (i * 1000L + 2L, "y"))
-          q.processAllAvailable()
-        }
-      } finally {
-        q.stop()
-        // /dev/shm is RAM: reclaim each rep's checkpoint immediately
+      timed {
+        val q = frame.writeStream
+          .option("checkpointLocation", ckpt)
+          .outputMode(if (stateful) "append" else "complete")
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.collect(); ()
+          }.start()
         try {
-          import scala.jdk.CollectionConverters._
-          scala.util.Using.resource(
-            java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))) { st =>
-            st.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-              .foreach(java.nio.file.Files.deleteIfExists(_))
+          // 6 batches: the dq25 shape (3 epochs, 1 refresh cadence, 2 flushes)
+          (0 until 6).foreach { i =>
+            in.addData((i * 1000L + 1L, "x"), (i * 1000L + 2L, "y"))
+            q.processAllAvailable()
           }
-        } catch { case scala.util.control.NonFatal(_) => () }
-      }
-      (System.nanoTime() - t0) / 1e9
+        } finally {
+          q.stop()
+          // /dev/shm is RAM: reclaim each rep's checkpoint immediately
+          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+        }
+      }._2
     }
 
-    def dq25Rep(): Double = {
-      val t0 = System.nanoTime()
+    def dq25Rep(): Double = timed {
       graft.SparkEntry.queries("dq25_stream_drift_refresh")(spark, dir)
         .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    }._2
 
     // warm every path once (plan + codegen compile out of the window)
     harnessRep(stateful = false); harnessRep(stateful = true); dq25Rep()
@@ -109,22 +96,16 @@ object Dq25FloorProbe {
     val statefulMin = medianOf3(harnessRep(stateful = true))
     val dq25 = medianOf3(dq25Rep())
 
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def arr(s: Seq[Double]): String = s.map(num).mkString("[", ",", "]")
+    def arr(s: Seq[Double]): String = s.map(num(_, 3)).mkString("[", ",", "]")
     val json =
       s"""{"probe":"dq25-floor","sf":"$dir","batches_per_rep":6,""" +
         s""""stateless_reps":${arr(stateless)},"stateful_min_reps":${arr(statefulMin)},""" +
         s""""dq25_reps":${arr(dq25)},""" +
-        s""""stateless_median":${num(stateless(1))},""" +
-        s""""stateful_min_median":${num(statefulMin(1))},""" +
-        s""""dq25_median":${num(dq25(1))},""" +
-        s""""state_commit_cost":${num(statefulMin(1) - stateless(1))},""" +
-        s""""query_own_work":${num(dq25(1) - statefulMin(1))}}"""
-    println(json)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("tools/dq25_floor.json"), json + "\n")
-    catch { case e: Throwable => System.err.println(s"[dq25-floor] write failed: $e") }
-    spark.stop()
+        s""""stateless_median":${num(stateless(1), 3)},""" +
+        s""""stateful_min_median":${num(statefulMin(1), 3)},""" +
+        s""""dq25_median":${num(dq25(1), 3)},""" +
+        s""""state_commit_cost":${num(statefulMin(1) - stateless(1), 3)},""" +
+        s""""query_own_work":${num(dq25(1) - statefulMin(1), 3)}}"""
+    Probe.Result(json, "tools/dq25_floor.json", ok = true)
   }
 }

@@ -1,11 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.ZOrder
+import graft.tools.Probe.{num, timed}
 
-/** LAYOUT probe (round-17 punch item #3): Morton vs Hilbert curve layout,
+/** LAYOUT probe: Morton vs Hilbert curve layout,
   * measured as the thing the layout exists for — the number of files a
   * parquet reader must scan under a box-filter battery, given each file's
   * footer MIN/MAX on the filtered columns. Both layouts are written with
@@ -21,11 +22,11 @@ import graft.operators.ZOrder
   * 1/4 × 1/4 of the joint domain — the selective-filter shapes a
   * lakehouse scan planner actually prunes with.
   *
-  * Writes LAYOUT_PROBE.json. Exit 1 if Hilbert scans MORE total files
-  * than Morton across the battery (the probe's reason to exist is to
-  * certify Hilbert ≤ Morton here).
+  * Writes LAYOUT_PROBE.json. The property fails if Hilbert scans MORE
+  * total files than Morton across the battery (the probe's reason to exist
+  * is to certify Hilbert ≤ Morton here).
   *
-  * Usage: runMain graft.tools.LayoutProbe [sfDir] [numFiles] [outJson]
+  * Usage: runMain graft.tools.Probe layout [sfDir] [numFiles] [outJson]
   */
 object LayoutProbe {
 
@@ -43,18 +44,11 @@ object LayoutProbe {
       }
   }
 
-  def main(args: Array[String]): Unit = {
+  def run(ctx: Probe.Ctx): Probe.Result = {
+    import ctx.{args, spark}
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val numFiles = args.lift(1).map(_.toInt).getOrElse(64)
     val outJson = args.lift(2).getOrElse("LAYOUT_PROBE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val o = spark.read.parquet(s"$sfDir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"))
@@ -64,10 +58,7 @@ object LayoutProbe {
     val dims = Seq((col("o_orderkey"), okMin, okMax), (col("o_custkey"), ckMin, ckMax))
     val bits = 16
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-layout").toString
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
+    val tmp = ctx.tempDir("layout")
     val (_, tMorton) = timed(ZOrder.writeZOrdered(
       o, ZOrder.zValue(dims, bits), s"$tmp/morton", numFiles))
     val (_, tHilbert) = timed(ZOrder.writeHilbertOrdered(
@@ -114,20 +105,15 @@ object LayoutProbe {
     json.append("{")
     json.append(s""""sf_dir":"$sfDir","num_files":$numFiles,"bits":$bits,""")
     json.append(s""""n_boxes":${boxes.size},""")
-    json.append(f""""write_sec_morton":$tMorton%.2f,"write_sec_hilbert":$tHilbert%.2f,""")
+    json.append(s""""write_sec_morton":${num(tMorton, 2)},"write_sec_hilbert":${num(tHilbert, 2)},""")
     json.append(s""""scanned_files_morton":${ms.sum},"scanned_files_hilbert":${hs.sum},""")
-    json.append(f""""mean_scanned_morton":${ms.sum.toDouble / boxes.size}%.2f,""")
-    json.append(f""""mean_scanned_hilbert":${hs.sum.toDouble / boxes.size}%.2f,""")
+    json.append(s""""mean_scanned_morton":${num(ms.sum.toDouble / boxes.size, 2)},""")
+    json.append(s""""mean_scanned_hilbert":${num(hs.sum.toDouble / boxes.size, 2)},""")
     json.append(s""""per_box_morton":[${ms.mkString(",")}],""")
     json.append(s""""per_box_hilbert":[${hs.mkString(",")}],""")
     json.append(s""""hilbert_not_worse":${hs.sum <= ms.sum}}""")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outJson),
-      json.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     System.err.println(s"[layout] morton scans ${ms.sum}, hilbert scans ${hs.sum} " +
       s"of ${numFiles * boxes.size} file-box pairs -> $outJson")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    spark.stop()
-    if (hs.sum > ms.sum) sys.exit(1)
+    Probe.Result(json.toString, outJson, hs.sum <= ms.sum)
   }
 }

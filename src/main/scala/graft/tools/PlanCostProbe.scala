@@ -1,12 +1,8 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.GraftBridge
-
-import graft.{BenchMetrics, SparkEntry}
+import graft.{Sessions, SparkEntry}
+import graft.metrics.QueryProfile
+import graft.tools.Probe.timed
 
 /** The per-query profile of registered queries. For each named query it
   * prints one `PLANCOST` line, the median of three warmed reps of:
@@ -16,15 +12,18 @@ import graft.{BenchMetrics, SparkEntry}
   *    (CacheManager.useCachedData canonicalization), logical optimization
   *    and physical planning;
   *  - execution seconds of a noop write of the built query;
-  *  - the jobs, stages, tasks and shuffle write/read KB that write
-  *    scheduled, from one SparkListener;
-  *  - GC ms and allocated MB over the whole rep.
-  * A query whose time is mostly construction needs a smaller expression
-  * tree; one that is mostly execution across many jobs needs fewer
-  * actions; one with few jobs but heavy shuffle bytes needs fewer or
-  * narrower exchanges. `-rules` adds Catalyst's own per-rule cumulative
-  * timings, so a hot rule is named, not guessed; the other modes are
-  * described where they run.
+  *  - the jobs, stages, tasks and shuffle write/read KB from analysis
+  *    through that write (planning runs no job, so these are the write's);
+  *  - `constructJobs`, the jobs the builder itself ran, which `construct`
+  *    includes and `jobs` does not;
+  *  - GC ms and allocated MB over construction and the rest of the rep.
+  * Each window is one [[QueryProfile]]. A query whose time is mostly
+  * construction needs a smaller expression tree, or fewer builder jobs;
+  * one that is mostly execution across many jobs needs fewer actions; one
+  * with few jobs but heavy shuffle bytes needs fewer or narrower
+  * exchanges. `-rules` adds Catalyst's own per-rule cumulative timings, so
+  * a hot rule is named, not guessed; the other modes are described where
+  * they run.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.PlanCostProbe [-rules] <query> [query...]
   */
@@ -38,40 +37,18 @@ object PlanCostProbe {
     }.toSeq
     val names = args.filterNot(_.startsWith("-")).toSeq
     require(names.nonEmpty, "pass query names")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // -bconf:key=value pairs apply at BUILDER time (static confs like
     // spark.local.dir that a live session cannot change)
     val bconfs = args.filter(_.startsWith("-bconf:")).map { a =>
       val kv = a.stripPrefix("-bconf:").split("=", 2); (kv(0), kv(1))
     }.toSeq
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-    bconfs.foreach { case (k, v) => builder.config(k, v); println(s"[plancost] bconf $k=$v") }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    bconfs.foreach { case (k, v) => println(s"[plancost] bconf $k=$v") }
+    val spark = Sessions.local(overrides = bconfs)
     confs.foreach { case (k, v) => spark.conf.set(k, v); println(s"[plancost] conf $k=$v") }
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
         "region", "documents", "embeddings")
       .foreach(t => graft.Tables.table(spark, dir, t).write.format("noop").mode("overwrite").save())
     graft.Tables.events(spark, dir).write.format("noop").mode("overwrite").save()
-
-    val jobs, stages, tasks = new AtomicInteger(0)
-    val shufW, shufR = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        stages.incrementAndGet()
-        tasks.addAndGet(e.stageInfo.numTasks)
-        shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufR.addAndGet(m.shuffleReadMetrics.remoteBytesRead + m.shuffleReadMetrics.localBytesRead)
-      }
-    })
 
     // one bad name or runtime error must not abort the remaining queries
     names.foreach { name =>
@@ -80,35 +57,22 @@ object PlanCostProbe {
         // warm pass: construction actions, codegen, stage caches
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         val reps = (1 to 3).map { _ =>
-          val gc0 = BenchMetrics.gcSnapshot()._2
-          val alloc0 = BenchMetrics.allocatedBytes()
-          val t0 = System.nanoTime()
-          val df = fn(spark, dir)
-          val t1 = System.nanoTime()
+          val ((df, construct), built) = QueryProfile.run(spark)(timed(fn(spark, dir)))
           val qe = df.queryExecution
-          qe.analyzed
-          val t2 = System.nanoTime()
-          qe.withCachedData
-          val t3 = System.nanoTime()
-          qe.optimizedPlan
-          val t4 = System.nanoTime()
-          qe.executedPlan
-          val t5 = System.nanoTime()
-          Seq(jobs, stages, tasks).foreach(_.set(0)); shufW.set(0L); shufR.set(0L)
-          df.write.format("noop").mode("overwrite").save()
-          val t6 = System.nanoTime()
-          val gcMs = BenchMetrics.gcSnapshot()._2 - gc0
-          val allocMb = (BenchMetrics.allocatedBytes() - alloc0) / 1048576.0
-          // listener events are async: drain the bus before reading
-          GraftBridge.drainListenerBus(spark.sparkContext)
-          Seq((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, (t4 - t3) / 1e9, (t5 - t4) / 1e9,
-            (t6 - t5) / 1e9, jobs.get.toDouble, stages.get.toDouble, tasks.get.toDouble,
-            (shufW.get / 1024).toDouble, (shufR.get / 1024).toDouble, gcMs.toDouble, allocMb)
+          val (phases, ran) = QueryProfile.run(spark) {
+            Seq(timed(qe.analyzed)._2, timed(qe.withCachedData)._2, timed(qe.optimizedPlan)._2,
+              timed(qe.executedPlan)._2,
+              timed(df.write.format("noop").mode("overwrite").save())._2)
+          }
+          (construct +: phases) ++ Seq(ran.jobs.toDouble, ran.stages.toDouble, ran.tasks.toDouble,
+            (ran.shuffleWriteBytes / 1024).toDouble, (ran.shuffleReadBytes / 1024).toDouble,
+            (built.gcMs + ran.gcMs).toDouble,
+            (built.allocatedBytes + ran.allocatedBytes) / 1048576.0, built.jobs.toDouble)
         }
         val m = reps.transpose.map(_.sorted.apply(1))
         println(f"PLANCOST $name%-28s construct=${m(0)}%6.3f analyze=${m(1)}%6.3f " +
           f"cacheLookup=${m(2)}%6.3f optimize=${m(3)}%6.3f physical=${m(4)}%6.3f exec=${m(5)}%6.3f " +
-          f"jobs=${m(6)}%3.0f stages=${m(7)}%3.0f tasks=${m(8)}%5.0f " +
+          f"jobs=${m(6)}%3.0f constructJobs=${m(13)}%3.0f stages=${m(7)}%3.0f tasks=${m(8)}%5.0f " +
           f"shufW=${m(9)}%8.0fKB shufR=${m(10)}%8.0fKB gcMs=${m(11)}%5.0f allocMB=${m(12)}%6.0f")
       } catch { case e: Throwable => System.err.println(s"[plancost] $name probe failed: $e") }
     }

@@ -2,9 +2,9 @@ package graft.tools
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-import graft.sources.jsonl.GraftJsonl
+import graft.tools.Probe.num
 
 /** Stream-AGE probe for the `graft-jsonl` medium — the third leg of the
   * scale story beside [[ScaleProbe]] (batch bytes) and [[StateScaleProbe]]
@@ -22,11 +22,12 @@ import graft.sources.jsonl.GraftJsonl
   * (kafka/core log retention); the reference bounds its in-flight state the
   * same way (the offset deque holds only uncommitted records).
   *
-  * Exit code 1 if the retained run's offset JSON grows more than
+  * The property fails if the retained run's offset JSON grows more than
   * [[FlatRatioMax]]× between the measurement window's first and last
-  * samples. Writes RETENTION_PROBE.json (committed per round).
+  * samples, if the unretained control does not grow, or if a row is lost.
+  * Writes RETENTION_PROBE.json.
   *
-  * Usage: runMain graft.tools.RetentionProbe
+  * Usage: runMain graft.tools.Probe retention
   */
 object RetentionProbe {
 
@@ -39,33 +40,26 @@ object RetentionProbe {
   final case class Curve(epochs: Int, offsetBytes: Vector[Int], segFiles: Vector[Int],
       rows: Long)
 
-  def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(ctx: Probe.Ctx): Probe.Result = {
+    val spark = ctx.spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
     val epochs = 120
 
-    def run(retain: Boolean): Curve = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-retention-$retain").toString
+    def curve(retain: Boolean): Curve = {
+      val dir = ctx.tempDir(s"retention-$retain")
       val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
       val producer = in.toDF().selectExpr("""concat('{"id":', value, '}') AS value""")
         .repartition(2)
         .writeStream.format("graft-jsonl").option("path", dir)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-retention-p").toString)
+        .option("checkpointLocation", ctx.tempDir("retention-p"))
         .start()
       val rows = new java.util.concurrent.atomic.AtomicLong()
       var consumer = spark.readStream.format("graft-jsonl").option("path", dir)
       if (retain) consumer = consumer.option("retentionMs", "0")
       val q = consumer.load()
-        .writeStream.option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-retention-c").toString)
+        .writeStream.option("checkpointLocation", ctx.tempDir("retention-c"))
         .foreachBatch { (b: DataFrame, _: Long) => rows.addAndGet(b.count()); () }
         .start()
       val offsetBytes = Vector.newBuilder[Int]
@@ -88,8 +82,8 @@ object RetentionProbe {
       Curve(epochs, offsetBytes.result(), segFiles.result(), rows.get())
     }
 
-    val retained = run(retain = true)
-    val control = run(retain = false)
+    val retained = curve(retain = true)
+    val control = curve(retain = false)
 
     // measurement window skips the first 10 epochs (in-flight warmup)
     def window(c: Curve): (Int, Int) = (c.offsetBytes(10), c.offsetBytes.last)
@@ -109,14 +103,10 @@ object RetentionProbe {
     val json =
       s"""{"probe":"jsonl-retention","epochs":$epochs,"rows_per_epoch":10,"flat_ratio_max":$FlatRatioMax,""" +
         s""""retained":{"offset_bytes_e10":$rFirst,"offset_bytes_last":$rLast,""" +
-        f""""ratio":$rRatio%.3f,"seg_files_last":${retained.segFiles.last},"rows":${retained.rows}},""" +
+        s""""ratio":${num(rRatio, 3)},"seg_files_last":${retained.segFiles.last},"rows":${retained.rows}},""" +
         s""""unretained":{"offset_bytes_e10":$cFirst,"offset_bytes_last":$cLast,""" +
-        f""""ratio":$cRatio%.3f,"seg_files_last":${control.segFiles.last},"rows":${control.rows}},""" +
+        s""""ratio":${num(cRatio, 3)},"seg_files_last":${control.segFiles.last},"rows":${control.rows}},""" +
         s""""retained_flat":$flat,"control_grows":$controlGrows,"no_loss":${!lost}}"""
-    println(json)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("RETENTION_PROBE.json"), json + "\n")
-    catch { case e: Throwable => System.err.println(s"[retention] RETENTION_PROBE.json write failed: $e") }
-    spark.stop()
-    if (!flat || !controlGrows || lost) sys.exit(1)
+    Probe.Result(json, "RETENTION_PROBE.json", flat && controlGrows && !lost)
   }
 }

@@ -1,16 +1,14 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.SparkEntry
+import graft.metrics.QueryProfile
+import graft.tools.Probe.{num, timed}
 
-/** Scale-SHAPE probe (VERDICT r10 "what's missing" #4): turns the "100 TB by
-  * construction" argument into a measured curve. Runs the most expensive
-  * flagship queries at sf0.01 and sf0.1 — a 10× row-count step — capturing
+/** Scale-SHAPE probe (`Probe scale`): turns the "100 TB by construction"
+  * argument into a measured curve. Runs the most expensive flagship
+  * queries at sf0.01 and sf0.1 — a 10× row-count step — capturing
   * wall time and the executor-truth byte counters (input read, shuffle
   * write, shuffle read, disk spill) from task metrics, then checks the
   * property the plan audits only assert statically:
@@ -23,18 +21,17 @@ import graft.SparkEntry
   *   all-pairs join, a corpus-sized window, a collect-shaped agg) multiplies
   *   amplification itself and fails the probe.
   *
-  * Exit code 1 if any query's amplification grows by more than
+  * The property fails if any query's amplification grows by more than
   * [[AmplificationSlack]]× (or its shuffle bytes grow more than
   * [[BytesRatioMax]]× — super-linear even if input metrics drift) across
-  * the step. Writes SCALE_PROBE.json (committed per round beside
-  * BENCH_SELF.json).
+  * the step. Writes SCALE_PROBE.json (committed beside BENCH_SELF.json).
   *
   * Wall-clock ratios are reported but NOT asserted: at these scales fixed
   * per-query costs (planning, codegen, task dispatch) still dominate
   * seconds-long runs and a time ratio well under 10 is expected; bytes are
   * the honest scale signal this probe exists to pin.
   *
-  * Usage: runMain graft.tools.ScaleProbe [sfSmallDir sfBigDir]
+  * Usage: runMain graft.tools.Probe scale [sfSmallDir sfBigDir synthDir]
   */
 object ScaleProbe {
 
@@ -61,39 +58,37 @@ object ScaleProbe {
     "pq74_scrub_mix", "pq64_incremental_mix", "pq60_training_mix",
     "pq03_lsh_pairs", "pq35_knn_quantized_stack",
     "pq01_exact_dedup", "pq18_dup_spans", "pq53_bm25_topk", "dq09_cms_rates",
-    // round-13 additions: the windowed distinct sketches (state-bounded by
-    // construction — the batch form's shuffle curve pins the register/kmv
-    // exchange) and the reworked percentile census (one corpus scan, the
-    // effective-count-0 shape)
+    // the windowed distinct sketches (state-bounded by construction — the
+    // batch form's shuffle curve pins the register/kmv exchange) and the
+    // percentile census (one corpus scan, the effective-count-0 shape)
     "dq24_windowed_distinct_sketch", "q21_percentile",
-    // round-16 second half: the crawl-front flagship (URL-hash election
-    // shuffle + cap heap; text must never shuffle) and the live calibrated
-    // gate's batch form (fixed 512-cell histogram exchange per window)
+    // the crawl-front flagship (URL-hash election shuffle + cap heap; text
+    // must never shuffle) and the live calibrated gate's batch form (fixed
+    // 512-cell histogram exchange per window)
     "pq86_crawl_to_corpus", "dq31_calibrated_gate",
-    // round-18: the full-PSL-keyed curation (broadcast probe chain — the
-    // corpus must not start shuffling when the rule table is the real
-    // PSL), the robots-exclusion gate (parse-on-the-small-side broadcast;
-    // the frontier must stay row-local), and the rewritten single-pass
-    // funnel (one canonicalize + one narrow election exchange)
+    // the full-PSL-keyed curation (broadcast probe chain — the corpus must
+    // not start shuffling when the rule table is the real PSL), the
+    // robots-exclusion gate (parse-on-the-small-side broadcast; the
+    // frontier must stay row-local), and the single-pass funnel (one
+    // canonicalize + one narrow election exchange)
     "pq93_psl_crawl_curation", "pq94_robots_gate", "pq88_crawl_funnel",
-    // round-19: the HTTP payload decode chain and sitemap extraction —
-    // both row-local by construction (zero shuffle expected; the probe
-    // pins that the wrap+decode/parse arms never start exchanging), and
-    // the deletion re-election (broadcast-restricted sub-graph + driver
-    // delta; its shuffle bytes are the LSH pair build's, which must stay
-    // linear)
+    // the HTTP payload decode chain and sitemap extraction — both
+    // row-local by construction (zero shuffle expected; the probe pins that
+    // the wrap+decode/parse arms never start exchanging), and the deletion
+    // re-election (broadcast-restricted sub-graph + driver delta; its
+    // shuffle bytes are the LSH pair build's, which must stay linear)
     "pq99_http_text", "pq101_sitemap_seed", "pq97_deletion_reelect",
-    // round-20: main-content extraction (row-local block scoring — zero
-    // shuffle expected), the link-graph build (parse+resolve+canonicalize
-    // row-local; only the registered output materialization may
-    // exchange), and integer PageRank (per-iteration edges⋈ranks joins —
-    // shuffle bytes must scale with the EDGE list, linearly)
+    // main-content extraction (row-local block scoring — zero shuffle
+    // expected), the link-graph build (parse+resolve+canonicalize row-local;
+    // only the registered output materialization may exchange), and
+    // integer PageRank (per-iteration edges⋈ranks joins — shuffle bytes
+    // must scale with the EDGE list, linearly)
     "pq103_main_content", "pq105_link_graph", "pq106_link_pagerank")
 
-  /** Round-14: a THIRD scale point — two points (sf0.01→sf0.1) fit any
-    * line; the flagships get a further 10× step on SYNTHESIZED volume
-    * (10 shifted copies of sf0.1 — see [[synthesize]]) so curvature is
-    * measurable across two decades.
+  /** A THIRD scale point — two points (sf0.01→sf0.1) fit any line; the
+    * flagships get a further 10× step on SYNTHESIZED volume (10 shifted
+    * copies of sf0.1 — see [[synthesize]]) so curvature is measurable
+    * across two decades.
     */
   val Probe100x: Seq[String] = Seq(
     "pq74_scrub_mix", "pq64_incremental_mix", "pq60_training_mix",
@@ -159,56 +154,21 @@ object ScaleProbe {
     def amplification: Double = if (inputMb == 0) 0.0 else shuffleWriteMb / inputMb
   }
 
-  /** Executor-truth byte counters over everything run inside `body`. */
-  private final class MetricsTap extends SparkListener {
-    val input = new LongAdder; val sw = new LongAdder
-    val sr = new LongAdder; val spill = new LongAdder
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        input.add(m.inputMetrics.bytesRead)
-        sw.add(m.shuffleWriteMetrics.bytesWritten)
-        sr.add(m.shuffleReadMetrics.totalBytesRead)
-        spill.add(m.diskBytesSpilled)
-      }
-    }
-  }
-
   private def runOne(spark: SparkSession, name: String, sfDir: String): Sample = {
     // cold slate per sample: the mix flagships persist their scored stage,
     // and a warm stage cache would hide the dominant shuffles
     graft.pipeline.Curation.releaseStageCaches(blocking = true)
     spark.catalog.clearCache()
-    val tap = new MetricsTap
-    spark.sparkContext.addSparkListener(tap)
-    val t0 = System.nanoTime()
-    var sec = 0.0
-    try {
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      sec = (System.nanoTime() - t0) / 1e9
-    } finally {
-      // the listener bus is async: drain it before reading the counters
-      GraftBridge.drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(tap)
-    }
-    def mb(a: LongAdder) = a.sum() / 1048576.0
-    Sample(sec, mb(tap.input), mb(tap.sw), mb(tap.sr), mb(tap.spill))
+    val ((_, sec), p) = QueryProfile.run(spark)(timed(
+      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()))
+    def mb(bytes: Long) = bytes / 1048576.0
+    Sample(sec, mb(p.inputBytes), mb(p.shuffleWriteBytes), mb(p.shuffleReadBytes), mb(p.spillBytes))
   }
 
-  def main(args: Array[String]): Unit = {
+  def run(ctx: Probe.Ctx): Probe.Result = {
+    import ctx.{args, spark}
     val small = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val big = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // one untimed pass at the small SF: plan compilation out of the window
     ProbeQueries.foreach { n =>
@@ -247,27 +207,24 @@ object ScaleProbe {
     }
 
     def sampleJson(s: Sample) =
-      f"""{"sec":${s.sec}%.3f,"input_mb":${s.inputMb}%.2f,"shuffle_write_mb":${s.shuffleWriteMb}%.2f,""" +
-        f""""shuffle_read_mb":${s.shuffleReadMb}%.2f,"spill_mb":${s.spillMb}%.2f,""" +
-        f""""amplification":${s.amplification}%.4f}"""
+      s"""{"sec":${num(s.sec, 3)},"input_mb":${num(s.inputMb, 2)},""" +
+        s""""shuffle_write_mb":${num(s.shuffleWriteMb, 2)},""" +
+        s""""shuffle_read_mb":${num(s.shuffleReadMb, 2)},"spill_mb":${num(s.spillMb, 2)},""" +
+        s""""amplification":${num(s.amplification, 4)}}"""
     val qJson = rows.map { case (n, s1, s10, br, ar, ok, r100) =>
       val extra = r100.map { case (s, br1, ar1, ok1) =>
-        f""","sf_100x":${sampleJson(s)},"time_ratio_100x":${s.sec / math.max(1e-9, s10.sec)}%.2f,""" +
-          f""""shuffle_bytes_ratio_100x":$br1%.2f,"amplification_ratio_100x":$ar1%.3f,""" +
-          f""""linear_100x_ok":$ok1"""
+        s""","sf_100x":${sampleJson(s)},"time_ratio_100x":${num(s.sec / math.max(1e-9, s10.sec), 2)},""" +
+          s""""shuffle_bytes_ratio_100x":${num(br1, 2)},"amplification_ratio_100x":${num(ar1, 3)},""" +
+          s""""linear_100x_ok":$ok1"""
       }.getOrElse("")
-      f""""$n":{"sf_1x":${sampleJson(s1)},"sf_10x":${sampleJson(s10)},""" +
-        f""""time_ratio":${s10.sec / math.max(1e-9, s1.sec)}%.2f,"shuffle_bytes_ratio":$br%.2f,""" +
-        f""""amplification_ratio":$ar%.3f,"linear_ok":$ok$extra}"""
+      s""""$n":{"sf_1x":${sampleJson(s1)},"sf_10x":${sampleJson(s10)},""" +
+        s""""time_ratio":${num(s10.sec / math.max(1e-9, s1.sec), 2)},"shuffle_bytes_ratio":${num(br, 2)},""" +
+        s""""amplification_ratio":${num(ar, 3)},"linear_ok":$ok$extra}"""
     }.mkString("{", ",", "}")
     val allOk = rows.forall(r => r._6 && r._7.forall(_._4))
     val json =
       s"""{"probe":"scale-shape","step":"10x rows ($small -> $big)","amplification_slack":$AmplificationSlack,""" +
         s""""bytes_ratio_max":$BytesRatioMax,"queries":$qJson,"all_linear":$allOk}"""
-    println(json)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("SCALE_PROBE.json"), json + "\n")
-    catch { case e: Throwable => System.err.println(s"[scale] SCALE_PROBE.json write failed: $e") }
-    spark.stop()
-    if (!allOk) sys.exit(1)
+    Probe.Result(json, "SCALE_PROBE.json", allOk)
   }
 }

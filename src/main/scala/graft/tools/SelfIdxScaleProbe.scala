@@ -1,13 +1,11 @@
 package graft.tools
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftBridge
 
+import graft.metrics.QueryProfile
 import graft.streaming.StreamOps
+import graft.tools.Probe.{num, timed}
 
 /** Scale shape of the self-indexing near-dup flagger as history grows: the
   * per-batch cost model is encode(batch) + ONE column-pruned scan of the
@@ -21,35 +19,18 @@ import graft.streaming.StreamOps
   *
   * Synthetic corpus: `batches` × `batchRows` docs, every 10th doc a
   * verbatim duplicate of an earlier one (so flags fire throughout).
-  * Writes `SELFIDX_PROBE.json`. Run: `runMain graft.tools.SelfIdxScaleProbe`.
+  * Writes `SELFIDX_PROBE.json`.
+  *
+  * Usage: runMain graft.tools.Probe selfidx [batches batchRows]
   */
 object SelfIdxScaleProbe {
 
-  private final class Tap extends SparkListener {
-    val input = new LongAdder; val sw = new LongAdder
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        input.add(m.inputMetrics.bytesRead)
-        sw.add(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
-
   final case class BatchSample(batch: Int, sec: Double, inputMb: Double, shuffleMb: Double)
 
-  def main(args: Array[String]): Unit = {
+  def run(ctx: Probe.Ctx): Probe.Result = {
+    import ctx.{args, spark}
     val batches = args.lift(0).map(_.toInt).getOrElse(20)
     val batchRows = args.lift(1).map(_.toLong).getOrElse(5000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // doc text: 30 deterministic pseudo-words from the id; every 10th doc
     // reuses doc (id - id % 10) exactly — a guaranteed near-dup ancestor
@@ -63,31 +44,19 @@ object SelfIdxScaleProbe {
             .as("toks"))
         .select(col("doc_id"), array_join(col("toks"), " ").as("text"))
 
-    val indexDir = java.nio.file.Files
-      .createTempDirectory("graft-selfidx-probe").toString + "/idx"
+    val indexDir = ctx.tempDir("selfidx") + "/idx"
     def runBatch(b: Int): BatchSample = {
-      val tap = new Tap
-      spark.sparkContext.addSparkListener(tap)
-      val t0 = System.nanoTime()
-      var nFlags = 0L
-      try {
-        nFlags = StreamOps.flagAndIndexTextBatch(docs(b), b.toLong,
+      val ((nFlags, sec), p) = QueryProfile.run(spark)(timed(
+        StreamOps.flagAndIndexTextBatch(docs(b), b.toLong,
           col("doc_id"), col("text"), indexDir,
-          k = 16, bands = 4, shingleSize = 5).count()
-      } finally {
-        GraftBridge.drainListenerBus(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(tap)
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
+          k = 16, bands = 4, shingleSize = 5).count()))
       System.err.println(f"[selfidx] batch $b: $sec%.2f s, flags=$nFlags")
-      BatchSample(b, sec, tap.input.sum() / 1048576.0, tap.sw.sum() / 1048576.0)
+      BatchSample(b, sec, p.inputBytes / 1048576.0, p.shuffleWriteBytes / 1048576.0)
     }
 
     runBatch(0) // also the JIT/codegen warm batch — excluded from ratios
     val samples = (1 until batches).map(runBatch)
 
-    def num(v: Double, dp: Int): String =
-      String.format(java.util.Locale.ROOT, "%." + dp + "f", Double.box(v))
     // input bytes per unit of accumulated history: flat ⇔ scan is linear
     def perHistory(s: BatchSample) = s.inputMb / s.batch
     val early = samples.take(5)
@@ -108,11 +77,6 @@ object SelfIdxScaleProbe {
         s""""shuffle_ratio_late_vs_early":${num(shuffleRatio, 3)},""" +
         s""""history_scan_linear":${inputPerHistRatio <= 2.0},""" +
         s""""shuffle_flat":${shuffleRatio <= 2.0},"all_ok":$ok}"""
-    println(json)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("SELFIDX_PROBE.json"), json + "\n")
-    catch { case e: Throwable => System.err.println(s"[selfidx] write failed: $e") }
-    spark.stop()
-    if (!ok) sys.exit(1)
+    Probe.Result(json, "SELFIDX_PROBE.json", ok)
   }
 }

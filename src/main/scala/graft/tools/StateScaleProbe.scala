@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.tools.Probe.num
 
 /** Streaming STATE-shape probe — the state-size half of the scale story
   * ([[ScaleProbe]] measures batch shuffle bytes): drives the watermark-
@@ -23,11 +25,11 @@ import org.apache.spark.sql.functions._
   *     is a FIXED-width sketch buffer — the bounded replacement for
   *     full-key distinct state, which would track the key count.
   *
-  * Exit code 1 if a probe's state grows more than [[StateRatioMax]]× on the
-  * 10× step. Writes STATE_PROBE.json (committed per round beside
+  * The property fails if a probe's state grows more than [[StateRatioMax]]×
+  * on the 10× step. Writes STATE_PROBE.json (committed beside
   * SCALE_PROBE.json).
   *
-  * Usage: runMain graft.tools.StateScaleProbe
+  * Usage: runMain graft.tools.Probe state
   */
 object StateScaleProbe {
 
@@ -38,13 +40,8 @@ object StateScaleProbe {
 
   final case class Run(records: Long, stateRows: Long, outputRows: Long)
 
-  def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def run(ctx: Probe.Ctx): Probe.Result = {
+    val spark = ctx.spark
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -52,7 +49,7 @@ object StateScaleProbe {
     // event time advances 1 s per record → at 200k records the stream spans
     // ~55 h of event time against a 10-minute watermark: eviction MUST be
     // doing the bounding, not the run being shorter than the horizon
-    def run(probe: String, total: Long): Run = {
+    def measure(probe: String, total: Long): Run = {
       val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
       val src = in.toDF().toDF("key", "seq")
         .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("seq")))
@@ -90,8 +87,7 @@ object StateScaleProbe {
       }
       val outCount = new java.util.concurrent.atomic.AtomicLong()
       val q = shaped.writeStream
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"graft-state-$probe").toString)
+        .option("checkpointLocation", ctx.tempDir(s"state-$probe"))
         .foreachBatch { (b: DataFrame, _: Long) => outCount.addAndGet(b.count()); () }
         .start()
       try {
@@ -121,8 +117,8 @@ object StateScaleProbe {
 
     val rows = Seq("dedupe", "windowed_rates", "distinct_sketch", "drift_hist",
       "calibrated_gate").map { probe =>
-      val r1 = run(probe, 20000L)
-      val r10 = run(probe, 200000L)
+      val r1 = measure(probe, 20000L)
+      val r10 = measure(probe, 200000L)
       val ratio = r10.stateRows.toDouble / math.max(1L, r1.stateRows)
       val ok = ratio <= StateRatioMax
       System.err.println(f"[state] $probe%-16s 1x: ${r1.stateRows}%6d state rows / ${r1.records}%7d recs   " +
@@ -132,15 +128,11 @@ object StateScaleProbe {
     val qJson = rows.map { case (p, r1, r10, ratio, ok) =>
       s""""$p":{"keys":$nKeys,"sf_1x":{"records":${r1.records},"state_rows":${r1.stateRows},"output_rows":${r1.outputRows}},""" +
         s""""sf_10x":{"records":${r10.records},"state_rows":${r10.stateRows},"output_rows":${r10.outputRows}},""" +
-        f""""state_ratio":$ratio%.3f,"bounded_ok":$ok}"""
+        s""""state_ratio":${num(ratio, 3)},"bounded_ok":$ok}"""
     }.mkString("{", ",", "}")
     val allOk = rows.forall(_._5)
     val json = s"""{"probe":"state-shape","step":"10x records, fixed key cardinality","state_ratio_max":$StateRatioMax,""" +
       s""""probes":$qJson,"all_bounded":$allOk}"""
-    println(json)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("STATE_PROBE.json"), json + "\n")
-    catch { case e: Throwable => System.err.println(s"[state] STATE_PROBE.json write failed: $e") }
-    spark.stop()
-    if (!allOk) sys.exit(1)
+    Probe.Result(json, "STATE_PROBE.json", allOk)
   }
 }

@@ -10,22 +10,8 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // production wiring under test: the engine's SQL functions arrive via
-      // the standard extensions config, exactly as a user would enable them
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // the suites compile far more than 100 distinct codegen stages; the
-      // default LRU cap recompiles them continuously (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The session Bench ships ([[Sessions.local]]), on a fixed 4 cores so a
+    * suite's partition counts do not follow the host.
+    */
+  lazy val session: SparkSession = Sessions.local(cpus = 4)
 }

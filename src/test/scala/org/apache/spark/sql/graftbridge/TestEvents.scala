@@ -31,4 +31,12 @@ object TestEvents {
 
   def terminated(runId: UUID): StreamingQueryListener.QueryTerminatedEvent =
     new StreamingQueryListener.QueryTerminatedEvent(UUID.randomUUID(), runId, None, None)
+
+  /** The SparkListeners attached to `sc`'s bus (`private[spark]`), so a
+    * spec can see that a profile window detached its listener.
+    */
+  def sparkListeners(sc: org.apache.spark.SparkContext): Seq[AnyRef] = {
+    import scala.jdk.CollectionConverters._
+    sc.listenerBus.listeners.asScala.toSeq
+  }
 }
