@@ -397,9 +397,8 @@ object Bench {
     // claim is latency-INDEPENDENT throughput (docs/runtime.adoc:64); the gap
     // between this number and tps above is the simulated-I/O timer, not the
     // engine. The whole probe is a ~1 s window dominated by per-job fixed
-    // costs, so a single sample swings ±2x run to run (the r1→r2 "58.8k vs
-    // 44.4k floor regression" was exactly this) — warm it up untimed, then
-    // report the median of 3 reps plus the reps themselves.
+    // costs, so a single sample swings ±2x run to run — warm it up untimed,
+    // then report the median of 3 reps plus the reps themselves.
     def noIoRep(): Double = {
       import spark.implicits._
       val t0 = System.nanoTime()

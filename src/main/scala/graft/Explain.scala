@@ -40,7 +40,7 @@ object Explain {
     // InMemoryTableScan, so its one exchange would otherwise be counted
     // once per consumer despite executing once (pq60's dedup exchange
     // appears four times in the text, all [plan_id=N] for the same N).
-    // Round-robin REPARTITION_BY_NUM exchanges are the r20 scale-adaptive
+    // Round-robin REPARTITION_BY_NUM exchanges are the scale-adaptive
     // input spreads (Tables.spreadForRowWork: parallelize a sub-split scan;
     // identity at production scale) — counted separately from the keyed
     // data shuffles whose budget must stay flat as the data grows.

@@ -140,7 +140,7 @@ object UrlFunctions {
     graft.functions.toColumn(graft.plans.UrlCanonicalize(graft.functions.toExpr(u)))
 
   /** The original column-expression form of the chain (kept as the
-    * differential twin for UrlFuzzSpec: the r20 native expression must
+    * differential twin for UrlFuzzSpec: the native expression must
     * equal this chain on every fuzzed input — same patterns, same order,
     * ~14x less per-row expression overhead in [[url_canonicalize]]).
     */

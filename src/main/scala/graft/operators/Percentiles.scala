@@ -151,8 +151,8 @@ object Percentiles {
     // all-null groups: the builtin's `(g, null)` answer with n = 0, one row
     // per requested p — a metadata-level filter of the SAME targets table
     // the covers join broadcasts, so the census costs zero extra scans and
-    // zero extra exchanges (verified in PLANS.md: q21/pq75 keep their r12
-    // exchange count).
+    // zero extra exchanges (PLANS.md: q21/pq75 keep the exchange count they
+    // had without it).
     val nullGroups = targets.filter(col("n") === 0)
       .select(col("__tg").as("g"), col("p"),
         col("n"), lit(null).cast("double").as("pct"))

@@ -210,7 +210,7 @@ object Curation {
         col("x.id").as("doc_id"), col("x.score").as("score"), col("n_total"))
   }
 
-  /** The flagship end-to-end composition, round 9: canonical-exact dedup →
+  /** The flagship end-to-end composition: canonical-exact dedup →
     * corpus-calibrated quality gate → per-source cap → temperature mix, as
     * ONE declarative plan. A user points this at a raw crawl and gets the
     * training mix; every stage is the library operator it is built from

@@ -43,7 +43,7 @@ object Export {
     * to tens of thousands at 100 TB), so every window partition holds one
     * shard's worth of NARROW rows (id + hash, not text). This is the benign
     * use of a rank window — contrast the per-stratum (cardinality ~5)
-    * windows that r4 flagged, where the key count cannot grow with the data.
+    * windows, where the key count cannot grow with the data.
     */
   def epochOrder(
       df: DataFrame,

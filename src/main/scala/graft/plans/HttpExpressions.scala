@@ -226,9 +226,9 @@ object HttpDecode {
     * `Inflater`, `reset()` between members) — because the previous
     * `GZIPInputStream` shape never closed its stream on the success path,
     * leaving one native zlib window per ROW to the Cleaner; at pq99's
-    * ~16k decodes/rep that churn is the committed attribution for the
-    * query's bimodal 0.33 s / 1.4 s reps (r19 verdict, `tools/
-    * pq99_probe_r20.json`). `GZIPInputStream`-compatible leniency kept:
+    * ~16k decodes/rep that churn made the query's reps bimodal
+    * (0.33 s / 1.4 s, `tools/pq99_probe_r20.json`).
+    * `GZIPInputStream`-compatible leniency kept:
     * trailing non-gzip bytes after a complete member end the stream
     * silently (truncated archives carry them); a CRC/ISIZE mismatch, a
     * corrupt member, or output past `maxOut` yields null.
@@ -476,7 +476,7 @@ object HttpDecode {
     * then content codings reversed), or null when every declared coding is
     * decodable — including the non-HTTP case (a census groups those under
     * null alongside fully-decodable rows; `http_status` separates them).
-    * This is the r19 verdict's observability demand: a crawl negotiating
+    * Why a census column: a crawl negotiating
     * `Accept-Encoding` loses a double-digit share of responses to `br`,
     * and that loss rate must be a COUNTED census column, not a silent
     * `http_text` null indistinguishable from corrupt data.

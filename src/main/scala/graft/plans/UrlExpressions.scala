@@ -64,7 +64,7 @@ case class IdnAscii(child: Expression)
   * [[graft.functions.UrlFunctions.UnreservedByHex]] table, and the
   * authority case fold goes through `UTF8String.toLowerCase` exactly like
   * the column form's `lower()` — but the row pays ONE expression-tree node
-  * instead of ~25: the r20 probe measured the column chain at ~42 µs/row
+  * instead of ~25: the column chain measured ~42 µs/row
   * on percent-bearing URLs (15 µs of it the interpreted ArrayTransform
   * inside percent_normalize) against a ~3 µs single-pass budget, across
   * every crawl-family query (pq83-pq108 all key on this chain).

@@ -117,7 +117,7 @@ case class SignLsh(child: Expression, planes: Int, planeOffset: Int = 0)
 
   // Per-(plane, dim) hyperplane components, grown lazily to the widest
   // vector seen; one md5 each, computed once per task instead of per row.
-  // ThreadLocal like the Md5HashedText family (r13): codegen tasks each
+  // ThreadLocal like the Md5HashedText family: codegen tasks each
   // deserialize their own instance, but an INTERPRETED projection can share
   // one instance across threads, and a plain var would publish the grown
   // arrays without a happens-before edge — a racing reader could observe

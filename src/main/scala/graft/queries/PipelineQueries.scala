@@ -3088,7 +3088,7 @@ object PipelineQueries {
         FROM ag
       """)),
 
-    // ---- Z-order (Morton) clustering key (round 16b — the data-LAYOUT
+    // ---- Z-order (Morton) clustering key (the data-LAYOUT
     // lever: parquet prunes files by per-column min/max, and interleaving
     // the bits of k normalized columns into one sort key makes every file
     // a small k-dimensional box, so a selective filter on ANY dimension

@@ -483,7 +483,7 @@ object GraftWarc {
     * member allocates (and a forgotten one Cleaner-frees) a native zlib
     * window each time; at corpus row rates that native churn is the
     * difference between [[HttpExpressions]]' pq99 fast and slow modes
-    * (r19: 0.33 s vs 1.4 s reps on identical code — the old
+    * (0.33 s vs 1.4 s reps on identical code: the old
     * GZIPInputStream-shaped decode left one Inflater per ROW to the
     * cleaner). Safe because [[gzipMember]] is synchronous and
     * non-reentrant; native memory is bounded at one zlib window per

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicBoolean
-import java.util.concurrent.{Executors, LinkedBlockingQueue, TimeoutException}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+import java.util.concurrent.locks.LockSupport
+import java.util.concurrent.{ConcurrentSkipListMap, Executors, LinkedBlockingQueue, TimeoutException}
 
 import scala.collection.mutable
 import scala.concurrent.duration._
@@ -205,13 +206,13 @@ object AsyncProcessing {
     asyncKeyedImpl(ds, maxInFlight, policy)(keyFn,
       t => try f(t) catch { case scala.util.control.NonFatal(e) => Future.failed(e) })
 
-  /** One admitted record: the gate its same-key successor chains on, a
-    * settle-once latch (completion and give-up race, and only the winner
-    * emits the record), its outcome, and its T4 state: the start of its
-    * current timeout period (its start, moved on by each EXTEND) and the
-    * extensions granted so far.
+  /** One admitted record: its key, the gate its same-key successor chains
+    * on, a settle-once latch (completion and give-up race, and only the
+    * winner emits the record), its outcome, and its T4 state: the start of
+    * its current timeout period (its start, moved on by each EXTEND) and
+    * the extensions granted so far.
     */
-  private final class InFlight[T, U](val task: T) {
+  private final class InFlight[T, K, U](val task: T, val key: K) {
     val gate = Promise[Unit]()
     val settled = new AtomicBoolean(false)
     var result: scala.util.Try[U] = _
@@ -249,17 +250,17 @@ object AsyncProcessing {
       // contract (future-returning client), so inlining it is exactly the
       // "continuations run on the completing thread" posture its docs state.
       implicit val glue: ExecutionContext = ExecutionContext.parasitic
-      val completed = new LinkedBlockingQueue[InFlight[T, U]]()
+      val completed = new LinkedBlockingQueue[InFlight[T, K, U]]()
       val chains = mutable.Map.empty[K, Future[Unit]]
       // admitted but not yet emitted, oldest first: its size is the in-flight
       // count the admission bound holds (`max.pending.records`, O5), and its
       // head is the record the T4 reaper watches
-      val pending = mutable.LinkedHashSet.empty[InFlight[T, U]]
+      val pending = mutable.LinkedHashSet.empty[InFlight[T, K, U]]
 
       def admit(t: T): Unit = {
-        val rec = new InFlight[T, U](t)
+        val rec = new InFlight[T, K, U](t, keyFn(t))
         // become the key's chain tail, and start once the previous tail's gate completes
-        chains.put(keyFn(t), rec.gate.future).getOrElse(Future.unit).onComplete { _ =>
+        chains.put(rec.key, rec.gate.future).getOrElse(Future.unit).onComplete { _ =>
           rec.periodStart = System.nanoTime()
           run(t).onComplete { r =>
             if (rec.settled.compareAndSet(false, true)) { rec.result = r; completed.put(rec) }
@@ -267,12 +268,6 @@ object AsyncProcessing {
           }
         }
         pending += rec
-        // prune completed chains so high-cardinality partitions don't retain
-        // one completed future per distinct key. Only the gates of records in
-        // flight are incomplete, so a prune at twice the bound keeps about
-        // `maxInFlight` and the next one is `maxInFlight` admissions away
-        // (consumer thread only — the map is never touched from callbacks)
-        if (chains.size > 2 * maxInFlight) chains.filterInPlace((_, cf) => !cf.isCompleted)
       }
 
       new Iterator[U] {
@@ -288,7 +283,7 @@ object AsyncProcessing {
           */
         def next(): U = {
           if (!hasNext) throw new NoSuchElementException("no more records")
-          var rec: InFlight[T, U] = null
+          var rec: InFlight[T, K, U] = null
           while (rec == null) {
             val head = pending.head
             rec = policy.nextTimeout match {
@@ -311,88 +306,105 @@ object AsyncProcessing {
             }
           }
           pending -= rec
+          // a key whose chain ends at this record leaves the map (consumer
+          // thread only), so the map holds only keys with records in flight.
+          // The record's run has completed, or it was given up with its gate
+          // already complete, so a later same-key record starting on
+          // Future.unit keeps the key's order
+          if (chains.getOrElse(rec.key, null) eq rec.gate.future) chains.remove(rec.key)
           rec.result.get // a failed task fails the Spark task
         }
       }
     }
   }
 
-  /** Hashed-wheel timer (1 ms tick) for simulating async I/O latency at
-    * scale. ScheduledThreadPoolExecutor parks per fire (and the kernel adds
-    * ~50 µs timer slack per park), capping it near 100k fires/s; the wheel
-    * parks once per millisecond and fires the whole due bucket, so millions
-    * of outstanding timers complete at memory speed.
+  /** Hashed timing wheel (Varghese & Lauck, SOSP '87) for simulating async
+    * I/O latency at scale. ScheduledThreadPoolExecutor parks per fire (and
+    * the kernel adds ~50 µs timer slack per park), capping it near 100k
+    * fires/s; the wheel parks once per due bucket and fires the whole
+    * bucket, so millions of outstanding timers complete at memory speed.
+    *
+    * Deadlines are on the monotonic clock. A deadline belongs to the
+    * [[TickNs]] tick it rounds UP to, and a bucket fires only once
+    * `floor(now / TickNs)` has reached its tick, so no body fires before
+    * its deadline. The ticker parks until its earliest bucket is due (at
+    * most [[MaxParkNs]]), and with nothing pending until a schedule unparks
+    * it. Draining a bucket first swaps in the [[Closed]] sentinel: a body
+    * that lands on a closed bucket is due, so it fires inline, and the
+    * drained bucket leaves the map at once.
     */
   private final class Wheel {
-    private val buckets =
-      new java.util.concurrent.ConcurrentSkipListMap[Long, java.util.concurrent.ConcurrentLinkedQueue[() => Unit]]()
-    /** Last tick time; deadlines at or before this fire inline in schedule(). */
-    @volatile private var wheelNow = 0L
-    /** Buckets are only removed once this much past due AND drained — a
-      * scheduler would have to stall longer than this between building its
-      * deadline and inserting to race the removal.
+    private val buckets = new ConcurrentSkipListMap[Long, AtomicReference[Timer]]()
+    /** The tick the parked ticker wakes for: a schedule into an earlier
+      * tick unparks it. Long.MinValue while it runs, Long.MaxValue while
+      * nothing is pending.
       */
-    private val StaleMs = 50L
-    @volatile private var started = false
-    private def ensureTicker(): Unit = if (!started) synchronized {
-      if (!started) {
-        val t = new Thread(null, () => {
-          while (true) {
-            val now = System.currentTimeMillis()
-            wheelNow = now
-            val due = buckets.headMap(now, true).entrySet().iterator()
-            while (due.hasNext) {
-              val e = due.next()
-              val q = e.getValue
-              // a throwing body must not kill the ticker (every other timer
-              // on this wheel would silently never fire again)
-              var f = q.poll()
-              while (f != null) {
-                try f() catch { case scala.util.control.NonFatal(_) => }
-                f = q.poll()
-              }
-              if (e.getKey <= now - StaleMs && q.isEmpty) {
-                due.remove()
-                // final drain: catch a body added between the isEmpty check
-                // and removal
-                f = q.poll()
-                while (f != null) {
-                  try f() catch { case scala.util.control.NonFatal(_) => }
-                  f = q.poll()
-                }
-              }
-            }
-            Thread.sleep(1)
-          }
-        }, "graft-async-wheel", 1 << 20)
-        t.setDaemon(true)
-        t.start()
-        started = true
+    @volatile private var wakeTick = Long.MinValue
+    private val ticker = new Thread(null, () => while (true) turn(), "graft-async-wheel", 1 << 20)
+    ticker.setDaemon(true)
+    ticker.start()
+
+    /** Fire every due bucket, then park until the next one is due. */
+    private def turn(): Unit = {
+      val now = Math.floorDiv(System.nanoTime(), TickNs)
+      var due = buckets.firstEntry()
+      while (due != null && due.getKey <= now) {
+        var t = due.getValue.getAndSet(Closed)
+        buckets.remove(due.getKey, due.getValue)
+        while (t != null) {
+          // a throwing body must not kill the ticker (every other timer
+          // on this wheel would silently never fire again)
+          try t.body() catch { case scala.util.control.NonFatal(_) => }
+          t = t.next
+        }
+        due = buckets.firstEntry()
       }
+      val next = if (due == null) Long.MaxValue else due.getKey
+      wakeTick = next
+      // a schedule that read wakeTick before this write did not unpark, but
+      // its bucket is in the map by then: look once more before parking
+      val first = buckets.firstEntry()
+      if (first == null || first.getKey >= next) {
+        if (next == Long.MaxValue) LockSupport.park(this)
+        else LockSupport.parkNanos(this, math.min(MaxParkNs, next * TickNs - System.nanoTime()))
+      }
+      wakeTick = Long.MinValue
     }
-    def schedule(deadlineMillis: Long)(body: () => Unit): Unit = {
-      ensureTicker()
-      if (deadlineMillis <= wheelNow) body() // already due: fire inline
-      else buckets.computeIfAbsent(deadlineMillis,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()).add(body)
+
+    def schedule(deadlineNanos: Long)(body: () => Unit): Unit = {
+      val tick = -Math.floorDiv(-deadlineNanos, TickNs)
+      if (tick <= Math.floorDiv(System.nanoTime(), TickNs)) body() // already due: fire inline
+      else {
+        val bucket = buckets.computeIfAbsent(tick, _ => new AtomicReference[Timer]())
+        var head = bucket.get
+        while ((head ne Closed) && !bucket.compareAndSet(head, new Timer(body, head))) head = bucket.get
+        if (head eq Closed) body() // drained while we pushed: due, fire inline
+        else if (tick < wakeTick) LockSupport.unpark(ticker)
+      }
     }
   }
 
-  /** Independent wheel shards: one ticker thread fires ~250k bodies/s
-    * (promise completion + next-hop scheduling run inline on the ticker);
-    * sharding multiplies fire capacity for high simulated-I/O concurrency.
-    */
-  private lazy val wheels: Array[Wheel] = Array.fill(4)(new Wheel)
+  /** A bucket's timers, pushed by CAS as a list. */
+  private final class Timer(val body: () => Unit, val next: Timer)
+  /** Head of a drained bucket: pushes onto it fail. */
+  private val Closed = new Timer(() => (), null)
+  private val TickNs = 100000L
+  private val MaxParkNs = 1000000L
 
-  /** A future that completes about `delayMillis` later without holding a
-    * thread. The deadline is read from the truncated millisecond clock
-    * (`System.currentTimeMillis() + delayMillis`) and the wheel fires at the
-    * first tick at or past it, so the future can complete up to 1 ms BEFORE
-    * `delayMillis` has elapsed (a call made late in a millisecond), and a
-    * chain of n delays up to n ms before their sum. It completes late by
-    * the ticker's scheduling delay (a 1 ms sleep plus a thread wake), which
-    * has no fixed bound. Callers that need a hard floor pass
-    * `delayMillis + 1`.
+  /** Independent wheel shards: one ticker thread fires ~250k bodies/s
+    * (promise completion + next-hop scheduling run inline on the ticker).
+    * Two, not more: each shard wakes up to once per tick, and four shards
+    * cost about 30% more CPU per task on `async_io` (HISTORY.md, "A
+    * precise timer wheel").
+    */
+  private lazy val wheels: Array[Wheel] = Array.fill(2)(new Wheel)
+
+  /** A future that completes once `delayMillis` have passed, without
+    * holding a thread. It never completes early: the deadline is
+    * `System.nanoTime()` plus the delay, and the wheel fires no bucket
+    * before its deadline. It completes late by the ticker's wake, 0.1 ms
+    * of tick rounding plus the kernel's park slack, which has no fixed
+    * bound; a chain of n delays is late by the sum.
     */
   def delayed[U](delayMillis: Long)(value: => U): Future[U] = {
     val p = scala.concurrent.Promise[U]()
@@ -400,7 +412,7 @@ object AsyncProcessing {
     // Try(value): a throwing body must FAIL the future — trySuccess would
     // evaluate the by-name value inside the wheel ticker, whose NonFatal
     // guard discards the exception and leaves the promise pending forever
-    w.schedule(System.currentTimeMillis() + delayMillis)(() =>
+    w.schedule(System.nanoTime() + MILLISECONDS.toNanos(delayMillis))(() =>
       p.tryComplete(scala.util.Try(value)))
     p.future
   }

@@ -439,10 +439,10 @@ object StreamOps {
   }
 
   /** [[termBucketHist]] over several id-prefix slices of the SAME corpus in
-    * ONE pass: histogram k = tokens of rows with `idCol < cutoffs(k)`. The
-    * r20 optimization for dq25's growing trusted-prefix censuses — three
-    * separate scans (tokenize + hash ×3) fused into one tokenize + one
-    * aggregation with per-cutoff conditional inputs (`bucket_hist` skips
+    * ONE pass: histogram k = tokens of rows with `idCol < cutoffs(k)`. For
+    * dq25's growing trusted-prefix censuses it turns three separate scans
+    * (tokenize + hash ×3) into one tokenize + one aggregation with
+    * per-cutoff conditional inputs (`bucket_hist` skips
     * the nulls a failed cutoff predicate produces, so each histogram is
     * bit-identical to its standalone form).
     */

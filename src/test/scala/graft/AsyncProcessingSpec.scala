@@ -204,6 +204,67 @@ class AsyncProcessingSpec extends SparkTestBase {
     assert(g.value.exists(_.isFailure) && (g.value.get.failed.get eq boom))
   }
 
+  test("delayed never completes before its delay") {
+    import scala.concurrent.duration._
+    // each body reads the clock when it fires; every call's start is read
+    // before the call, so fired - start >= d holds for a timer never early
+    val calls = 5000
+    val early = new AtomicInteger(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val batches = (0 until 4).map { w =>
+        pool.submit(() => (0 until calls).map { i =>
+          val d = 1L + (w + i) % 5
+          val start = System.nanoTime()
+          AsyncProcessing.delayed(d)(System.nanoTime()).map { fired =>
+            if (fired - start < d * 1000000L) early.incrementAndGet()
+          }(scala.concurrent.ExecutionContext.parasitic)
+        })
+      }
+      val all = batches.flatMap(_.get().toSeq)
+      all.foreach(f => scala.concurrent.Await.ready(f, 30.seconds))
+      assert(all.forall(_.value.exists(_.isSuccess)), "every delayed call must complete")
+      assert(early.get() == 0, s"${early.get()} of ${4 * calls} delayed calls completed before their delay")
+    } finally pool.shutdown()
+  }
+
+  test("a body scheduled while its bucket drains still fires") {
+    // delayed(0) lands on the bucket of the tick now starting, which the
+    // ticker drains as it lands: a push that finds the bucket closed must
+    // fire inline, or its future never completes
+    val threads = 8
+    val calls = 50000
+    val done = new java.util.concurrent.CountDownLatch(threads * calls)
+    val workers = (0 until threads).map { w =>
+      val t = new Thread(() => (0 until calls).foreach { i =>
+        AsyncProcessing.delayed((w + i) % 2L)(()).onComplete(_ => done.countDown())(
+          scala.concurrent.ExecutionContext.parasitic)
+      })
+      t.start()
+      t
+    }
+    workers.foreach(_.join())
+    assert(done.await(10, java.util.concurrent.TimeUnit.SECONDS),
+      s"${done.getCount} of ${threads * calls} delayed calls did not complete within 10 s")
+  }
+
+  test("an idle wheel stops waking") {
+    import scala.concurrent.duration._
+    val burst = (0 until 1000).map(i => AsyncProcessing.delayed(1L + i % 3)(i))
+    burst.foreach(f => scala.concurrent.Await.ready(f, 10.seconds))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    def wheelCpuNs(): Long = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "graft-async-wheel")
+        .toSeq.map(t => math.max(0L, mx.getThreadCpuTime(t.getId))).sum
+    }
+    Thread.sleep(50) // let the ticker see its last bucket drained
+    val before = wheelCpuNs()
+    Thread.sleep(1000)
+    val grew = (wheelCpuNs() - before) / 1e6
+    assert(grew < 5.0, f"the idle wheel's tickers used $grew%.2f ms of CPU in 1 s")
+  }
+
   test("async keyed map keeps each key's input order and delivers every record") {
     import spark.implicits._
     val tasks = spark.range(500).map(i => (s"k${i % 7}", i))

@@ -6,8 +6,6 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.sources.kafkalike.BrokerLog
 import graft.sources.kafkalike.BrokerLog.Record
 
@@ -16,10 +14,9 @@ import graft.sources.kafkalike.BrokerLog.Record
   * and Kafka's never-regressing log-end offset across retention / full
   * truncation — the property `failOnDataLoss` detection depends on.
   */
-class BrokerLogSpec extends AnyFunSuite {
+class BrokerLogSpec extends SparkTestBase {
 
-  private def freshRoot(): String =
-    Files.createTempDirectory("graft-brokerlog").toString
+  private def freshRoot(): String = tempDir("graft-brokerlog")
 
   private def rec(k: String, v: String, ts: Long = 42L,
       headers: Seq[(String, Array[Byte])] = Nil): Record =

@@ -25,7 +25,7 @@ object GraftJsonlSourceSpec {
 
 class GraftJsonlSourceSpec extends SparkTestBase {
 
-  private def freshDir(): String = Files.createTempDirectory("graft-jsonl-spec").toString
+  private def freshDir(): String = tempDir("graft-jsonl-spec")
 
   private def startTail(dir: String, ckpt: String, extra: Map[String, String] = Map.empty) = {
     var r = spark.readStream.format("graft-jsonl").option("path", dir)
@@ -59,7 +59,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
 
   test("tailing: appends and new files arrive across triggers; resume is exact") {
     val dir = freshDir()
-    val ckpt = Files.createTempDirectory("graft-jsonl-ckpt").toString
+    val ckpt = tempDir("graft-jsonl-ckpt")
     GraftJsonl.append(dir, "s0.jsonl", (0 until 5).map(i => s"""{"i":$i}"""))
     GraftJsonlSourceSpec.reset()
     val q = startTail(dir, ckpt)
@@ -93,7 +93,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
     (0 until 2).foreach(f =>
       GraftJsonl.append(dir, s"f$f.jsonl", (100 until 110).map(i => s"""{"i":$i}""")))
     GraftJsonlSourceSpec.reset()
-    val q = startTail(dir, Files.createTempDirectory("graft-jsonl-cap").toString,
+    val q = startTail(dir, tempDir("graft-jsonl-cap"),
       Map("maxBytesPerTrigger" -> "40"))
     try {
       q.processAllAvailable()
@@ -113,7 +113,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
 
   test("truncation and deletion: failOnDataLoss=true fails, =false resumes") {
     val dir = freshDir()
-    val ckpt = Files.createTempDirectory("graft-jsonl-loss").toString
+    val ckpt = tempDir("graft-jsonl-loss")
     GraftJsonl.append(dir, "t.jsonl", (0 until 4).map(i => s"""{"i":$i}"""))
     GraftJsonl.append(dir, "gone.jsonl", Seq("""{"i":9}"""))
     GraftJsonlSourceSpec.reset()
@@ -156,7 +156,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = freshDir()
-    val ckpt = Files.createTempDirectory("graft-jsonl-sink-ckpt").toString
+    val ckpt = tempDir("graft-jsonl-sink-ckpt")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
     def mk() = in.toDF().selectExpr("""concat('{"id":', value, '}') AS value""")
       .writeStream.format("graft-jsonl").option("path", dir)
@@ -202,7 +202,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
     def mkProducer(in: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]) =
       in.toDF().selectExpr("""concat('{"id":', value, '}') AS value""")
         .writeStream.format("graft-jsonl").option("path", dir)
-        .option("checkpointLocation", Files.createTempDirectory("graft-jsonl-mw").toString)
+        .option("checkpointLocation", tempDir("graft-jsonl-mw"))
         .start()
     val inA = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
     val inB = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
@@ -322,10 +322,10 @@ class GraftJsonlSourceSpec extends SparkTestBase {
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
     val producer = in.toDF().selectExpr("""concat('{"id":', value, '}') AS value""")
       .writeStream.format("graft-jsonl").option("path", dir)
-      .option("checkpointLocation", Files.createTempDirectory("graft-jsonl-p").toString)
+      .option("checkpointLocation", tempDir("graft-jsonl-p"))
       .start()
     GraftJsonlSourceSpec.reset()
-    val consumer = startTail(dir, Files.createTempDirectory("graft-jsonl-c").toString)
+    val consumer = startTail(dir, tempDir("graft-jsonl-c"))
     try {
       in.addData(0L until 30L)
       producer.processAllAvailable()
@@ -342,7 +342,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
 
   test("rotation of a fully-consumed segment is not data loss; its offset entry retires") {
     val dir = freshDir()
-    val ckpt = Files.createTempDirectory("graft-jsonl-rotate").toString
+    val ckpt = tempDir("graft-jsonl-rotate")
     GraftJsonl.append(dir, "old.jsonl", Seq("""{"i":0}""", """{"i":1}"""))
     GraftJsonl.append(dir, "live.jsonl", Seq("""{"i":2}"""))
     GraftJsonlSourceSpec.reset()
@@ -376,7 +376,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
 
   test("retireConsumed=false carries a vanished consumed entry silently (still no failure)") {
     val dir = freshDir()
-    val ckpt = Files.createTempDirectory("graft-jsonl-carry").toString
+    val ckpt = tempDir("graft-jsonl-carry")
     GraftJsonl.append(dir, "old.jsonl", Seq("""{"i":0}"""))
     GraftJsonlSourceSpec.reset()
     val q = startTail(dir, ckpt, Map("retireConsumed" -> "false"))
@@ -400,7 +400,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
 
   test("retentionMs: the source itself retires consumed segments; offsets stay bounded") {
     val dir = freshDir()
-    val ckpt = Files.createTempDirectory("graft-jsonl-retention").toString
+    val ckpt = tempDir("graft-jsonl-retention")
     (0 until 4).foreach(i => GraftJsonl.append(dir, s"r$i.jsonl", Seq(s"""{"i":$i}""")))
     GraftJsonlSourceSpec.reset()
     val q = startTail(dir, ckpt, Map("retentionMs" -> "0")) // strict + immediate retirement
@@ -437,9 +437,9 @@ class GraftJsonlSourceSpec extends SparkTestBase {
   test("retentionProperty: a live config edit tightens the horizon at the next trigger, no restart") {
     import graft.config._
     val dir = freshDir()
-    val ckpt = Files.createTempDirectory("graft-jsonl-ret-prop").toString
+    val ckpt = tempDir("graft-jsonl-ret-prop")
     (0 until 3).foreach(i => GraftJsonl.append(dir, s"p$i.jsonl", Seq(s"""{"i":$i}""")))
-    val conf = Files.createTempFile("graft-ret-prop", ".conf")
+    val conf = tempFile("graft-ret-prop", ".conf")
     java.nio.file.Files.writeString(conf, "# no retention override yet\n")
     val supplier = new FilePropertySupplier(conf, pollMillis = 25L)
     val dyn = new DynamicProperty(GraftJsonl.RetentionMsProperty,
@@ -725,7 +725,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
     // end-to-end: the split read delivers every record exactly once, and a
     // subsequent append resumes exactly
     GraftJsonlSourceSpec.reset()
-    val q = startTail(dir, Files.createTempDirectory("graft-jsonl-split-ckpt").toString,
+    val q = startTail(dir, tempDir("graft-jsonl-split-ckpt"),
       Map("maxSplitBytes" -> "2048"))
     try {
       q.processAllAvailable()
@@ -742,7 +742,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
     val dir = freshDir()
     GraftJsonl.append(dir, "z.jsonl", (0 until 5).map(i => s"""{"i":$i}"""))
     GraftJsonlSourceSpec.reset()
-    val q = startTail(dir, Files.createTempDirectory("graft-jsonl-latest").toString,
+    val q = startTail(dir, tempDir("graft-jsonl-latest"),
       Map("startingOffsets" -> "latest"))
     try {
       q.processAllAvailable()

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -23,7 +22,7 @@ object GraftKafkaSourceSpec {
 
 class GraftKafkaSourceSpec extends SparkTestBase {
 
-  private def freshRoot(): String = Files.createTempDirectory("graft-kafka-spec").toString
+  private def freshRoot(): String = tempDir("graft-kafka-spec")
 
   private def produceN(root: String, topic: String, part: Int, n: Int, prefix: String = "k"): Unit =
     (0 until n).foreach { i =>
@@ -82,7 +81,7 @@ class GraftKafkaSourceSpec extends SparkTestBase {
     produceN(root, "st", 0, 8)
     produceN(root, "st", 1, 8)
     GraftKafkaSourceSpec.reset()
-    val ckpt = Files.createTempDirectory("graft-kafka-ckpt").toString
+    val ckpt = tempDir("graft-kafka-ckpt")
     def start() = spark.readStream.format("graft-kafka")
       .option("root", root).option("subscribe", "st")
       .option("maxOffsetsPerTrigger", "6")
@@ -134,7 +133,7 @@ class GraftKafkaSourceSpec extends SparkTestBase {
       .option("startingOffsets", "latest")
       .load()
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("graft-kafka-lt").toString)
+      .option("checkpointLocation", tempDir("graft-kafka-lt"))
       .foreachBatch { (batch: DataFrame, id: Long) =>
         batch.select(col("key").cast("string"), col("offset"), col("partition"), col("topic"))
           .collect().foreach(r => GraftKafkaSourceSpec.delivered.add(
@@ -161,7 +160,7 @@ class GraftKafkaSourceSpec extends SparkTestBase {
         col("_2").cast("binary").as("value"))
       .writeStream.format("graft-kafka")
       .option("root", root).option("topic", "out")
-      .option("checkpointLocation", Files.createTempDirectory("graft-kafka-w").toString)
+      .option("checkpointLocation", tempDir("graft-kafka-w"))
       .start()
     try {
       in.addData(("a", "1"), ("b", "2"), ("c", "3"))
@@ -199,7 +198,7 @@ class GraftKafkaSourceSpec extends SparkTestBase {
       .option("maxOffsetsPerTrigger", "2") // < 4 backlogged partitions
       .load()
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("graft-kafka-tiny").toString)
+      .option("checkpointLocation", tempDir("graft-kafka-tiny"))
       .foreachBatch { (batch: DataFrame, id: Long) =>
         batch.select(col("key").cast("string"), col("offset"), col("partition"), col("topic"))
           .collect().foreach(r => GraftKafkaSourceSpec.delivered.add(

@@ -112,7 +112,7 @@ class RateLimiterSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     RateLimiterSpec.blocked.clear()
 
-    val cfg = Files.createTempFile("graft-blocklist", ".properties")
+    val cfg = tempFile("graft-blocklist", ".properties")
     Files.writeString(cfg, "decaton.ignore.keys=\n")
     val supplier = new FilePropertySupplier(cfg, pollMillis = 50L)
     val prop = new DynamicProperty(EngineProperties.IgnoreKeys, Seq.empty[String])
@@ -169,7 +169,7 @@ class RateLimiterSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     RateLimiterSpec.processed.clear()
 
-    val cfg = Files.createTempFile("graft-rate", ".properties")
+    val cfg = tempFile("graft-rate", ".properties")
     Files.writeString(cfg, "decaton.processing.rate.per.partition=0\n")
     val supplier = new FilePropertySupplier(cfg, pollMillis = 50L)
     val prop = new DynamicProperty(EngineProperties.ProcessingRate, 0L)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -20,7 +19,7 @@ import graft.streaming.SubscriptionStates._
   */
 class SubscriptionStateSpec extends SparkTestBase {
 
-  private def freshRoot(): String = Files.createTempDirectory("graft-substate").toString
+  private def freshRoot(): String = tempDir("graft-substate")
 
   private def produceN(root: String, topic: String, part: Int, n: Int, prefix: String = "k"): Unit =
     (0 until n).foreach { i =>
@@ -60,7 +59,7 @@ class SubscriptionStateSpec extends SparkTestBase {
       new SubscriptionStateListener { def onChange(s: State): Unit = sys.error("user bug") })
     try {
       val q = startQuery(root, "life", "life-q",
-        Files.createTempDirectory("graft-substate-ckpt").toString)
+        tempDir("graft-substate-ckpt"))
       q.processAllAvailable()
       awaitHistory(bridge, "INITIALIZING then RUNNING expected after the first batch")(
         _.take(2) == Seq(INITIALIZING, RUNNING))
@@ -86,7 +85,7 @@ class SubscriptionStateSpec extends SparkTestBase {
         .option("root", root).option("subscribe", "grow")
         .load()
         .writeStream.queryName("grow-q")
-        .option("checkpointLocation", Files.createTempDirectory("graft-substate-grow").toString)
+        .option("checkpointLocation", tempDir("graft-substate-grow"))
         .foreachBatch { (batch: DataFrame, id: Long) =>
           import org.apache.spark.sql.functions._
           batch.select(col("key").cast("string"), col("offset"), col("partition"), col("topic"))
@@ -119,14 +118,14 @@ class SubscriptionStateSpec extends SparkTestBase {
     // the jsonl medium's flat {"file":pos} offsets must feed the signature
     // exactly like kafka's nested shape: a new segment joining the tail IS
     // the medium's partition-added event
-    val dir = Files.createTempDirectory("graft-substate-jsonl").toString
+    val dir = tempDir("graft-substate-jsonl")
     graft.sources.jsonl.GraftJsonl.append(dir, "a.jsonl", Seq("""{"i":1}"""))
     val bridge = SubscriptionStates.attach(spark, "jsonl-q")
     try {
       val q = spark.readStream.format("graft-jsonl").option("path", dir)
         .load()
         .writeStream.queryName("jsonl-q")
-        .option("checkpointLocation", Files.createTempDirectory("graft-substate-jck").toString)
+        .option("checkpointLocation", tempDir("graft-substate-jck"))
         .foreachBatch { (_: DataFrame, _: Long) => () }
         .start()
       try {
@@ -145,7 +144,7 @@ class SubscriptionStateSpec extends SparkTestBase {
     val root = freshRoot()
     BrokerLog.createTopic(root, "re", 2)
     produceN(root, "re", 0, 2)
-    val ckpt = Files.createTempDirectory("graft-substate-re").toString
+    val ckpt = tempDir("graft-substate-re")
     val bridge = SubscriptionStates.attach(spark, "re-q")
     try {
       val q1 = startQuery(root, "re", "re-q", ckpt)
@@ -176,7 +175,7 @@ class SubscriptionStateSpec extends SparkTestBase {
     val root = freshRoot()
     BrokerLog.createTopic(root, "fast", 1)
     produceN(root, "fast", 0, 2)
-    val ckpt = Files.createTempDirectory("graft-substate-fast").toString
+    val ckpt = tempDir("graft-substate-fast")
     val bridge = SubscriptionStates.attach(spark, "fast-q")
     try {
       val q1 = startQuery(root, "fast", "fast-q", ckpt)
@@ -205,7 +204,7 @@ class SubscriptionStateSpec extends SparkTestBase {
     BrokerLog.createTopic(root, "adopt", 1)
     produceN(root, "adopt", 0, 2)
     val q = startQuery(root, "adopt", "adopt-q",
-      Files.createTempDirectory("graft-substate-adopt").toString)
+      tempDir("graft-substate-adopt"))
     try {
       q.processAllAvailable() // the query is already running; no bridge yet
       val bridge = SubscriptionStates.attach(spark, "adopt-q")
@@ -228,7 +227,7 @@ class SubscriptionStateSpec extends SparkTestBase {
     produceN(root, "mine", 0, 1)
     val bridge = SubscriptionStates.attach(spark, "some-other-query")
     val q = startQuery(root, "mine", "mine-q",
-      Files.createTempDirectory("graft-substate-wrongq").toString)
+      tempDir("graft-substate-wrongq"))
     try {
       q.processAllAvailable()
       val e = intercept[IllegalArgumentException] { bridge.stopGracefully(q) }
