@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 import java.util.concurrent.locks.LockSupport
-import java.util.concurrent.{ConcurrentSkipListMap, Executors, LinkedBlockingQueue, TimeoutException}
+import java.util.concurrent.{Executors, LinkedBlockingQueue, TimeoutException}
 
 import scala.collection.mutable
 import scala.concurrent.duration._
@@ -321,99 +321,212 @@ object AsyncProcessing {
   /** Hashed timing wheel (Varghese & Lauck, SOSP '87) for simulating async
     * I/O latency at scale. ScheduledThreadPoolExecutor parks per fire (and
     * the kernel adds ~50 µs timer slack per park), capping it near 100k
-    * fires/s; the wheel parks once per due bucket and fires the whole
-    * bucket, so millions of outstanding timers complete at memory speed.
+    * fires/s; a wheel fires a whole bucket per turn, so millions of
+    * outstanding timers complete at memory speed.
     *
-    * Deadlines are on the monotonic clock. A deadline belongs to the
-    * [[TickNs]] tick it rounds UP to, and a bucket fires only once
-    * `floor(now / TickNs)` has reached its tick, so no body fires before
-    * its deadline. The ticker parks until its earliest bucket is due (at
-    * most [[MaxParkNs]]), and with nothing pending until a schedule unparks
-    * it. Draining a bucket first swaps in the [[Closed]] sentinel: a body
-    * that lands on a closed bucket is due, so it fires inline, and the
-    * drained bucket leaves the map at once.
+    * Each wheel is its own ticker thread, the only thread that touches its
+    * ring: [[RingSize]] buckets of one [[TickNs]] tick each, bucket `i`
+    * holding the timers whose tick is `≡ i` modulo the ring. A timer keeps
+    * its absolute tick, so one further out than the ring's span stays in
+    * its bucket for as many laps as it needs. Other threads hand timers
+    * over through a lock-free inbox; a body running on the ticker (a
+    * chain's next hop) adds its timer to the ring directly.
+    *
+    * Deadlines are on the monotonic clock. A deadline belongs to the tick
+    * it rounds UP to, and a tick's timers fire only once
+    * `floor(System.nanoTime() / TickNs)` has reached it, so none fires
+    * before its deadline. The ticker parks until its next tick is due
+    * minus the park overshoot it has measured, then spins out the rest
+    * with `Thread.onSpinWait`, watching its inbox for an earlier deadline;
+    * a schedule earlier than the one the parked ticker waits for unparks
+    * it. With nothing pending it parks with no deadline.
     */
-  private final class Wheel {
-    private val buckets = new ConcurrentSkipListMap[Long, AtomicReference[Timer]]()
-    /** The tick the parked ticker wakes for: a schedule into an earlier
-      * tick unparks it. Long.MinValue while it runs, Long.MaxValue while
-      * nothing is pending.
+  private final class Wheel extends Thread(null, null, "graft-async-wheel", 1 << 20) {
+    private val ring = new Array[Timer](RingSize)
+    /** Timers in the ring. */
+    private var pending = 0
+    /** Every tick up to the cursor has fired. */
+    private var cursor = Math.floorDiv(System.nanoTime(), TickNs)
+    /** Timers scheduled by other threads, CAS-pushed as a list. */
+    private val inbox = new AtomicReference[Timer]()
+    /** The tick the parked ticker wakes for (Long.MaxValue: none); a
+      * schedule into an earlier tick unparks it. Long.MinValue while the
+      * ticker runs or spins, when it watches the inbox itself.
       */
     @volatile private var wakeTick = Long.MinValue
-    private val ticker = new Thread(null, () => while (true) turn(), "graft-async-wheel", 1 << 20)
-    ticker.setDaemon(true)
-    ticker.start()
+    /** How much later than asked a park returns: a smoothed measurement. */
+    private var overshootNs = 50000L
+    /** Spin time the ticker may still spend, and when it was last earned. */
+    private var credit = 0L
+    private var creditAt = System.nanoTime()
+    setDaemon(true)
+    start()
 
-    /** Fire every due bucket, then park until the next one is due. */
-    private def turn(): Unit = {
-      val now = Math.floorDiv(System.nanoTime(), TickNs)
-      var due = buckets.firstEntry()
-      while (due != null && due.getKey <= now) {
-        var t = due.getValue.getAndSet(Closed)
-        buckets.remove(due.getKey, due.getValue)
+    override def run(): Unit = while (true) {
+      advance(Math.floorDiv(System.nanoTime(), TickNs))
+      var t = inbox.getAndSet(null)
+      while (t != null) { val n = t.next; add(t); t = n }
+      await(nextTick())
+    }
+
+    /** Adds a timer; on the ticker thread only. A due timer fires at once. */
+    def add(t: Timer): Unit =
+      if (t.tick - cursor <= 0) fire(t)
+      else {
+        val i = (t.tick & Mask).toInt
+        t.next = ring(i)
+        ring(i) = t
+        pending += 1
+      }
+
+    /** Hands a timer to this wheel from another thread. */
+    def offer(t: Timer): Unit = {
+      do t.next = inbox.get while (!inbox.compareAndSet(t.next, t))
+      if (t.tick < wakeTick) LockSupport.unpark(this)
+    }
+
+    /** Fires the buckets of the ticks after the cursor up to `now`, a lap
+      * at most: every timer of those ticks, and none of a later lap.
+      */
+    private def advance(now: Long): Unit = {
+      var k = if (pending == 0) now + 1 else math.max(cursor + 1, now - Mask)
+      cursor = now
+      while (k <= now) {
+        val i = (k & Mask).toInt
+        var t = ring(i)
+        ring(i) = null
         while (t != null) {
-          // a throwing body must not kill the ticker (every other timer
-          // on this wheel would silently never fire again)
-          try t.body() catch { case scala.util.control.NonFatal(_) => }
+          val n = t.next
+          if (t.tick - now <= 0) { pending -= 1; fire(t) }
+          else { t.next = ring(i); ring(i) = t }
+          t = n
+        }
+        k += 1
+      }
+    }
+
+    /** The next tick with a timer: the first bucket after the cursor that
+      * holds a timer of its own tick, or, when every timer is a lap or more
+      * away, the earliest of them all. Long.MaxValue with nothing pending.
+      */
+    private def nextTick(): Long = {
+      var earliest = Long.MaxValue
+      var k = cursor + 1
+      while (pending > 0 && k <= cursor + RingSize) {
+        var t = ring((k & Mask).toInt)
+        while (t != null) {
+          if (t.tick == k) return k
+          earliest = math.min(earliest, t.tick)
           t = t.next
         }
-        due = buckets.firstEntry()
+        k += 1
       }
-      val next = if (due == null) Long.MaxValue else due.getKey
-      wakeTick = next
-      // a schedule that read wakeTick before this write did not unpark, but
-      // its bucket is in the map by then: look once more before parking
-      val first = buckets.firstEntry()
-      if (first == null || first.getKey >= next) {
-        if (next == Long.MaxValue) LockSupport.park(this)
-        else LockSupport.parkNanos(this, math.min(MaxParkNs, next * TickNs - System.nanoTime()))
-      }
-      wakeTick = Long.MinValue
+      earliest
     }
 
-    def schedule(deadlineNanos: Long)(body: () => Unit): Unit = {
-      val tick = -Math.floorDiv(-deadlineNanos, TickNs)
-      if (tick <= Math.floorDiv(System.nanoTime(), TickNs)) body() // already due: fire inline
-      else {
-        val bucket = buckets.computeIfAbsent(tick, _ => new AtomicReference[Timer]())
-        var head = bucket.get
-        while ((head ne Closed) && !bucket.compareAndSet(head, new Timer(body, head))) head = bucket.get
-        if (head eq Closed) body() // drained while we pushed: due, fire inline
-        else if (tick < wakeTick) LockSupport.unpark(ticker)
+    /** Waits until `tick` is due (Long.MaxValue: no tick), or until the
+      * inbox has timers. A tick further out than the measured overshoot
+      * gets a park until that much before it, and the rest is spun out. A
+      * nearer one is spun out while the ticker has spin credit, which it
+      * earns at 1/[[SpinShare]] of the wall time, banking at most
+      * [[SpinCreditCapNs]]; without credit it parks as briefly as the
+      * kernel allows, and the ticks due meanwhile fire, late, when it
+      * wakes. So sparse timers fire on time and a dense stream costs at
+      * most that share of a core in spinning.
+      */
+    private def await(tick: Long): Unit = {
+      val due = if (tick == Long.MaxValue) Long.MaxValue else tick * TickNs
+      var now = System.nanoTime()
+      credit = math.min(SpinCreditCapNs, credit + (now - creditAt) / SpinShare)
+      creditAt = now
+      val gap = due - now
+      if (tick == Long.MaxValue || gap > overshootNs || (gap > 0 && credit < gap)) {
+        wakeTick = tick
+        // an offer that read wakeTick before that write has pushed by now
+        if (inbox.get == null) {
+          if (tick == Long.MaxValue) LockSupport.park(this)
+          else {
+            val ask = math.max(gap - overshootNs, 1L)
+            LockSupport.parkNanos(this, ask)
+            val over = System.nanoTime() - now - ask
+            // an unpark returns early: only a full park measures the overshoot
+            if (over >= 0) overshootNs += (math.min(over, MaxOvershootNs) - overshootNs) >> 3
+          }
+        }
+        wakeTick = Long.MinValue
+        now = System.nanoTime()
+      }
+      // spin out only the last stretch: a park that returned early (an
+      // unpark, or spuriously) goes round the loop again instead
+      if (tick != Long.MaxValue && due - now <= overshootNs) {
+        val from = now
+        while (due - now > 0 && inbox.get == null) {
+          Thread.onSpinWait()
+          now = System.nanoTime()
+        }
+        credit -= now - from
       }
     }
+
+    private def fire(t: Timer): Unit =
+      // a throwing body must not kill the ticker (every other timer on this
+      // wheel would silently never fire again)
+      try t.fire() catch { case scala.util.control.NonFatal(_) => }
   }
 
-  /** A bucket's timers, pushed by CAS as a list. */
-  private final class Timer(val body: () => Unit, val next: Timer)
-  /** Head of a drained bucket: pushes onto it fail. */
-  private val Closed = new Timer(() => (), null)
-  private val TickNs = 100000L
-  private val MaxParkNs = 1000000L
+  /** A pending `delayed` call: the tick its deadline rounds up to, and
+    * what firing does.
+    */
+  private abstract class Timer(val tick: Long) {
+    var next: Timer = _
+    def fire(): Unit
+  }
+  /** 10 µs ticks; a ring of 4,096 of them spans ~41 ms. */
+  private val TickNs = 10000L
+  private val RingSize = 4096
+  private val Mask = RingSize - 1L
+  /** A ticker spins at most one part in this many of the wall time... */
+  private val SpinShare = 16L
+  /** ...and banks at most this much of it while timers are sparse. */
+  private val SpinCreditCapNs = 500000L
+  /** A park that returns this much late is an outlier, not the kernel's slack. */
+  private val MaxOvershootNs = 1000000L
+  /** The longest delay: deadlines stay far from overflowing `nanoTime` arithmetic. */
+  private val MaxDelayNs = Long.MaxValue / 4
 
   /** Independent wheel shards: one ticker thread fires ~250k bodies/s
     * (promise completion + next-hop scheduling run inline on the ticker).
-    * Two, not more: each shard wakes up to once per tick, and four shards
-    * cost about 30% more CPU per task on `async_io` (HISTORY.md, "A
-    * precise timer wheel").
+    * Two, not more: every shard's ticker pays its own wakes and spinning,
+    * and four shards of the earlier 0.1 ms wheel cost about 30% more CPU
+    * per task on `async_io` (HISTORY.md, "A precise timer wheel").
     */
   private lazy val wheels: Array[Wheel] = Array.fill(2)(new Wheel)
 
   /** A future that completes once `delayMillis` have passed, without
     * holding a thread. It never completes early: the deadline is
-    * `System.nanoTime()` plus the delay, and the wheel fires no bucket
-    * before its deadline. It completes late by the ticker's wake, 0.1 ms
-    * of tick rounding plus the kernel's park slack, which has no fixed
-    * bound; a chain of n delays is late by the sum.
+    * `System.nanoTime()` plus the delay, and no timer fires before its
+    * deadline. It completes late by the ticker's wake: the rest of the
+    * 10 µs tick its deadline rounds up to, plus up to one park (~60 µs)
+    * while timers are dense and the ticker parks instead of spinning. A
+    * descheduled ticker adds more, so there is no fixed bound; a chain of
+    * n delays is late by the sum. A delay beyond ~73 years is taken as
+    * that long, so `delayed(Long.MaxValue)` never completes.
     */
   def delayed[U](delayMillis: Long)(value: => U): Future[U] = {
     val p = scala.concurrent.Promise[U]()
-    val w = wheels(java.util.concurrent.ThreadLocalRandom.current().nextInt(wheels.length))
-    // Try(value): a throwing body must FAIL the future — trySuccess would
+    val delayNs = math.min(MILLISECONDS.toNanos(math.max(delayMillis, 0L)), MaxDelayNs)
+    // Try(value): a throwing body must FAIL the future; trySuccess would
     // evaluate the by-name value inside the wheel ticker, whose NonFatal
     // guard discards the exception and leaves the promise pending forever
-    w.schedule(System.nanoTime() + MILLISECONDS.toNanos(delayMillis))(() =>
-      p.tryComplete(scala.util.Try(value)))
+    val t = new Timer(-Math.floorDiv(-(System.nanoTime() + delayNs), TickNs)) {
+      def fire(): Unit = p.tryComplete(scala.util.Try(value))
+    }
+    Thread.currentThread() match {
+      case w: Wheel => w.add(t) // a body running on a ticker: its own ring
+      case _ =>
+        if (t.tick - Math.floorDiv(System.nanoTime(), TickNs) <= 0) t.fire() // already due: fire inline
+        else wheels(Math.floorMod(t.tick, wheels.length.toLong).toInt).offer(t)
+    }
     p.future
   }
 }

@@ -265,6 +265,82 @@ class AsyncProcessingSpec extends SparkTestBase {
     assert(grew < 5.0, f"the idle wheel's tickers used $grew%.2f ms of CPU in 1 s")
   }
 
+  test("delayed fires within 50 µs of its deadline at the median, chained hops included") {
+    import scala.concurrent.duration._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    implicit val ec: ExecutionContext = ExecutionContext.parasitic
+    // 4 threads x 5,000 calls of 1-5 ms; each body reads the clock when it
+    // fires. Each thread pauses 0.2 ms after every 50 calls, so that the
+    // callers leave the tickers a core on a 4-core host. The first round
+    // warms the JIT and is not held to the bound.
+    def direct(): Array[Long] = {
+      val calls = 5000
+      val late = new Array[Long](4 * calls)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      val fs = try {
+        (0 until 4).map { w =>
+          pool.submit(() => (0 until calls).map { i =>
+            val d = 1L + (w + i) % 5
+            val start = System.nanoTime()
+            val f = AsyncProcessing.delayed(d)(System.nanoTime()).map(fired => late(w * calls + i) = fired - start - d * 1000000L)
+            if (i % 50 == 49) java.util.concurrent.locks.LockSupport.parkNanos(200000L)
+            f
+          })
+        }.flatMap(_.get().toSeq)
+      } finally pool.shutdown()
+      fs.foreach(f => Await.result(f, 30.seconds))
+      late
+    }
+    direct()
+    val late = direct()
+    // 400 chains of five hops: hops 2-5 are scheduled by the previous hop's
+    // callback, which runs on the ticker that fired it
+    val chains = 400
+    val hops = 5
+    val hopLate = new Array[Long](chains * hops)
+    val onTicker = new AtomicInteger(0)
+    val chained = (0 until chains).map { c =>
+      val d = 1L + c % 3
+      (0 until hops).foldLeft(Future.unit) { (acc, h) =>
+        acc.flatMap { _ =>
+          if (h > 0 && Thread.currentThread().getName == "graft-async-wheel") onTicker.incrementAndGet()
+          val start = System.nanoTime()
+          AsyncProcessing.delayed(d)(System.nanoTime()).map(fired => hopLate(c * hops + h) = fired - start - d * 1000000L)
+        }
+      }
+    }
+    chained.foreach(f => Await.result(f, 30.seconds))
+    assert(onTicker.get == chains * (hops - 1), s"only ${onTicker.get} chained hops were scheduled on a ticker")
+    def median(a: Array[Long]) = a.sorted.apply(a.length / 2) / 1000.0
+    for ((name, a) <- Seq("direct calls" -> late, "chained hops" -> hopLate)) {
+      assert(a.forall(_ >= 0), s"${a.count(_ < 0)} $name fired before their deadline")
+      assert(median(a) < 50.0, f"$name: median lateness ${median(a)}%.1f µs")
+    }
+  }
+
+  test("a deadline beyond the ring's span fires once, never early, within 1 ms") {
+    import scala.concurrent.duration._
+    import scala.concurrent.Await
+    // near timers keep the tickers turning over every bucket while the far
+    // one waits out its laps
+    val near = (1 to 600).map(i => AsyncProcessing.delayed(i.toLong)(()))
+    val fires = new AtomicInteger(0)
+    val start = System.nanoTime()
+    val far = AsyncProcessing.delayed(500L) { fires.incrementAndGet(); System.nanoTime() }
+    val late = Await.result(far, 5.seconds) - start - 500000000L
+    near.foreach(f => Await.ready(f, 5.seconds))
+    Thread.sleep(100) // two more laps of the ring
+    assert(fires.get == 1, s"the far timer fired ${fires.get} times")
+    assert(late >= 0 && late < 1000000L, f"the far timer fired ${late / 1e3}%.1f µs late")
+  }
+
+  test("delayed(Long.MaxValue) is still pending after 100 ms") {
+    // the deadline saturates instead of overflowing into the past
+    val f = AsyncProcessing.delayed(Long.MaxValue)(())
+    Thread.sleep(100)
+    assert(!f.isCompleted, "a huge delay fired at once")
+  }
+
   test("async keyed map keeps each key's input order and delivers every record") {
     import spark.implicits._
     val tasks = spark.range(500).map(i => (s"k${i % 7}", i))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Export
@@ -15,7 +13,7 @@ class ExportSpec extends SparkTestBase {
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
   test("writeShards lays every row down in (order_hash, id) order per shard") {
-    val dir = Files.createTempDirectory("graft-shards-").toString
+    val dir = tempDir("graft-shards-")
     Export.writeShards(docs, col("doc_id"), nShards = 8, epochSalt = 3L, dir)
 
     val expected = Export.epochOrder(docs, col("doc_id"), nShards = 8, epochSalt = 3L)
@@ -42,8 +40,8 @@ class ExportSpec extends SparkTestBase {
   }
 
   test("shard contents are a pure function of (corpus, salt) and move with the salt") {
-    val dirA = Files.createTempDirectory("graft-shards-a").toString
-    val dirB = Files.createTempDirectory("graft-shards-b").toString
+    val dirA = tempDir("graft-shards-a")
+    val dirB = tempDir("graft-shards-b")
     // different input partitioning, same deal → identical shard sequences
     Export.writeShards(docs.repartition(7), col("doc_id"), 4, 11L, dirA)
     Export.writeShards(docs.coalesce(1), col("doc_id"), 4, 11L, dirB)
@@ -56,7 +54,7 @@ class ExportSpec extends SparkTestBase {
     }
 
     // a new salt re-deals: at least one shard sequence must differ
-    val dirC = Files.createTempDirectory("graft-shards-c").toString
+    val dirC = tempDir("graft-shards-c")
     Export.writeShards(docs, col("doc_id"), 4, 12L, dirC)
     val same = (0 until 4).forall { k =>
       val a = spark.read.parquet(s"$dirA/shard=$k").select("doc_id")
@@ -69,7 +67,7 @@ class ExportSpec extends SparkTestBase {
   }
 
   test("shardManifest totals agree with the written shards") {
-    val dir = Files.createTempDirectory("graft-shards-m").toString
+    val dir = tempDir("graft-shards-m")
     Export.writeShards(docs, col("doc_id"), nShards = 8, epochSalt = 3L, dir)
     val manifest = Export.shardManifest(
         docs, col("doc_id"), col("text"), nShards = 8, epochSalt = 3L)

@@ -2,14 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.config._
 
-class FilePropertySpec extends AnyFunSuite {
+class FilePropertySpec extends SparkTestBase {
 
   test("file supplier provides typed values and hot-reloads bound properties (P3)") {
-    val f = Files.createTempFile("graft-props", ".conf")
+    val f = tempFile("graft-props", ".conf")
     Files.writeString(f, "decaton.processing.rate.per.partition=100\n# comment\ndecaton.ignore.keys=a,b\n")
     val supplier = new FilePropertySupplier(f, pollMillis = 50L)
     try {
@@ -84,7 +82,7 @@ class FilePropertySpec extends AnyFunSuite {
   test("deferred-complete timeout property drives CompletionPolicy hot-reload (T4 binding)") {
     import scala.concurrent.duration._
     import graft.streaming.{CompletionPolicy, TimeoutDecision}
-    val f = Files.createTempFile("graft-props", ".conf")
+    val f = tempFile("graft-props", ".conf")
     // reference default -1 = reaper disabled → unbounded await
     val supplier = new FilePropertySupplier(f, pollMillis = 30L)
     try {
@@ -137,7 +135,7 @@ class FilePropertySpec extends AnyFunSuite {
   }
 
   test("uri fetcher serves a file: source through the URL path (offline http(s) analog)") {
-    val f = Files.createTempFile("graft-remote", ".conf")
+    val f = tempFile("graft-remote", ".conf")
     Files.writeString(f, "decaton.max.pending.records=1234\n")
     val supplier = RemotePropertySupplier.uri(f.toUri, pollMillis = 30L)
     try {
@@ -152,7 +150,7 @@ class FilePropertySpec extends AnyFunSuite {
   }
 
   test("a malformed raw value behaves as unset (default), never crashes resolve") {
-    val f = Files.createTempFile("graft-props", ".conf")
+    val f = tempFile("graft-props", ".conf")
     Files.writeString(f,
       "decaton.processing.rate.per.partition=1oo\ndecaton.partition.concurrency 4\n")
     val supplier = new FilePropertySupplier(f, pollMillis = 50L)
@@ -170,7 +168,7 @@ class FilePropertySpec extends AnyFunSuite {
   }
 
   test("removing a supplied key reverts the bound property to its default; unbind stops re-driving") {
-    val f = Files.createTempFile("graft-props", ".conf")
+    val f = tempFile("graft-props", ".conf")
     Files.writeString(f, "decaton.processing.rate.per.partition=0\n")
     val supplier = new FilePropertySupplier(f, pollMillis = 30L)
     try {
@@ -194,7 +192,7 @@ class FilePropertySpec extends AnyFunSuite {
   }
 
   test("same-millisecond rewrites are detected (content-hash version, not mtime)") {
-    val f = Files.createTempFile("graft-props", ".conf")
+    val f = tempFile("graft-props", ".conf")
     Files.writeString(f, "decaton.processing.rate.per.partition=1\n")
     val supplier = new FilePropertySupplier(f, pollMillis = 25L)
     try {
@@ -212,7 +210,7 @@ class FilePropertySpec extends AnyFunSuite {
   }
 
   test("a key present but UNPARSEABLE keeps the bound property at last-good (reference checkingSet)") {
-    val f = Files.createTempFile("graft-props", ".conf")
+    val f = tempFile("graft-props", ".conf")
     Files.writeString(f, "decaton.processing.rate.per.partition=100\n")
     val supplier = new FilePropertySupplier(f, pollMillis = 25L)
     try {

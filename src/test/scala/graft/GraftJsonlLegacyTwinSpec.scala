@@ -3,20 +3,14 @@ package graft.sources.jsonl
 import java.io.File
 import java.nio.file.Files
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestBase
 
 /** Checkpoint-compatibility of the tagged streaming segment names: a
   * checkpoint created before the query tag landed in the name replays its
   * last epoch under the NEW name — landing it must delete the legacy-named
   * twin or the epoch's records read back twice.
   */
-class GraftJsonlLegacyTwinSpec extends AnyFunSuite {
-
-  private def tempDir(): String = {
-    val d = Files.createTempDirectory("graft-jsonl-legacy").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+class GraftJsonlLegacyTwinSpec extends SparkTestBase {
 
   private def land(dir: String, tag: String, part: Int, lines: String): String = {
     val finalName = f"seg-$tag-$part%04d.jsonl"
@@ -28,7 +22,7 @@ class GraftJsonlLegacyTwinSpec extends AnyFunSuite {
   }
 
   test("landing a tagged streaming segment deletes its legacy-named twin") {
-    val dir = tempDir()
+    val dir = tempDir("graft-jsonl-legacy")
     // the pre-tag checkpoint's output for epoch 3, partition 1
     val legacy = new File(dir, "seg-000003-0001.jsonl")
     Files.writeString(legacy.toPath, "a\nb\n")
@@ -44,7 +38,7 @@ class GraftJsonlLegacyTwinSpec extends AnyFunSuite {
   }
 
   test("a same-numbered segment from an UNRELATED run survives (content differs)") {
-    val dir = tempDir()
+    val dir = tempDir("graft-jsonl-legacy")
     // an older untagged run's committed epoch-0 output shares the directory;
     // a fresh-checkpoint tagged query restarts its own epochs at 0 — its
     // landings must NOT reap the other run's data (ADVICE r13: the
@@ -67,7 +61,7 @@ class GraftJsonlLegacyTwinSpec extends AnyFunSuite {
   }
 
   test("batch-tagged landings never delete legacy-looking files") {
-    val dir = tempDir()
+    val dir = tempDir("graft-jsonl-legacy")
     val legacy = new File(dir, "seg-000001-0000.jsonl")
     Files.writeString(legacy.toPath, "x\n")
     // batch tags are 'b' + full uuid — the legacy-twin rule must not fire

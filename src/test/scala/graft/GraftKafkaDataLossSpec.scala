@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -45,9 +44,9 @@ class GraftKafkaDataLossSpec extends SparkTestBase {
   }
 
   test("failOnDataLoss=false resumes from the earliest available offset after truncation") {
-    val root = Files.createTempDirectory("graft-dl").toString
+    val root = tempDir("graft-dl")
     BrokerLog.createTopic(root, "dl", 1)
-    val ckpt = Files.createTempDirectory("graft-dl-ckpt").toString
+    val ckpt = tempDir("graft-dl-ckpt")
     GraftKafkaDataLossSpec.reset()
 
     produce(root, "dl", 20)
@@ -70,9 +69,9 @@ class GraftKafkaDataLossSpec extends SparkTestBase {
   }
 
   test("failOnDataLoss=true fails the query loudly on the same truncation") {
-    val root = Files.createTempDirectory("graft-dl2").toString
+    val root = tempDir("graft-dl2")
     BrokerLog.createTopic(root, "dl2", 1)
-    val ckpt = Files.createTempDirectory("graft-dl2-ckpt").toString
+    val ckpt = tempDir("graft-dl2-ckpt")
     GraftKafkaDataLossSpec.reset()
 
     produce(root, "dl2", 20)
@@ -92,9 +91,9 @@ class GraftKafkaDataLossSpec extends SparkTestBase {
   }
 
   test("full truncation is detected as loss, not mistaken for a fresh topic") {
-    val root = Files.createTempDirectory("graft-dl3").toString
+    val root = tempDir("graft-dl3")
     BrokerLog.createTopic(root, "dl3", 1)
-    val ckpt = Files.createTempDirectory("graft-dl3-ckpt").toString
+    val ckpt = tempDir("graft-dl3-ckpt")
     GraftKafkaDataLossSpec.reset()
 
     produce(root, "dl3", 5)

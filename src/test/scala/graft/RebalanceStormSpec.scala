@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,7 +24,7 @@ class RebalanceStormSpec extends SparkTestBase {
   test("3 instances × 8 partitions: restart one mid-run, all guarantees hold over 10k tasks") {
     val suite = graft.testing.GuaranteeSuite()
 
-    val root = Files.createTempDirectory("graft-storm").toString
+    val root = tempDir("graft-storm")
     val topic = "storm"
     val nPartitions = 8
     val nKeys = 200
@@ -35,7 +33,7 @@ class RebalanceStormSpec extends SparkTestBase {
 
     // instance → static partition assignment (disjoint, covering all 8)
     val assignments = Seq("""{"storm":[0,1,2]}""", """{"storm":[3,4,5]}""", """{"storm":[6,7]}""")
-    val checkpoints = assignments.map(_ => Files.createTempDirectory("graft-storm-ckpt").toString)
+    val checkpoints = assignments.map(_ => tempDir("graft-storm-ckpt"))
 
     def produce(from: Int, until: Int): Unit = {
       // per-key production order = id order (one broker partition per key)
@@ -97,14 +95,14 @@ class RebalanceStormSpec extends SparkTestBase {
     import graft.sources.jsonl.GraftJsonl
     val suite = graft.testing.GuaranteeSuite()
 
-    val dir = Files.createTempDirectory("graft-jsonl-storm").toString
+    val dir = tempDir("graft-jsonl-storm")
     val nFiles = 8
     val nKeys = 200
     val total = 10000
     def instanceOf(f: Int): Int = if (f < 3) 0 else if (f < 6) 1 else 2
     def fileName(f: Int): String = f"part-$f%02d.s${instanceOf(f)}.jsonl"
     val checkpoints = (0 until 3).map(_ =>
-      Files.createTempDirectory("graft-jsonl-storm-ckpt").toString)
+      tempDir("graft-jsonl-storm-ckpt"))
 
     def produce(from: Int, until: Int): Unit = {
       (from until until).foreach(i => suite.recordProduce(s"key-${i % nKeys}", i.toLong))

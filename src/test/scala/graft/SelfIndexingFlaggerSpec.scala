@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -55,13 +54,13 @@ class SelfIndexingFlaggerSpec extends SparkTestBase {
       val batches = cuts.sliding(2).map { case Seq(a, b) => rows.slice(a, b) }
         .filter(_.nonEmpty).toSeq
 
-      val indexDir = Files.createTempDirectory(s"graft-selfidx-$round").toString + "/idx"
+      val indexDir = tempDir(s"graft-selfidx-$round") + "/idx"
       val flagged = new ConcurrentLinkedQueue[Long]()
       val in = MemoryStream[(Long, Array[Float])]
       val q = StreamOps.selfIndexingPqFlagger(
         in.toDF().toDF("vec_id", "embedding"),
         col("vec_id"), col("embedding"), indexDir, cb, bands = 2,
-        checkpoint = Files.createTempDirectory(s"graft-selfidx-ckpt-$round").toString) {
+        checkpoint = tempDir(s"graft-selfidx-ckpt-$round")) {
         flags => flags.collect().foreach(r => flagged.add(r.getLong(0)))
       }
       try {
@@ -78,7 +77,7 @@ class SelfIndexingFlaggerSpec extends SparkTestBase {
   test("a replayed batch is idempotent: same flags, segment overwritten not duplicated") {
     import spark.implicits._
     val rows = Tables.embeddings(spark, sfDir)
-    val indexDir = Files.createTempDirectory("graft-selfidx-replay").toString + "/idx"
+    val indexDir = tempDir("graft-selfidx-replay") + "/idx"
 
     val b0 = rows.filter(col("vec_id") < 250)
     val b1 = rows.filter(col("vec_id") >= 250)
@@ -103,7 +102,7 @@ class SelfIndexingFlaggerSpec extends SparkTestBase {
   test("text (minhash/LSH) self-indexing flagger matches the batch self-join") {
     import spark.implicits._
     val d = Tables.documents(spark, sfDir)
-    val indexDir = Files.createTempDirectory("graft-selfidx-text").toString + "/idx"
+    val indexDir = tempDir("graft-selfidx-text") + "/idx"
 
     // batch expectation: dq17's banding, flagged iff an EARLIER doc shares a band
     val wide = d.select(col("doc_id").as("id"),
@@ -133,7 +132,7 @@ class SelfIndexingFlaggerSpec extends SparkTestBase {
 
   test("the history probe broadcasts the batch side — history is scanned, never shuffled") {
     val rows = Tables.embeddings(spark, sfDir)
-    val indexDir = Files.createTempDirectory("graft-selfidx-plan").toString + "/idx"
+    val indexDir = tempDir("graft-selfidx-plan") + "/idx"
     StreamOps.flagAndIndexPqBatch(rows.filter(col("vec_id") < 250), 0L,
       col("vec_id"), col("embedding"), indexDir, cb, bands = 2).collect()
     val banded = Pq.codeBandSignatures(
@@ -149,7 +148,7 @@ class SelfIndexingFlaggerSpec extends SparkTestBase {
   test("segment compaction preserves flags and bounds the file count") {
     import spark.implicits._
     val rows = Tables.embeddings(spark, sfDir)
-    val indexDir = Files.createTempDirectory("graft-selfidx-compact").toString + "/idx"
+    val indexDir = tempDir("graft-selfidx-compact") + "/idx"
     def run(pred: org.apache.spark.sql.Column, id: Long): Set[Long] =
       StreamOps.flagAndIndexPqBatch(rows.filter(pred), id,
           col("vec_id"), col("embedding"), indexDir, cb, bands = 2)
@@ -170,7 +169,7 @@ class SelfIndexingFlaggerSpec extends SparkTestBase {
       "compaction must keep exactly rows×bands signatures")
     // the next batch's flags are unchanged by compaction: same semantics
     // as an uncompacted twin index fed the same four batches
-    val twinDir = Files.createTempDirectory("graft-selfidx-twin").toString + "/idx"
+    val twinDir = tempDir("graft-selfidx-twin") + "/idx"
     def runTwin(pred: org.apache.spark.sql.Column, id: Long): Set[Long] =
       StreamOps.flagAndIndexPqBatch(rows.filter(pred), id,
           col("vec_id"), col("embedding"), twinDir, cb, bands = 2)
@@ -214,8 +213,8 @@ class SelfIndexingFlaggerSpec extends SparkTestBase {
   test("scheduled compaction: flags identical to the unscheduled twin, segments bounded, no-fold twin unbounded") {
     import spark.implicits._
     val rows = Tables.embeddings(spark, sfDir)
-    val dirA = Files.createTempDirectory("graft-selfidx-schedA").toString + "/idx"
-    val dirB = Files.createTempDirectory("graft-selfidx-schedB").toString + "/idx"
+    val dirA = tempDir("graft-selfidx-schedA") + "/idx"
+    val dirB = tempDir("graft-selfidx-schedB") + "/idx"
     // rent >> buy: fires on every batch once minSegments is reached -> the
     // segment count stays pinned at <= 3 no matter how long the stream runs
     val eager = new graft.streaming.SelfIndexCompaction(

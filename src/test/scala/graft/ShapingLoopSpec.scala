@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -60,7 +59,7 @@ class ShapingLoopSpec extends SparkTestBase {
       route: (DataFrame, Column, Column) => (DataFrame, DataFrame)): Unit = {
     ShapingLoopSpec.reset()
 
-    val root = Files.createTempDirectory(s"graft-shaping-loop-$tag").toString
+    val root = tempDir(s"graft-shaping-loop-$tag")
     val origin = "tasks"
     val shapingTopic = s"$origin-shaping"
     BrokerLog.createTopic(root, origin, 2)
@@ -86,7 +85,7 @@ class ShapingLoopSpec extends SparkTestBase {
     val q1 = TaskSource.brokerStream(spark, root, origin)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-shaping-ckpt1-$tag").toString)
+        tempDir(s"graft-shaping-ckpt1-$tag"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val keyed = batch.withColumn("k", col("key").cast("string"))
         val (ok, shaped) = route(keyed, col("k"), col("timestamp"))
@@ -110,7 +109,7 @@ class ShapingLoopSpec extends SparkTestBase {
       .load()
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-shaping-ckpt2-$tag").toString)
+        tempDir(s"graft-shaping-ckpt2-$tag"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val now = System.currentTimeMillis()
         batch.select(col("key").cast("string")).collect()
