@@ -5,10 +5,10 @@ package graft.sources
   * control characters are legal bytes there, and Spark's offset log is
   * line-oriented, so an unescaped emission would split the checkpoint
   * record or make the parse regexes mis-split on restart (truncated name →
-  * re-read from 0 → duplicates). One implementation, used by BOTH media's
-  * offset serializers ([[graft.sources.jsonl.GraftJsonlOffset]],
-  * [[graft.sources.kafkalike.GraftKafkaOffset]]), property-tested in
-  * GraftJsonlSourceSpec.
+  * re-read from 0 → duplicates). One implementation, used by both offset
+  * serializers ([[graft.sources.FileTailOffset]] for graft-jsonl and
+  * graft-warc, [[graft.sources.kafkalike.GraftKafkaOffset]]),
+  * property-tested in GraftJsonlSourceSpec.
   */
 private[graft] object OffsetJson {
   def escape(s: String): String = {

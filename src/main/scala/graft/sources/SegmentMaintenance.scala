@@ -53,10 +53,9 @@ object SegmentMaintenance {
     * true for batch tags.
     */
   def segments(dir: String, suffix: String): Seq[File] =
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith("seg-") && f.getName.endsWith(suffix))
+    FileTail.listFiles(dir, Seq(suffix), prefix = "seg-")
       .sortBy(f => (if (f.getName.startsWith("seg-compact-")) 0 else 1,
-        f.lastModified(), f.getName)).toSeq
+        f.lastModified(), f.getName))
 
   /** Fold all but the newest `keepRecent` segments into one compacted
     * segment (`seg-compact-<k>-<fingerprint>.<suffix>`; [[segments]]
@@ -83,10 +82,7 @@ object SegmentMaintenance {
     // segments (the name filter excludes them from reads) but they hold
     // disk until someone deletes them. Only compact temps: a purge running
     // concurrently owns `.seg-<tag>...inprogress` temps of its own
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith(".seg-compact-") &&
-        f.getName.endsWith(".inprogress"))
-      .foreach(_.delete())
+    SegmentSink.sweepTemps(dir, "compact")
     val segs = segments(dir, suffix)
     if (segs.size < math.max(minSegments, keepRecent + 2)) return None
     val fold = segs.dropRight(keepRecent)
@@ -196,9 +192,9 @@ object SegmentMaintenance {
     * of READABLE records removed; a rewrite also happens when only
     * corrupt members were dropped. Streaming on both sides — a bounded
     * walk window on the read, the temp file's output stream on the write
-    * — so heap is bounded by one member, not 2× the segment (the old
-    * whole-file byte-array shape OOMed on >1 GiB segments the reader
-    * itself handles). Package-visible for the spec.
+    * — so heap is bounded by one member, not 2× the segment, and a
+    * >1 GiB segment the reader handles purges too. Package-visible for the
+    * spec.
     */
   private[graft] def purgeOneWarcFile(
       f: File, uris: Set[String], maxRecordBytes: Long,

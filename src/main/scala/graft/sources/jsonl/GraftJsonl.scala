@@ -4,31 +4,29 @@ import java.io.{File, RandomAccessFile}
 import java.nio.charset.StandardCharsets
 import java.util
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.{FileTail, FileTailStream, SegmentSink, SegmentWriter, TailFraming}
+
 /** `graft-jsonl` — the engine's SECOND DataSource V2 medium: a directory of
-  * append-only JSONL files tailed as a log (`tail -f` semantics). Each
-  * `*.jsonl` file is an independent log segment; the streaming offset is a
-  * per-file BYTE position after the last complete (newline-terminated) line
-  * consumed, so resume is an O(1) seek, a partial line at EOF (an append in
-  * flight) waits for its newline, and truncation is detectable by
-  * comparison alone. This is a deliberately different shape from both
-  * `graft-kafka` (no broker metadata, no partition dirs, no dense record
-  * offsets) and Spark's built-in file source (which only admits whole new
-  * files and cannot tail a growing one) — the point of the medium is to
-  * prove the offset/guarantee machinery is source-generic.
+  * append-only JSONL files tailed as a log by the shared
+  * [[graft.sources.FileTailStream]], with line framing: the per-file byte
+  * offset ([[graft.sources.FileTailOffset]]) sits after the last complete
+  * (newline-terminated) line consumed, so a partial line at EOF (an append
+  * in flight) waits for its newline. This is a deliberately different
+  * shape from both `graft-kafka` (no broker metadata, no partition dirs, no
+  * dense record offsets) and Spark's built-in file source (which only
+  * admits whole new files and cannot tail a growing one) — the point of the
+  * medium is to prove the offset/guarantee machinery is source-generic.
   *
   * Options:
   *   - `path` (required): the directory to tail;
@@ -90,13 +88,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * replays reproduce exactly. Payload typing is schema-on-read
   * (`from_json` downstream), the reference's serde philosophy.
   *
-  * The WRITE side ([[GraftJsonlWriteBuilder]]) closes the medium into a
-  * file-based topic: each epoch's partitions land as immutable
+  * The WRITE side ([[GraftJsonlWriteBuilder]], on the shared
+  * [[graft.sources.SegmentSink]]) closes the medium into a file-based
+  * topic: each epoch's partitions land as immutable
   * `seg-q<queryTag>-<epoch>-<partition>.jsonl` segments via atomic rename
-  * (idempotent under replay — effectively-once; the tag derives from the
-  * checkpoint-stable query id so distinct queries sharing a directory
-  * never collide), and a tailing reader discovers them as complete new
-  * files.
+  * (effectively-once under replay), and a tailing reader discovers them as
+  * complete new files.
   *
   * Scale shape: one Spark input partition per file slice per micro-batch —
   * parallelism is the file count, exactly the "one partition per
@@ -151,15 +148,6 @@ object GraftJsonl {
     val p = options.get("path")
     require(p != null && p.nonEmpty, "graft-jsonl requires the 'path' option (directory to tail)")
     p
-  }
-
-  /** Participating files, name-sorted for deterministic planning order. */
-  def listFiles(dir: String, suffix: String): Seq[File] = {
-    val d = new File(dir)
-    require(d.isDirectory, s"graft-jsonl path is not a directory: $dir")
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(suffix))
-      .sortBy(_.getName).toSeq
   }
 
   /** Byte position after the file's last complete line: the file length if
@@ -239,26 +227,20 @@ object GraftJsonl {
     } finally raf.close()
   }
 
-  /** Driver-side landing of one job's/epoch's segments: atomically rename
-    * every committed task's temp into its final name (REPLACE_EXISTING —
-    * a replayed epoch replaces itself), then sweep stray temps of the same
-    * tag (failed/speculative attempts whose messages never reached the
-    * driver). Runs ONLY after every task committed, so an abort can never
-    * race a rename: no final name appears for a job that did not commit.
-    */
   /** Streaming segments were named `seg-<epoch>-<part>.jsonl` before the
-    * query tag landed in the name. A checkpoint created under the old naming
-    * that replays its last epoch after an upgrade writes a NEW tagged name
-    * instead of renaming over the old one — the legacy twin would duplicate
-    * that epoch's records once. Landing a tagged streaming segment therefore
-    * retires its legacy-named twin, but ONLY when the twin is byte-identical
-    * to the landed segment: a true replay twin is content-identical by the
-    * deterministic replay contract, whereas a same-numbered segment from an
-    * UNRELATED untagged run (fresh-checkpoint tagged query whose epochs
-    * restart at 0, sharing a directory with an older run) is that run's
-    * committed data and must survive. A twin that is not byte-identical is
-    * left in place — worst case the upgrade replay duplicates one epoch's
-    * records (the documented at-least-once upgrade story), never loses data.
+    * query tag joined the name. A checkpoint created under that naming
+    * that replays its last epoch writes a NEW tagged name instead of
+    * renaming over the old one — the legacy twin would duplicate that
+    * epoch's records once. Landing a tagged streaming segment therefore
+    * retires its legacy-named twin, but ONLY when the twin is
+    * byte-identical to the landed segment: a true replay twin is
+    * content-identical by the deterministic replay contract, whereas a
+    * same-numbered segment from an UNRELATED untagged run (a
+    * fresh-checkpoint tagged query whose epochs restart at 0, sharing a
+    * directory with an older run) is that run's committed data and must
+    * survive. A twin that is not byte-identical is left in place — worst
+    * case the upgrade replay duplicates one epoch's records (the documented
+    * at-least-once upgrade story), never loses data.
     */
   private val LegacyStreamTwin = """seg-q[0-9a-f]{12}-(\d{6}-\d{4}\.jsonl)""".r
 
@@ -276,39 +258,15 @@ object GraftJsonl {
     } finally ia.close()
   }
 
+  /** The sink's landing ([[SegmentSink.land]]) with the legacy-twin rule. */
   private[jsonl] def commitSegments(
-      dir: String,
-      tag: String,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    messages.foreach {
-      case GraftJsonlCommit(tmpName, segment, _) if tmpName != null =>
-        java.nio.file.Files.move(
-          new File(dir, tmpName).toPath, new File(dir, segment).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        segment match {
-          case LegacyStreamTwin(suffix) =>
-            val legacy = new File(dir, s"seg-$suffix")
-            if (legacy.exists() && sameContent(legacy, new File(dir, segment)))
-              legacy.delete()
-          case _ => ()
-        }
+      dir: String, tag: String, messages: Array[WriterCommitMessage]): Unit =
+    SegmentSink.land(dir, tag, messages, landed => landed.getName match {
+      case LegacyStreamTwin(suffix) =>
+        val legacy = new File(dir, s"seg-$suffix")
+        if (legacy.exists() && sameContent(legacy, landed)) legacy.delete()
       case _ => ()
-    }
-    sweepTemps(dir, tag)
-  }
-
-  /** Abort cleanup: only temps can exist (renames are commit-side). */
-  private[jsonl] def abortSegments(dir: String, tag: String): Unit =
-    sweepTemps(dir, tag)
-
-  private def sweepTemps(dir: String, tag: String): Unit = {
-    val d = new File(dir)
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(s".seg-$tag-") &&
-        f.getName.endsWith(".inprogress"))
-      .foreach(_.delete())
-  }
+    })
 
   /** Plan byte-range partitions for `[from, until)` of one file: a single
     * aligned partition when the range fits in `split`, else ceil-div ranges
@@ -333,6 +291,41 @@ object GraftJsonl {
     }
   }
 
+  /** The directory tail ([[FileTailStream]]) with line framing: a file's
+    * complete end is after its last newline, an admission cut lands on a
+    * line boundary, and a slice is one partition unless `maxSplitBytes`
+    * opts in to byte-range splits ([[splitRange]]).
+    */
+  def stream(
+      dir: String,
+      suffix: String,
+      startAtLatest: Boolean,
+      failOnDataLoss: Boolean,
+      maxBytesPerTrigger: Option[Long],
+      retireConsumed: Boolean = true,
+      retentionMs: Option[Long] = None,
+      retentionPropertyId: Option[String] = None,
+      maxSplitBytes: Option[Long] = None): FileTailStream = {
+    val framing = new TailFraming {
+      override def medium: String = "graft-jsonl"
+      override def completeEnd(f: File, from: Long, len: Long): Long = completeLength(f)
+      override def cut(f: File, from: Long, target: Long, complete: Long): Long =
+        lineBoundaryNear(f, from, target)
+      // the slice's `from` is a checkpointed line boundary (byte from-1 is
+      // '\n'), so an unaligned reader's one-byte-back probe self-detects it
+      // and skips nothing
+      override def partitions(f: File, from: Long, until: Long): Seq[InputPartition] =
+        splitRange(f.getPath, f.getName, from, until,
+          maxSplitBytes.getOrElse(Long.MaxValue), failOnDataLoss)
+      override def readerFactory: PartitionReaderFactory = new GraftJsonlReaderFactory
+    }
+    // a bound live property (>= 0) overrides the static option, read at
+    // each planning call: a config edit takes effect on the NEXT trigger
+    new FileTailStream(dir, Seq(suffix), framing, startAtLatest, failOnDataLoss,
+      maxBytesPerTrigger, retireConsumed,
+      () => retentionPropertyId.flatMap(retentionOverride).orElse(retentionMs))
+  }
+
   /** Append lines (adding the terminating '\n' each) to `dir/name` — the
     * producer util the chaos/roundtrip harnesses write through. Appends are
     * sequential per call; callers provide cross-call ordering.
@@ -354,34 +347,6 @@ object GraftJsonl {
   }
 }
 
-/** Streaming offset: per-file byte position after the last consumed complete
-  * line, serialized as sorted JSON `{"a.jsonl":123,"b.jsonl":0}`. File names
-  * are JSON-escaped — quotes/backslashes AND control characters: a newline
-  * is a legal Linux filename byte, and Spark's offset log is line-oriented,
-  * so an unescaped emission would split the checkpoint record and make
-  * `fromJson` mis-parse on restart (truncated name → re-read from 0 →
-  * duplicates).
-  */
-case class GraftJsonlOffset(positions: Map[String, Long]) extends Offset {
-  override def json(): String =
-    positions.toSeq.sortBy(_._1)
-      .map { case (f, p) => s""""${GraftJsonlOffset.escape(f)}":$p""" }
-      .mkString("{", ",", "}")
-}
-
-object GraftJsonlOffset {
-  // shared with graft-kafka's offset serializer — see graft.sources.OffsetJson
-  private[jsonl] def escape(s: String): String = graft.sources.OffsetJson.escape(s)
-  private[jsonl] def unescape(s: String): String = graft.sources.OffsetJson.unescape(s)
-
-  def fromJson(s: String): GraftJsonlOffset = {
-    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*([0-9]+)""".r
-    GraftJsonlOffset(entry.findAllMatchIn(s).map { m =>
-      unescape(m.group(1)) -> m.group(2).toLong
-    }.toMap)
-  }
-}
-
 class GraftJsonlTable(options: CaseInsensitiveStringMap) extends Table
     with SupportsRead with SupportsWrite {
   override def name(): String = s"graft-jsonl(${GraftJsonl.dir(options)})"
@@ -399,41 +364,19 @@ class GraftJsonlTable(options: CaseInsensitiveStringMap) extends Table
     new GraftJsonlWriteBuilder(info)
 }
 
-/** The write side of the medium: each epoch's partition becomes ONE new
-  * immutable segment file `seg-q<queryTag>-<epoch>-<partition>.jsonl`
-  * (streaming; batch uses a per-job uuid tag; empty partitions
-  * write nothing), landed by write-to-temp + atomic rename at task commit.
-  * The temp name carries no `.jsonl` suffix, so a tailing reader never sees
-  * a half-written segment — segments APPEAR complete, exactly the
-  * new-file-discovery path the source already handles.
-  *
-  * EFFECTIVELY-ONCE: the segment name is a pure function of (epoch,
-  * partition), so a replayed micro-batch (or a re-attempted task) renames
-  * over its own previous output instead of appending a duplicate — the same
-  * batch-id-keyed idempotence contract as
-  * [[graft.streaming.StreamOps.effectivelyOnceParquet]], proven by the same
-  * drop-the-commit-marker replay test. The contract holds as long as the
-  * replaced name is still the one the reader's checkpoint points at; a
-  * consumer running `retentionMs` shorter than the producer's replay window
-  * can retire the name first, after which the replayed segment reads as new
-  * data (see the retentionMs option note — the Kafka retention analog has
-  * the same horizon rule). Input rows must carry a string
-  * `value` column (newline-free); everything else is ignored — the Kafka
-  * sink's value-column contract.
+/** The write side of the medium ([[SegmentSink]]): each epoch's partition
+  * becomes ONE new immutable segment `seg-<tag>-<partition>.jsonl`, landed
+  * by the driver's atomic rename, and a tailing reader discovers it as a
+  * complete new file. The contract holds as long as the replaced name is
+  * still the one the reader's checkpoint points at; a consumer running
+  * `retentionMs` shorter than the producer's replay window can retire the
+  * name first, after which the replayed segment reads as new data (the
+  * Kafka retention analog has the same horizon rule). Input rows must carry
+  * a string `value` column (newline-free); everything else is ignored — the
+  * Kafka sink's value-column contract. Landing retires a byte-identical
+  * legacy-named twin ([[GraftJsonl.commitSegments]]).
   */
 class GraftJsonlWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder {
-  // streaming epoch tag prefix, derived from the CHECKPOINT-STABLE query id
-  // (verified stable across restarts): a replayed epoch still renames over
-  // its own segment (effectively-once), while two streaming queries
-  // writing one directory can no longer clobber each other's same-numbered
-  // epochs or sweep each other's live temps — the multi-writer hole the
-  // batch path already closed with its per-job uuid tag.
-  // CHECKPOINT COMPATIBILITY: before the tag, streaming segments were named
-  // `seg-<epoch>-<part>.jsonl`; a pre-tag checkpoint replaying its last
-  // epoch after upgrade lands a tagged name instead of renaming over the
-  // legacy one — commitSegments deletes the legacy twin at landing so the
-  // replayed epoch cannot read back twice (see LegacyStreamTwin).
-  private val queryTag = "q" + info.queryId().replace("-", "").take(12)
   private val dir = GraftJsonl.dir(new CaseInsensitiveStringMap(info.options()))
   private val valueIdx = {
     // case-insensitive with exact-match preference — the Kafka sink's
@@ -450,67 +393,18 @@ class GraftJsonlWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder {
     idx
   }
 
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new BatchWrite {
-      // per-JOB unique tag, generated once on the driver: stable across task
-      // retries inside this job (idempotent replacement), unique across jobs
-      // (a second SaveMode.Append must ADD segments, not rename over the
-      // previous write's names). FULL uuid: a truncated tag's birthday
-      // collisions would silently REPLACE_EXISTING an earlier append's
-      // segment on a long-lived directory.
-      private val jobTag = "b" + java.util.UUID.randomUUID().toString
-      override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory =
-        new GraftJsonlWriterFactory(dir, valueIdx, jobTag)
-      override def commit(messages: Array[WriterCommitMessage]): Unit =
-        GraftJsonl.commitSegments(dir, jobTag, messages)
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        GraftJsonl.abortSegments(dir, jobTag)
-    }
-    override def toStreaming: StreamingWrite = new StreamingWrite {
-      override def createStreamingWriterFactory(i: PhysicalWriteInfo): StreamingDataWriterFactory =
-        new GraftJsonlStreamingWriterFactory(dir, valueIdx, queryTag)
-      override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-        GraftJsonl.commitSegments(dir, f"$queryTag-$epochId%06d", messages)
-      override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-        GraftJsonl.abortSegments(dir, f"$queryTag-$epochId%06d")
-    }
+  override def build(): Write = {
+    val (d, v) = (dir, valueIdx) // the writer closure ships; capture values, not this
+    SegmentSink.write(dir, info.queryId(),
+      (tag, partitionId, taskId) => new GraftJsonlSegmentWriter(d, v, tag, partitionId, taskId),
+      GraftJsonl.commitSegments(dir, _, _))
   }
 }
 
-class GraftJsonlWriterFactory(dir: String, valueIdx: Int, epochTag: String)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftJsonlSegmentWriter(dir, valueIdx, epochTag, partitionId, taskId)
-}
-
-class GraftJsonlStreamingWriterFactory(dir: String, valueIdx: Int, queryTag: String)
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new GraftJsonlSegmentWriter(dir, valueIdx, f"$queryTag-$epochId%06d", partitionId, taskId)
-}
-
-/** Task-side writer: lands ONLY its temp file. The rename into the visible
-  * segment name happens at the DRIVER's job/epoch commit
-  * ([[GraftJsonl.commitSegments]]): a task-side rename would race job
-  * abort — a task already authorized by the commit coordinator can finish
-  * its rename after abort's cleanup scan ran, leaving an orphan segment
-  * a retried job (under a fresh tag) would then duplicate. With the
-  * driver doing every rename, abort at most deletes temps and no final
-  * name can appear for a job/epoch that did not commit.
-  */
+/** Task-side writer: one newline-terminated line per row into its temp. */
 class GraftJsonlSegmentWriter(
     dir: String, valueIdx: Int, epochTag: String, partitionId: Int, taskId: Long)
-    extends DataWriter[InternalRow] {
-  private val finalName = f"seg-$epochTag-$partitionId%04d.jsonl"
-  // temp name carries the ATTEMPT's taskId: concurrent attempts of the same
-  // partition (speculation, zombie tasks) must not write/truncate/delete one
-  // shared temp file — the commit-coordinator-approved attempt's temp is the
-  // one whose message reaches the driver. No .jsonl suffix: invisible to
-  // tailing readers.
-  private val tmpName = s".$finalName.$taskId.inprogress"
-  private val tmp = new File(dir, tmpName)
-  private var out: java.io.OutputStream = _
-  private var n = 0L
+    extends SegmentWriter(dir, epochTag, partitionId, taskId, ".jsonl") {
 
   override def write(row: InternalRow): Unit = {
     val v = row.getUTF8String(valueIdx)
@@ -526,31 +420,11 @@ class GraftJsonlSegmentWriter(
     // rejects it up front instead of breaking the round-trip contract
     require(bytes.isEmpty || bytes(bytes.length - 1) != '\r',
       "a JSONL record must not end in '\\r' (it would not round-trip through the CRLF-tolerant reader)")
-    if (out == null) {
-      java.nio.file.Files.createDirectories(new File(dir).toPath)
-      out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(tmp), 64 * 1024)
-    }
-    out.write(bytes)
-    out.write('\n')
-    n += 1
+    stream.write(bytes)
+    stream.write('\n')
+    rows += 1
   }
-
-  override def commit(): WriterCommitMessage = {
-    if (out != null) out.close()
-    GraftJsonlCommit(if (out == null) null else tmpName, finalName, n)
-  }
-
-  override def abort(): Unit = {
-    if (out != null) out.close()
-    tmp.delete()
-    ()
-  }
-
-  override def close(): Unit = ()
 }
-
-case class GraftJsonlCommit(tmpName: String, segment: String, rows: Long)
-  extends WriterCommitMessage
 
 class GraftJsonlScan(options: CaseInsensitiveStringMap) extends Scan {
   private val dir = GraftJsonl.dir(options)
@@ -579,27 +453,16 @@ class GraftJsonlScan(options: CaseInsensitiveStringMap) extends Scan {
     */
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      GraftJsonl.listFiles(dir, suffix).flatMap { f =>
-        try {
-          val complete = GraftJsonl.completeLength(f)
-          GraftJsonl.splitRange(f.getPath, f.getName, 0L, complete, maxSplitBytes,
-            failOnDataLoss): Seq[InputPartition]
-        } catch {
-          // FileNotFound = vanished between list and stat; EOF = truncated
-          // mid-probe (copy-then-truncate rotation) — both are the same
-          // planning-time loss race
-          case e @ (_: java.io.FileNotFoundException | _: java.io.EOFException) =>
-            if (failOnDataLoss) throw new IllegalStateException(
-              s"data loss detected on ${f.getName}: file vanished or was truncated during " +
-                "batch planning. Set failOnDataLoss=false to drop it.", e)
-            Seq.empty[InputPartition]
-        }
-      }.toArray
+      FileTail.planBatch(FileTail.listFiles(dir, Seq(suffix), medium = "graft-jsonl"),
+          failOnDataLoss) { f =>
+        GraftJsonl.splitRange(f.getPath, f.getName, 0L, GraftJsonl.completeLength(f),
+          maxSplitBytes, failOnDataLoss)
+      }
     override def createReaderFactory(): PartitionReaderFactory = new GraftJsonlReaderFactory
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GraftJsonlMicroBatchStream(dir, suffix,
+    GraftJsonl.stream(dir, suffix,
       startAtLatest = options.getOrDefault("startingoffsets", "earliest")
         .equalsIgnoreCase("latest"),
       failOnDataLoss = failOnDataLoss,
@@ -622,264 +485,6 @@ class GraftJsonlScan(options: CaseInsensitiveStringMap) extends Scan {
       maxSplitBytes = Option(options.get("maxsplitbytes")).map(_.toLong))
 }
 
-class GraftJsonlMicroBatchStream(
-    dir: String,
-    suffix: String,
-    startAtLatest: Boolean,
-    failOnDataLoss: Boolean,
-    maxBytesPerTrigger: Option[Long],
-    retireConsumed: Boolean = true,
-    retentionMs: Option[Long] = None,
-    retentionPropertyId: Option[String] = None,
-    maxSplitBytes: Option[Long] = None) extends MicroBatchStream with SupportsAdmissionControl {
-
-  /** The trigger-boundary retention horizon: a bound live property (>= 0)
-    * overrides the static option — read at each planning call, so a config
-    * edit takes effect on the NEXT trigger, no restart (P4 applied to the
-    * source).
-    */
-  private def effectiveRetentionMs: Option[Long] =
-    retentionPropertyId.flatMap(GraftJsonl.retentionOverride).orElse(retentionMs)
-
-  private def files: Seq[File] = GraftJsonl.listFiles(dir, suffix)
-
-  /** name -> (length, lastModified, completeLength) memo. A fully-landed
-    * immutable segment never changes, so its boundary probe (an open + a
-    * backward 64 KiB scan) need not repeat every trigger — with the cache
-    * the steady-state per-trigger driver cost is ONE stat per listed file,
-    * and with `retentionMs` the listed set itself is bounded. (length,
-    * mtime) keying is the same freshness contract Spark's own file source
-    * uses; any append or truncation changes the length.
-    */
-  private val probeCache = scala.collection.mutable.HashMap.empty[String, (Long, Long, Long)]
-
-  private def completeLengthCached(f: File): Long = {
-    val len = f.length(); val mtime = f.lastModified()
-    probeCache.get(f.getName) match {
-      case Some((l, m, c)) if l == len && m == mtime => c
-      case _ =>
-        val c = GraftJsonl.completeLength(f)
-        probeCache.put(f.getName, (len, mtime, c))
-        c
-    }
-  }
-
-  // a file vanishing between the listing and its probe (rotation mid-call)
-  // is dropped from the snapshot — the next trigger's listing is the truth
-  private def snapshotSafe(pos: File => Long): Map[String, Long] =
-    files.flatMap { f =>
-      try Some(f.getName -> pos(f))
-      catch { case _: java.io.FileNotFoundException | _: java.io.EOFException => None }
-    }.toMap
-
-  override def initialOffset(): Offset =
-    GraftJsonlOffset(snapshotSafe(f =>
-      if (startAtLatest) GraftJsonl.completeLength(f) else 0L))
-
-  override def deserializeOffset(json: String): Offset = GraftJsonlOffset.fromJson(json)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException("latestOffset(Offset, ReadLimit) is used")
-
-  /** End-of-complete-data per file, capped to ~maxBytesPerTrigger of new
-    * bytes distributed proportionally to each file's backlog, every cut on
-    * a line boundary. The end offset NEVER regresses below the checkpoint:
-    * a truncated file is a data-loss error here in strict mode (reporting
-    * it only at plan time leaves a race — the file can regrow between the
-    * two calls and an end below the checkpoint would then COMMIT, replaying
-    * new bytes under previously-issued (file, pos) ids); with
-    * `failOnDataLoss=false` the clamped offset simply waits until the file
-    * regrows past its checkpoint. A file that vanished between the listing
-    * and its stat (log rotation mid-trigger) is treated exactly like a
-    * checkpointed-but-missing file: its position is carried unchanged and
-    * planInputPartitions decides per failOnDataLoss.
-    */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val startPos = start.asInstanceOf[GraftJsonlOffset].positions
-    def startOf(name: String): Long = startPos.getOrElse(name, 0L)
-    def statSafe[A](f: File)(body: => A): Option[A] =
-      try Some(body)
-      catch {
-        // vanished OR truncated mid-probe: both resolve at the next trigger
-        // (the vanished map / the clamped offset handle each)
-        case _: java.io.FileNotFoundException | _: java.io.EOFException => None
-      }
-    val fs = files
-    val listed = fs.iterator.map(_.getName).toSet
-    val complete = fs.flatMap(f =>
-      statSafe(f)(completeLengthCached(f)).map(f.getName -> _)).toMap
-    // vanished-with-KNOWN-backlog check, keyed on the files that actually
-    // STATTED (not merely listed — a file can vanish between the listing
-    // and its stat) and run BEFORE cache eviction: the probe cache is the
-    // only witness that a vanished file had complete bytes beyond the
-    // checkpoint (observed but never scheduled — e.g. deferred by the
-    // admission cap). Within a run, strict mode must report that loss;
-    // across a restart the cache is empty and a pre-restart append is
-    // unobservable — indistinguishable from consumed-then-rotated, so
-    // benign by the fully-consumed rule.
-    if (failOnDataLoss) startPos.foreach { case (name, p) =>
-      if (!complete.contains(name)) probeCache.get(name).foreach { case (_, _, c) =>
-        if (c > p) throw new IllegalStateException(
-          s"data loss detected on $name: file vanished with ${c - p} observed-but-unconsumed " +
-            "bytes beyond the checkpoint. Set failOnDataLoss=false to drop it and continue.")
-      }
-    }
-    // evict to the LISTED set, not the statted one: a listed file whose
-    // stat failed this trigger keeps its witness entry for the check above
-    probeCache.filterInPlace { case (name, _) => listed(name) }
-    complete.foreach { case (name, c) =>
-      if (c < startOf(name) && failOnDataLoss)
-        throw new IllegalStateException(
-          s"data loss detected on $name: consumed through byte ${startOf(name)} but only " +
-            s"$c complete bytes remain (truncated). Set failOnDataLoss=false to wait for " +
-            "the file to regrow past its checkpoint.")
-    }
-    // ACTIVE retirement (the Kafka retention.ms analog): a fully-consumed,
-    // fully-landed file (checkpoint == complete length == raw length — no
-    // partial line in flight) unmodified for retentionMs is DELETED and its
-    // entry dropped, so the offset map, the checkpoint record and the
-    // per-trigger stat loop stay bounded by the ACTIVE file set instead of
-    // stream age. Only files with nothing left to schedule qualify, so no
-    // planned bytes can ever dangle behind a retirement; a crash between
-    // the delete and the offset commit replays as a vanished-but-consumed
-    // file, which the planner treats as benign (never data loss).
-    // startOf == c EXACTLY: `>=` would also match a file truncated BELOW
-    // its checkpoint, which permissive mode holds until it regrows — a
-    // file whose current content was never delivered must not be deleted.
-    // The retention horizon doubles as the producer-quiescence guard:
-    // only files unmodified for retentionMs qualify, so a producer that
-    // appends within the horizon is never raced; an append landing in the
-    // same instant as the delete is the same torn-rotation hazard as any
-    // external log-rotation delete (retention is for directories whose
-    // landed files are immutable — the sink's segments are by
-    // construction).
-    val retired: Set[String] = effectiveRetentionMs match {
-      case Some(ret) =>
-        val now = System.currentTimeMillis()
-        val candidates = fs.filter { f =>
-          val name = f.getName
-          complete.get(name).exists(c => startOf(name) == c &&
-            statSafe(f)(f.length()).contains(c) &&
-            now - f.lastModified() >= ret)
-        }
-        // the delete is the act of retirement: only names whose delete
-        // succeeded leave the offset (a failed delete stays active)
-        candidates.filter(_.delete()).map(_.getName).toSet
-      case None => Set.empty
-    }
-    val ends: Map[String, Long] = maxBytesPerTrigger match {
-      case Some(cap) =>
-        val capped = fs.filter(f => complete.contains(f.getName) && !retired(f.getName))
-        val backlog = capped.map(f => f -> math.max(0L, complete(f.getName) - startOf(f.getName)))
-        val total = backlog.map(_._2).sum
-        if (total <= cap) complete -- retired
-        else {
-          val scale = cap.toDouble / total
-          backlog.map { case (f, b) =>
-            val name = f.getName
-            if (b == 0L) name -> complete(name)
-            else {
-              val share = math.max(1L, math.floor(b * scale).toLong)
-              statSafe(f)(GraftJsonl.lineBoundaryNear(f, startOf(name), startOf(name) + share))
-                .map(name -> _).getOrElse(name -> startOf(name)) // vanished mid-probe
-            }
-          }.toMap
-        }
-      case None => complete -- retired
-    }
-    val clamped = ends.map { case (name, e) => name -> math.max(e, startOf(name)) }
-    // A checkpointed file absent from the listing has, by construction, a
-    // position equal to everything ever SCHEDULED from it (each batch's end
-    // becomes the next start before any new schedule), and the
-    // known-backlog check above already reported any OBSERVED loss — so its
-    // deletion is routine log rotation, not data loss. With retireConsumed
-    // (default) the entry is dropped so the offset map stays bounded by the
-    // active file set; with retireConsumed=false it is carried silently
-    // even when retentionMs is set (a deleted-then-recreated name then
-    // resumes at its old position instead of replaying from 0 — the
-    // behavior that option buys). Names retention retired THIS trigger are
-    // excluded from the carry explicitly: they must leave the committed
-    // offset, or the carry would resurrect them every trigger and the
-    // offset JSON would grow with stream age despite retention. A file
-    // that vanishes MID-trigger (after a successful stat) still carries
-    // scheduled bytes in `clamped` and is reported by planInputPartitions
-    // per failOnDataLoss.
-    // a LISTED file whose stat raced (shrunk/rotated mid-probe) is NOT
-    // vanished — the file exists and resolves next trigger. Its entry must
-    // carry unchanged in every mode: dropping it would restart the name at
-    // 0 (silent re-delivery / offset regression). Names retention retired
-    // this trigger are in the pre-delete listing, so exclude them here.
-    val statRaced = startPos.view.filterKeys(k =>
-      listed(k) && !clamped.contains(k) && !retired(k)).toMap
-    val vanished =
-      if (retireConsumed) Map.empty[String, Long]
-      else startPos.view.filterKeys(k =>
-        !listed(k) && !clamped.contains(k) && !retired(k)).toMap
-    GraftJsonlOffset(clamped ++ statRaced ++ vanished)
-  }
-
-  override def reportLatestOffset(): Offset =
-    GraftJsonlOffset(snapshotSafe(completeLengthCached))
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val startPos = start.asInstanceOf[GraftJsonlOffset].positions
-    val endPos = end.asInstanceOf[GraftJsonlOffset].positions
-    val out = ArrayBuffer.empty[InputPartition]
-    endPos.toSeq.sortBy(_._1).foreach { case (name, until) =>
-      val f = new File(dir, name)
-      val from = startPos.getOrElse(name, 0L) // appeared mid-stream: earliest
-      if (!f.isFile) {
-        // a vanished file with zero unread SCHEDULED bytes (until == from)
-        // is routine rotation of a fully-consumed segment, never data loss
-        if (until > from && failOnDataLoss)
-          throw new IllegalStateException(
-            s"data loss detected on $name: file vanished with ${until - from} unread bytes " +
-              "checkpointed. Set failOnDataLoss=false to drop it and continue.")
-        // else: drop the file from the plan
-      } else {
-        val len = f.length()
-        if (len < from) {
-          if (failOnDataLoss)
-            throw new IllegalStateException(
-              s"data loss detected on $name: consumed through byte $from but the file now has " +
-                s"only $len bytes (truncated). Set failOnDataLoss=false to hold at the " +
-                "checkpoint until the file regrows past it.")
-          // truncated tail: nothing to read until the file regrows past its
-          // checkpoint; re-appended bytes arrive as new records
-        } else if (until > from) {
-          if (len < until && failOnDataLoss)
-            // truncated between latestOffset and planning: the checkpoint
-            // will still commit end=until, so a silent clamp would skip
-            // bytes [len, until) forever if the file regrows — the same
-            // regrow race latestOffset plugs. Strict mode must report it;
-            // only permissive mode clamps (its reader emits the intact
-            // lines below the cut and drops any torn tail).
-            throw new IllegalStateException(
-              s"data loss detected on $name: $until bytes were scheduled but the file now has " +
-                s"only $len (truncated mid-trigger). Set failOnDataLoss=false to read what " +
-                "remains and drop the truncated tail.")
-          // with maxSplitBytes set (opt-in), a catch-up slice larger than it
-          // (first trigger over a deep backlog with no admission cap) splits
-          // into byte-range partitions, same ownership rule as the batch
-          // path. The slice's `from` is a checkpointed line boundary (byte
-          // from-1 is '\n'), so the unaligned reader's one-byte-back probe
-          // self-detects it and skips nothing.
-          val hi = math.min(until, len)
-          out ++= GraftJsonl.splitRange(f.getPath, name, from, hi,
-            maxSplitBytes.getOrElse(Long.MaxValue), failOnDataLoss)
-        }
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = new GraftJsonlReaderFactory
-  override def commit(end: Offset): Unit = () // progress lives in Spark's checkpoint
-  override def stop(): Unit = ()
-}
-
 /** One Spark partition per file slice. `aligned = true` (streaming, whole
   * files) means `from`/`until` are exact line boundaries; `aligned = false`
   * (batch byte-range splits) means raw byte positions with the classic
@@ -895,28 +500,7 @@ case class GraftJsonlInputPartition(
 class GraftJsonlReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftJsonlInputPartition]
-    // the file can vanish between planning's isFile check and this open (log
-    // rotation mid-trigger): permissive mode reads the slice as empty — the
-    // same drop-the-file semantics the planner applies when it sees the
-    // vanish first; strict mode reports the loss instead of a raw IO error
-    val rafOpt =
-      try Some(new RandomAccessFile(p.path, "r"))
-      catch {
-        case e: java.io.FileNotFoundException =>
-          if (p.failOnDataLoss)
-            throw new IllegalStateException(
-              s"data loss detected on ${p.name}: file vanished after planning with " +
-                s"${p.until - p.from} planned bytes. Set failOnDataLoss=false to drop it.", e)
-          None
-      }
-    rafOpt match {
-      case None => new PartitionReader[InternalRow] {
-        override def next(): Boolean = false
-        override def get(): InternalRow = throw new IllegalStateException("empty reader")
-        override def close(): Unit = ()
-      }
-      case Some(r0) => mkReader(p, r0)
-    }
+    FileTail.openSlice(p.path, p.name, p.from, p.until, p.failOnDataLoss)(mkReader(p, _))
   }
 
   private def mkReader(p: GraftJsonlInputPartition, raf0: RandomAccessFile): PartitionReader[InternalRow] = {

@@ -10,16 +10,19 @@ import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.{FileTail, FileTailStream, TailFraming}
+
 /** `graft-warc` — the engine's THIRD DataSource V2 medium: a directory of
   * WARC (ISO 28500 / WARC 1.x, the Common Crawl container) files read as a
-  * table and tailed as a log. This is the format a real 100 TB web
-  * pipeline's FIRST operator parses — the crawl front
+  * table and tailed as a log by the shared [[graft.sources.FileTailStream]]
+  * (offsets: [[graft.sources.FileTailOffset]]). This is the format a real
+  * 100 TB web pipeline's FIRST operator parses — the crawl front
   * ([[graft.pipeline.WebCuration.crawlToCorpus]]) starts from
   * (url, payload) rows, and those rows ship on disk as WARC records.
   *
@@ -119,16 +122,6 @@ object GraftWarc {
     val p = options.get("path")
     require(p != null && p.nonEmpty, "graft-warc requires the 'path' option (directory of WARC files)")
     p
-  }
-
-  /** Participating files, name-sorted for deterministic planning order. */
-  def listFiles(dir: String, suffix: Option[String]): Seq[File] = {
-    val d = new File(dir)
-    require(d.isDirectory, s"graft-warc path is not a directory: $dir")
-    val suffixes = suffix.map(Seq(_)).getOrElse(DefaultSuffixes)
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && suffixes.exists(f.getName.endsWith))
-      .sortBy(_.getName).toSeq
   }
 
   // ---------------------------------------------------------------- framing
@@ -397,8 +390,7 @@ object GraftWarc {
   /** Frame — and optionally decode — ONE gzip member at `bytes[off)` within
     * `[off, off+len)`: RFC 1952 header fields, raw-deflate body, 8-byte
     * CRC/ISIZE trailer. ONE inflate pass serves both the size and the
-    * output (the old measure-then-decode shape inflated every member
-    * twice); with `maxOut >= 0` the output is collected (bounded — past
+    * output; with `maxOut >= 0` the output is collected (bounded — past
     * the bound inflation continues DISCARDING so the member still frames
     * and reports [[MemberCorrupt]] instead of wedging the stream) and the
     * trailer is verified against it; `maxOut < 0` measures only.
@@ -481,13 +473,10 @@ object GraftWarc {
   /** One raw-deflate [[java.util.zip.Inflater]] per thread, `reset()`
     * between members instead of `end()`+new per call. A new Inflater per
     * member allocates (and a forgotten one Cleaner-frees) a native zlib
-    * window each time; at corpus row rates that native churn is the
-    * difference between [[HttpExpressions]]' pq99 fast and slow modes
-    * (0.33 s vs 1.4 s reps on identical code: the old
-    * GZIPInputStream-shaped decode left one Inflater per ROW to the
-    * cleaner). Safe because [[gzipMember]] is synchronous and
-    * non-reentrant; native memory is bounded at one zlib window per
-    * executor task thread, freed when the thread dies.
+    * window each time, and at corpus row rates that native churn dominates
+    * the decode ([[HttpExpressions]]' pq99). Safe because [[gzipMember]] is
+    * synchronous and non-reentrant; native memory is bounded at one zlib
+    * window per executor task thread, freed when the thread dies.
     */
   private val threadInflater = new ThreadLocal[java.util.zip.Inflater] {
     override protected def initialValue(): java.util.zip.Inflater =
@@ -515,17 +504,12 @@ object GraftWarc {
   final case class GzWalkEnd(end: Long, malformed: Option[String])
 
   /** Walk complete gzip MEMBERS forward from byte `from` (a member
-    * boundary): position after the last member that is fully landed —
-    * header, deflate body and trailer all within `limit`. The walk reads
-    * only NEW bytes (callers cache), decompresses to /dev/null (the
+    * boundary): `end` is the position after the last member that is fully
+    * landed — header, deflate body and trailer all within `limit`. The walk
+    * reads only NEW bytes (callers cache), decompresses to /dev/null (the
     * deflate body must be measured to find the trailer; output is
-    * discarded, memory stays one 64 KiB buffer).
-    */
-  def completeGzEnd(f: File, from: Long, limit: Long): Long =
-    completeGzWalk(f, from, limit).end
-
-  /** [[completeGzEnd]] with the stop reason — distinguishes "more bytes may
-    * land" (incomplete tail, `malformed = None`) from "framing is broken at
+    * discarded). The stop reason distinguishes "more bytes may land"
+    * (incomplete tail, `malformed = None`) from "framing is broken at
     * `end`, nothing after it is ever schedulable" (`malformed = Some`).
     */
   def completeGzWalk(f: File, from: Long, limit: Long): GzWalkEnd = {
@@ -648,26 +632,6 @@ object GraftWarc {
   }
 }
 
-/** Streaming offset: per-file byte position after the last complete record
-  * (plain) / member (gz) consumed — same JSON shape and escaping as
-  * graft-jsonl's (`graft.sources.OffsetJson`).
-  */
-case class GraftWarcOffset(positions: Map[String, Long]) extends Offset {
-  override def json(): String =
-    positions.toSeq.sortBy(_._1)
-      .map { case (f, p) => s""""${graft.sources.OffsetJson.escape(f)}":$p""" }
-      .mkString("{", ",", "}")
-}
-
-object GraftWarcOffset {
-  def fromJson(s: String): GraftWarcOffset = {
-    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*([0-9]+)""".r
-    GraftWarcOffset(entry.findAllMatchIn(s).map { m =>
-      graft.sources.OffsetJson.unescape(m.group(1)) -> m.group(2).toLong
-    }.toMap)
-  }
-}
-
 class GraftWarcTable(options: CaseInsensitiveStringMap) extends Table
     with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String = s"graft-warc(${GraftWarc.dir(options)})"
@@ -704,7 +668,8 @@ class GraftWarcScan(
   // required columns as indexes into the FULL schema, in required order
   private val fields: Seq[Int] =
     required.fieldNames.toSeq.map(GraftWarc.schema.fieldIndex)
-  private val suffix = Option(options.get("suffix")).filter(_.nonEmpty)
+  private val suffixes =
+    Option(options.get("suffix")).filter(_.nonEmpty).map(Seq(_)).getOrElse(GraftWarc.DefaultSuffixes)
   private val failOnDataLoss = options.getBoolean("failondataloss", true)
   private val permissive =
     options.getOrDefault("mode", "permissive").equalsIgnoreCase("permissive")
@@ -734,230 +699,94 @@ class GraftWarcScan(
     */
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      GraftWarc.listFiles(dir, suffix).flatMap { f =>
-        try {
-          val gz = GraftWarc.isGz(f.getName)
-          val complete =
-            if (gz) {
-              val walk = GraftWarc.completeGzWalk(f, 0L, f.length())
-              // broken gz framing means every byte past the junk is
-              // unschedulable forever — surface it per the loss contract
-              // instead of silently planning a truncated file
-              walk.malformed.foreach { reason =>
-                if (failOnDataLoss || !permissive) throw new IllegalStateException(
-                  s"malformed gzip framing in ${f.getName} at byte ${walk.end}: $reason — " +
-                    s"${f.length() - walk.end} trailing bytes are unreadable. Set " +
-                    "failOnDataLoss=false with mode=permissive to read what precedes the junk.")
-                System.err.println(s"[graft-warc] ${f.getName}: malformed gzip framing at byte " +
-                  s"${walk.end} ($reason); dropping ${f.length() - walk.end} trailing bytes")
-              }
-              walk.end
+      FileTail.planBatch(files, failOnDataLoss) { f =>
+        val gz = GraftWarc.isGz(f.getName)
+        val complete =
+          if (gz) {
+            val walk = GraftWarc.completeGzWalk(f, 0L, f.length())
+            // broken gz framing means every byte past the junk is
+            // unschedulable forever — surface it per the loss contract
+            // instead of silently planning a truncated file
+            walk.malformed.foreach { reason =>
+              if (failOnDataLoss || !permissive) throw new IllegalStateException(
+                s"malformed gzip framing in ${f.getName} at byte ${walk.end}: $reason — " +
+                  s"${f.length() - walk.end} trailing bytes are unreadable. Set " +
+                  "failOnDataLoss=false with mode=permissive to read what precedes the junk.")
+              System.err.println(s"[graft-warc] ${f.getName}: malformed gzip framing at byte " +
+                s"${walk.end} ($reason); dropping ${f.length() - walk.end} trailing bytes")
             }
-            else GraftWarc.completeEnd(f, 0L, f.length())
-          if (complete == 0L) Seq.empty[InputPartition]
-          else if (gz || complete <= maxSplitBytes)
-            Seq(GraftWarcInputPartition(f.getPath, f.getName, 0L, complete, gz,
-              failOnDataLoss, permissive, maxRecordBytes, fields))
-          else {
-            val n = (complete + maxSplitBytes - 1) / maxSplitBytes
-            require(n <= Int.MaxValue, s"${f.getName}: too many splits — raise maxSplitBytes")
-            (0L until n).map { i =>
-              GraftWarcInputPartition(f.getPath, f.getName, i * maxSplitBytes,
-                math.min((i + 1) * maxSplitBytes, complete), gz,
-                failOnDataLoss, permissive, maxRecordBytes, fields, aligned = false)
-            }
+            walk.end
           }
-        } catch {
-          case e @ (_: java.io.FileNotFoundException | _: java.io.EOFException) =>
-            if (failOnDataLoss) throw new IllegalStateException(
-              s"data loss detected on ${f.getName}: file vanished or was truncated during " +
-                "batch planning. Set failOnDataLoss=false to drop it.", e)
-            Seq.empty[InputPartition]
+          else GraftWarc.completeEnd(f, 0L, f.length())
+        if (complete == 0L) Seq.empty[InputPartition]
+        else if (gz || complete <= maxSplitBytes) slice(f, 0L, complete)
+        else {
+          val n = (complete + maxSplitBytes - 1) / maxSplitBytes
+          require(n <= Int.MaxValue, s"${f.getName}: too many splits — raise maxSplitBytes")
+          (0L until n).map { i =>
+            GraftWarcInputPartition(f.getPath, f.getName, i * maxSplitBytes,
+              math.min((i + 1) * maxSplitBytes, complete), gz,
+              failOnDataLoss, permissive, maxRecordBytes, fields, aligned = false)
+          }
         }
-      }.toArray
+      }
     override def createReaderFactory(): PartitionReaderFactory = new GraftWarcReaderFactory
   }
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GraftWarcMicroBatchStream(dir, suffix,
+  private def files: Seq[File] =
+    FileTail.listFiles(dir, suffixes, medium = "graft-warc")
+
+  /** One aligned partition for `[from, until)` of `f`. */
+  private def slice(f: File, from: Long, until: Long): Seq[InputPartition] =
+    Seq(GraftWarcInputPartition(f.getPath, f.getName, from, until, GraftWarc.isGz(f.getName),
+      failOnDataLoss, permissive, maxRecordBytes, fields))
+
+  /** The directory tail ([[FileTailStream]]) with WARC framing: a file's
+    * complete end is the resumable record walk (plain) or member walk (gz);
+    * an admission cut lands on a record boundary, while a gz file's share
+    * admits its whole backlog (members land atomically; documented
+    * softness); each slice is one partition — the ordering contract.
+    */
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    val framing = new TailFraming {
+      override def medium: String = "graft-warc"
+      override def completeEnd(f: File, from: Long, len: Long): Long = {
+        val name = f.getName
+        if (GraftWarc.isGz(name)) {
+          val walk = GraftWarc.completeGzWalk(f, from, len)
+          // junk between members wedges the tail FOREVER (no later byte is
+          // ever schedulable) — a silent stall would look like "no new
+          // data". Strict modes raise; permissive records the stall point
+          // once per (len, mtime) probe so the wedge is observable.
+          walk.malformed.foreach { reason =>
+            if (failOnDataLoss || !permissive) throw new IllegalStateException(
+              s"malformed gzip framing in $name at byte ${walk.end}: $reason — the " +
+                s"${len - walk.end} bytes after it can never be scheduled. Set " +
+                "failOnDataLoss=false with mode=permissive to keep tailing what precedes it.")
+            System.err.println(s"[graft-warc] $name: stream stalled at byte ${walk.end} " +
+              s"on malformed gzip framing ($reason); ${len - walk.end} bytes unreadable")
+          }
+          walk.end
+        }
+        else GraftWarc.completeEnd(f, from, len)
+      }
+      override def cut(f: File, from: Long, target: Long, complete: Long): Long =
+        if (GraftWarc.isGz(f.getName)) complete
+        else GraftWarc.recordBoundaryNear(f, from, target, complete)
+      override def partitions(f: File, from: Long, until: Long): Seq[InputPartition] =
+        slice(f, from, until)
+      override def readerFactory: PartitionReaderFactory = new GraftWarcReaderFactory
+    }
+    new FileTailStream(dir, suffixes, framing,
       startAtLatest = options.getOrDefault("startingoffsets", "earliest")
         .equalsIgnoreCase("latest"),
       failOnDataLoss = failOnDataLoss,
-      permissive = permissive,
       maxBytesPerTrigger = Option(options.get("maxbytespertrigger")).map { v =>
         require(v.toLong > 0, s"maxBytesPerTrigger must be positive, got $v")
         v.toLong
       },
-      retireConsumed = options.getBoolean("retireconsumed", true),
-      maxRecordBytes = maxRecordBytes,
-      fields = fields)
-}
-
-class GraftWarcMicroBatchStream(
-    dir: String,
-    suffix: Option[String],
-    startAtLatest: Boolean,
-    failOnDataLoss: Boolean,
-    permissive: Boolean,
-    maxBytesPerTrigger: Option[Long],
-    retireConsumed: Boolean,
-    maxRecordBytes: Long,
-    fields: Seq[Int]) extends MicroBatchStream with SupportsAdmissionControl {
-
-  private def files: Seq[File] = GraftWarc.listFiles(dir, suffix)
-
-  /** name -> (length, lastModified, completeEnd) memo, same freshness
-    * contract as graft-jsonl's probe cache. On append the walk RESUMES
-    * from the cached complete end — the probe only ever parses new bytes.
-    */
-  private val probeCache = scala.collection.mutable.HashMap.empty[String, (Long, Long, Long)]
-
-  private def completeCached(f: File): Long = {
-    val len = f.length(); val mtime = f.lastModified()
-    val name = f.getName
-    probeCache.get(name) match {
-      case Some((l, m, c)) if l == len && m == mtime => c
-      case prior =>
-        val from = prior.map(_._3).filter(_ <= len).getOrElse(0L)
-        val c =
-          if (GraftWarc.isGz(name)) {
-            val walk = GraftWarc.completeGzWalk(f, from, len)
-            // junk between members wedges the tail FOREVER (no later byte
-            // is ever schedulable) — a silent stall would look like "no new
-            // data". Strict modes raise; permissive records the stall point
-            // once per (len, mtime) probe so the wedge is observable.
-            walk.malformed.foreach { reason =>
-              if (failOnDataLoss || !permissive) throw new IllegalStateException(
-                s"malformed gzip framing in $name at byte ${walk.end}: $reason — the " +
-                  s"${len - walk.end} bytes after it can never be scheduled. Set " +
-                  "failOnDataLoss=false with mode=permissive to keep tailing what precedes it.")
-              System.err.println(s"[graft-warc] $name: stream stalled at byte ${walk.end} " +
-                s"on malformed gzip framing ($reason); ${len - walk.end} bytes unreadable")
-            }
-            walk.end
-          }
-          else GraftWarc.completeEnd(f, from, len)
-        probeCache.put(name, (len, mtime, c))
-        c
-    }
+      retireConsumed = options.getBoolean("retireconsumed", true))
   }
-
-  private def snapshotSafe(pos: File => Long): Map[String, Long] =
-    files.flatMap { f =>
-      try Some(f.getName -> pos(f))
-      catch { case _: java.io.FileNotFoundException | _: java.io.EOFException => None }
-    }.toMap
-
-  override def initialOffset(): Offset =
-    GraftWarcOffset(snapshotSafe(f => if (startAtLatest) completeCached(f) else 0L))
-
-  override def deserializeOffset(json: String): Offset = GraftWarcOffset.fromJson(json)
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException("latestOffset(Offset, ReadLimit) is used")
-
-  /** End-of-complete-data per file, optionally capped — the graft-jsonl
-    * admission contract at record/member granularity: proportional backlog
-    * share, cut at a record boundary (plain; may overshoot by one record)
-    * or the whole backlog (gz — members land atomically), never below the
-    * checkpoint. Truncation below the checkpoint is data loss in strict
-    * mode; permissive holds until the file regrows.
-    */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val startPos = start.asInstanceOf[GraftWarcOffset].positions
-    def startOf(name: String): Long = startPos.getOrElse(name, 0L)
-    def statSafe[A](f: File)(body: => A): Option[A] =
-      try Some(body)
-      catch { case _: java.io.FileNotFoundException | _: java.io.EOFException => None }
-    val fs = files
-    val listed = fs.iterator.map(_.getName).toSet
-    val complete = fs.flatMap(f => statSafe(f)(completeCached(f)).map(f.getName -> _)).toMap
-    // vanished-with-KNOWN-backlog (observed but never scheduled) — the
-    // jsonl source's witness rule, keyed on the statted set, before eviction
-    if (failOnDataLoss) startPos.foreach { case (name, p) =>
-      if (!complete.contains(name)) probeCache.get(name).foreach { case (_, _, c) =>
-        if (c > p) throw new IllegalStateException(
-          s"data loss detected on $name: file vanished with ${c - p} observed-but-unconsumed " +
-            "bytes beyond the checkpoint. Set failOnDataLoss=false to drop it and continue.")
-      }
-    }
-    probeCache.filterInPlace { case (name, _) => listed(name) }
-    complete.foreach { case (name, c) =>
-      if (c < startOf(name) && failOnDataLoss)
-        throw new IllegalStateException(
-          s"data loss detected on $name: consumed through byte ${startOf(name)} but only " +
-            s"$c complete bytes remain (truncated). Set failOnDataLoss=false to wait for " +
-            "the file to regrow past its checkpoint.")
-    }
-    val ends: Map[String, Long] = maxBytesPerTrigger match {
-      case Some(cap) =>
-        val capped = fs.filter(f => complete.contains(f.getName))
-        val backlog = capped.map(f => f -> math.max(0L, complete(f.getName) - startOf(f.getName)))
-        val total = backlog.map(_._2).sum
-        if (total <= cap) complete
-        else {
-          val scale = cap.toDouble / total
-          backlog.map { case (f, b) =>
-            val name = f.getName
-            if (b == 0L) name -> complete(name)
-            else if (GraftWarc.isGz(name)) name -> complete(name) // whole backlog (see scaladoc)
-            else {
-              val share = math.max(1L, math.floor(b * scale).toLong)
-              statSafe(f)(GraftWarc.recordBoundaryNear(
-                f, startOf(name), startOf(name) + share, complete(name)))
-                .map(name -> _).getOrElse(name -> startOf(name))
-            }
-          }.toMap
-        }
-      case None => complete
-    }
-    val clamped = ends.map { case (name, e) => name -> math.max(e, startOf(name)) }
-    val statRaced = startPos.view.filterKeys(k => listed(k) && !clamped.contains(k)).toMap
-    val vanished =
-      if (retireConsumed) Map.empty[String, Long]
-      else startPos.view.filterKeys(k => !listed(k) && !clamped.contains(k)).toMap
-    GraftWarcOffset(clamped ++ statRaced ++ vanished)
-  }
-
-  override def reportLatestOffset(): Offset = GraftWarcOffset(snapshotSafe(completeCached))
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val startPos = start.asInstanceOf[GraftWarcOffset].positions
-    val endPos = end.asInstanceOf[GraftWarcOffset].positions
-    val out = ArrayBuffer.empty[InputPartition]
-    endPos.toSeq.sortBy(_._1).foreach { case (name, until) =>
-      val f = new File(dir, name)
-      val from = startPos.getOrElse(name, 0L)
-      if (!f.isFile) {
-        if (until > from && failOnDataLoss)
-          throw new IllegalStateException(
-            s"data loss detected on $name: file vanished with ${until - from} unread bytes " +
-              "checkpointed. Set failOnDataLoss=false to drop it and continue.")
-      } else {
-        val len = f.length()
-        if (len < from) {
-          if (failOnDataLoss)
-            throw new IllegalStateException(
-              s"data loss detected on $name: consumed through byte $from but the file now has " +
-                s"only $len bytes (truncated). Set failOnDataLoss=false to hold at the " +
-                "checkpoint until the file regrows past it.")
-        } else if (until > from) {
-          if (len < until && failOnDataLoss)
-            throw new IllegalStateException(
-              s"data loss detected on $name: $until bytes were scheduled but the file now has " +
-                s"only $len (truncated mid-trigger). Set failOnDataLoss=false to read what " +
-                "remains and drop the truncated tail.")
-          out += GraftWarcInputPartition(f.getPath, name, from, math.min(until, len),
-            GraftWarc.isGz(name), failOnDataLoss, permissive, maxRecordBytes, fields)
-        }
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = new GraftWarcReaderFactory
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** One Spark partition per file slice. `aligned = true` means `from` is an
@@ -981,24 +810,8 @@ case class GraftWarcInputPartition(
 class GraftWarcReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftWarcInputPartition]
-    val rafOpt =
-      try Some(new RandomAccessFile(p.path, "r"))
-      catch {
-        case e: java.io.FileNotFoundException =>
-          if (p.failOnDataLoss)
-            throw new IllegalStateException(
-              s"data loss detected on ${p.name}: file vanished after planning with " +
-                s"${p.until - p.from} planned bytes. Set failOnDataLoss=false to drop it.", e)
-          None
-      }
-    rafOpt match {
-      case None => new PartitionReader[InternalRow] {
-        override def next(): Boolean = false
-        override def get(): InternalRow = throw new IllegalStateException("empty reader")
-        override def close(): Unit = ()
-      }
-      case Some(raf) =>
-        if (p.gz) new GraftWarcGzReader(p, raf) else new GraftWarcPlainReader(p, raf)
+    FileTail.openSlice(p.path, p.name, p.from, p.until, p.failOnDataLoss) { raf =>
+      if (p.gz) new GraftWarcGzReader(p, raf) else new GraftWarcPlainReader(p, raf)
     }
   }
 }
@@ -1147,11 +960,8 @@ class GraftWarcGzReader(p: GraftWarcInputPartition, raf: RandomAccessFile)
   private var rows: Iterator[InternalRow] = Iterator.empty
   private var current: InternalRow = _
   // CHUNKED buffering: members are record-sized (hundreds of bytes to a
-  // few MB), so one 4 MiB fill serves MANY members — the first cut of this
-  // reader re-read a fresh 1 MiB window per member (measured ~15x slower
-  // than the decompression itself on small-record segments), and inflated
-  // every member twice (measure, then decode). gzipMember now frames,
-  // decodes and CRC-checks in ONE pass over the shared buffer.
+  // few MB), so one 4 MiB fill serves MANY members, and gzipMember frames,
+  // decodes and CRC-checks each in ONE pass over the shared buffer.
   private val windowCap = (Int.MaxValue - 8).toLong
   private val ChunkBytes = 4L << 20
   private var buf: Array[Byte] = Array.emptyByteArray

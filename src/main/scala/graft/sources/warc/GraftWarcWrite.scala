@@ -1,18 +1,17 @@
 package graft.sources.warc
 
-import java.io.File
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, Write, WriteBuilder}
 import org.apache.spark.sql.types.{BinaryType, StringType}
+
+import graft.sources.{SegmentSink, SegmentWriter}
 
 /** The WRITE side of the `graft-warc` medium — archive-as-you-crawl: each
   * epoch's partition lands as ONE immutable `.warc.gz` segment of
   * per-record gzip members (the Common Crawl shape the READ side tails),
   * via write-to-temp + atomic rename at the driver's job/epoch commit —
-  * the `graft-jsonl` sink's effectively-once machinery on the WARC
-  * container: segment names are pure functions of (query tag, epoch,
+  * the shared effectively-once landing ([[graft.sources.SegmentSink]]) on
+  * the WARC container: segment names are pure functions of (query tag, epoch,
   * partition), so a replayed micro-batch renames over its own previous
   * output, and a batch job's uuid tag means SaveMode.Append always ADDS.
   *
@@ -29,7 +28,6 @@ import org.apache.spark.sql.types.{BinaryType, StringType}
   *     replay for the same reason).
   */
 class GraftWarcWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder {
-  private val queryTag = "q" + info.queryId().replace("-", "").take(12)
   private val dir = GraftWarc.dir(
     new org.apache.spark.sql.util.CaseInsensitiveStringMap(info.options()))
 
@@ -66,26 +64,11 @@ class GraftWarcWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder {
   }
   private val cols = WarcWriteCols(uriIdx, contentIdx, contentIsString, typeIdx, dateIdx, idIdx, langIdx)
 
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new BatchWrite {
-      // per-JOB uuid tag: stable across task retries (idempotent
-      // replacement), unique across jobs (Append adds) — the jsonl rule
-      private val jobTag = "b" + java.util.UUID.randomUUID().toString
-      override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory =
-        new GraftWarcWriterFactory(dir, cols, jobTag)
-      override def commit(messages: Array[WriterCommitMessage]): Unit =
-        GraftWarcWrite.commitSegments(dir, jobTag, messages)
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        GraftWarcWrite.sweepTemps(dir, jobTag)
-    }
-    override def toStreaming: StreamingWrite = new StreamingWrite {
-      override def createStreamingWriterFactory(i: PhysicalWriteInfo): StreamingDataWriterFactory =
-        new GraftWarcStreamingWriterFactory(dir, cols, queryTag)
-      override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-        GraftWarcWrite.commitSegments(dir, f"$queryTag-$epochId%06d", messages)
-      override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-        GraftWarcWrite.sweepTemps(dir, f"$queryTag-$epochId%06d")
-    }
+  override def build(): Write = {
+    val (d, c) = (dir, cols) // the writer closure ships; capture values, not this
+    SegmentSink.write(dir, info.queryId(),
+      (tag, partitionId, taskId) => new GraftWarcSegmentWriter(d, c, tag, partitionId, taskId),
+      SegmentSink.land(dir, _, _))
   }
 }
 
@@ -94,70 +77,18 @@ case class WarcWriteCols(
     uri: Int, content: Int, contentIsString: Boolean,
     typ: Int, date: Int, id: Int, lang: Int = -1)
 
-object GraftWarcWrite {
-  /** Driver-side landing: rename every committed task's temp into its
-    * final segment name (REPLACE_EXISTING — a replayed epoch replaces
-    * itself), then sweep stray temps of the tag. Runs only after every
-    * task committed, so abort can never race a rename (the jsonl rule).
-    */
-  private[warc] def commitSegments(
-      dir: String, tag: String, messages: Array[WriterCommitMessage]): Unit = {
-    messages.foreach {
-      case GraftWarcCommit(tmpName, segment, _) if tmpName != null =>
-        java.nio.file.Files.move(
-          new File(dir, tmpName).toPath, new File(dir, segment).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        ()
-      case _ => ()
-    }
-    sweepTemps(dir, tag)
-  }
-
-  private[warc] def sweepTemps(dir: String, tag: String): Unit = {
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(s".seg-$tag-") &&
-        f.getName.endsWith(".inprogress"))
-      .foreach(_.delete())
-  }
-}
-
-class GraftWarcWriterFactory(dir: String, cols: WarcWriteCols, tag: String)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftWarcSegmentWriter(dir, cols, tag, partitionId, taskId)
-}
-
-class GraftWarcStreamingWriterFactory(dir: String, cols: WarcWriteCols, queryTag: String)
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new GraftWarcSegmentWriter(dir, cols, f"$queryTag-$epochId%06d", partitionId, taskId)
-}
-
-/** Task-side writer: lands ONLY its temp (no `.gz` suffix — invisible to
-  * tailing readers); the rename happens at the driver's commit. Records
-  * serialize as per-record gzip members through one close-shielded stream.
+/** Task-side writer: records serialize as per-record gzip members into
+  * the temp through one close-shielded stream.
   */
 class GraftWarcSegmentWriter(
     dir: String, cols: WarcWriteCols, tag: String, partitionId: Int, taskId: Long)
-    extends DataWriter[InternalRow] {
-  private val finalName = f"seg-$tag-$partitionId%04d.warc.gz"
-  // temp carries the ATTEMPT's taskId: concurrent attempts never share a file
-  private val tmpName = s".$finalName.$taskId.inprogress"
-  private val tmp = new File(dir, tmpName)
-  private var out: java.io.OutputStream = _
-  private var shield: java.io.OutputStream = _
-  private var n = 0L
+    extends SegmentWriter(dir, tag, partitionId, taskId, ".warc.gz") {
+  private lazy val shield: java.io.OutputStream = new java.io.FilterOutputStream(stream) {
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+    override def close(): Unit = flush()
+  }
 
   override def write(row: InternalRow): Unit = {
-    if (out == null) {
-      java.nio.file.Files.createDirectories(new File(dir).toPath)
-      out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(tmp), 64 * 1024)
-      shield = new java.io.FilterOutputStream(out) {
-        override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
-        override def close(): Unit = flush()
-      }
-    }
     val uri = row.getUTF8String(cols.uri)
     require(uri != null, "graft-warc: null target_uri row")
     val content =
@@ -174,7 +105,7 @@ class GraftWarcSegmentWriter(
       if (idx < 0 || row.isNullAt(idx)) default else row.getUTF8String(idx).toString
     val headers = Seq(
       "WARC-Type" -> opt(cols.typ, "resource"),
-      "WARC-Record-ID" -> opt(cols.id, s"<urn:graft:$tag:$partitionId:$n>"),
+      "WARC-Record-ID" -> opt(cols.id, s"<urn:graft:$tag:$partitionId:$rows>"),
       "WARC-Date" -> opt(cols.date, "1970-01-01T00:00:00Z"),
       "WARC-Target-URI" -> uri.toString) ++
       // ISO 28500 §5: WARC-Identified-Content-Language — written only when
@@ -184,23 +115,7 @@ class GraftWarcSegmentWriter(
       else Nil)
     val gz = new java.util.zip.GZIPOutputStream(shield, 64 * 1024)
     gz.write(GraftWarc.recordBytes(headers, content))
-    gz.close() // ends the member + its deflater; the shield keeps `out` open
-    n += 1
+    gz.close() // ends the member + its deflater; the shield keeps the temp open
+    rows += 1
   }
-
-  override def commit(): WriterCommitMessage = {
-    if (out != null) out.close()
-    GraftWarcCommit(if (out == null) null else tmpName, finalName, n)
-  }
-
-  override def abort(): Unit = {
-    if (out != null) out.close()
-    tmp.delete()
-    ()
-  }
-
-  override def close(): Unit = ()
 }
-
-case class GraftWarcCommit(tmpName: String, segment: String, rows: Long)
-  extends WriterCommitMessage

@@ -85,9 +85,9 @@ object SubscriptionStates {
     * source-offset coordinates in the per-source end-offset JSONs. For
     * graft-kafka (and the real Kafka source — same checkpoint JSON shape
     * `{"topic":{"0":12}}`) that is the (source, topic, partition) set; for
-    * graft-jsonl's flat `{"a.jsonl":123}` shape it is the (source, file)
-    * set (a new segment joining the tail IS the medium's partition-added
-    * event); for sources without per-partition offsets (memory, rate —
+    * graft-jsonl's and graft-warc's flat `{"a.jsonl":123}` shape it is the
+    * (source, file) set (a new segment joining the tail IS the medium's
+    * partition-added event); for sources without per-partition offsets (memory, rate —
     * offsets are bare numbers) it degrades to the source description set,
     * which never flags a rebalance — correct, since such sources have no
     * partition assignment to change.
@@ -95,8 +95,9 @@ object SubscriptionStates {
   // hoisted: recompiling three regexes per progress event is waste on the
   // shared listener dispatch thread. These mirror the checkpoint shapes the
   // offset serializers emit (GraftKafkaOffset nested {"topic":{"0":12}},
-  // GraftJsonlOffset flat {"name":pos}) — a format change there must be
-  // reflected here for rebalance detection to keep firing.
+  // FileTailOffset flat {"name":pos} for graft-jsonl and graft-warc) — a
+  // format change there must be reflected here for rebalance detection to
+  // keep firing.
   // Both name patterns are escape-aware ((?:[^"\\]|\\.)*) — the serializers
   // escape quotes/backslashes in topic and file names (OffsetJson.escape),
   // and a non-escape-aware match would mis-split on the embedded \" and

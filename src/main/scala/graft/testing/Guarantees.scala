@@ -175,7 +175,7 @@ final class GuaranteeSuite private[testing] (val id: String) extends Serializabl
     val in =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
     chaosTestOver(spark, new ChaosMedium {
-      val checkpoint = java.nio.file.Files.createTempDirectory("graft-guarantee-ckpt").toString
+      val checkpoint = graft.Tables.scratchDir("graft-guarantee-ckpt")
       def write(spark: SparkSession, tasks: Seq[(String, Long)]): Unit = { in.addData(tasks); () }
       def read(spark: SparkSession): DataFrame = in.toDF().toDF("key", "id")
     }, nKeys, total, partitions)(pipeline)
@@ -256,7 +256,7 @@ object ChaosMedium {
   def kafka(root: String, topic: String, nPartitions: Int): ChaosMedium = new ChaosMedium {
     graft.sources.kafkalike.BrokerLog.createTopic(root, topic, nPartitions)
     val checkpoint: String =
-      java.nio.file.Files.createTempDirectory("graft-chaos-kafka-ckpt").toString
+      graft.Tables.scratchDir("graft-chaos-kafka-ckpt")
     // last claimed offset + 1 per partition, the produce hint that spares
     // each record an end-of-log scan (as GraftKafka's writer does)
     private val next = Array.fill(nPartitions)(-1L)
@@ -289,7 +289,7 @@ object ChaosMedium {
   def warc(dir: String, nFiles: Int): ChaosMedium = new ChaosMedium {
     java.nio.file.Files.createDirectories(new java.io.File(dir).toPath)
     val checkpoint: String =
-      java.nio.file.Files.createTempDirectory("graft-chaos-warc-ckpt").toString
+      graft.Tables.scratchDir("graft-chaos-warc-ckpt")
     def write(spark: SparkSession, tasks: Seq[(String, Long)]): Unit =
       tasks.groupBy { case (k, _) =>
         math.floorMod(scala.util.hashing.MurmurHash3.stringHash(k), nFiles)
@@ -308,7 +308,7 @@ object ChaosMedium {
 
   def jsonl(dir: String, nFiles: Int): ChaosMedium = new ChaosMedium {
     val checkpoint: String =
-      java.nio.file.Files.createTempDirectory("graft-chaos-jsonl-ckpt").toString
+      graft.Tables.scratchDir("graft-chaos-jsonl-ckpt")
     def write(spark: SparkSession, tasks: Seq[(String, Long)]): Unit =
       tasks.groupBy { case (k, _) =>
         math.floorMod(scala.util.hashing.MurmurHash3.stringHash(k), nFiles)

@@ -136,8 +136,7 @@ class Bm25Spec extends SparkTestBase {
 
   test("incremental stats segments merge to the inline model exactly — same integers, same ranks") {
     val docs = corpus.toDF("doc_id", "text")
-    val statsDir = java.nio.file.Files
-      .createTempDirectory("graft-bm25-inc").toString + "/stats"
+    val statsDir = tempDir("graft-bm25-inc") + "/stats"
     val queries = Seq(1L -> Seq("spark", "data"), 2L -> Seq("cluster"))
     // three per-batch segments (batch ids durable → replays idempotent)
     Bm25.appendBm25StatsSegment(docs.filter(col("doc_id") <= 2), 0L, statsDir,

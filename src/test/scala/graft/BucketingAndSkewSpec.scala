@@ -13,7 +13,7 @@ class BucketingAndSkewSpec extends SparkTestBase {
   import spark.implicits._
 
   test("co-bucketed tables join with zero Exchange and identical results") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    val tmp = tempDir("graft-bucketed")
     val orders = Tables.orders(spark, sfDir)
     val customer = Tables.customer(spark, sfDir)
     Bucketing.writeBucketed(orders, "orders_b", s"$tmp/orders_b", 8, Seq("o_custkey"))
@@ -50,7 +50,7 @@ class BucketingAndSkewSpec extends SparkTestBase {
     // the pq58 scale claim made concrete: when both corpus versions are
     // stored bucketed by doc_id, the CDC full-outer join needs no shuffle
     // at all — the 100 TB posture for every incremental ingestion run
-    val tmp = java.nio.file.Files.createTempDirectory("graft-snap").toString
+    val tmp = tempDir("graft-snap")
     val d = Tables.documents(spark, sfDir)
     val newSnap = d.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"),
@@ -87,7 +87,7 @@ class BucketingAndSkewSpec extends SparkTestBase {
     // new corpus version bucketed by doc_id, and the score-reuse join
     // plans with no shuffle at all — the posture of every nightly
     // incremental curation run
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incr").toString
+    val tmp = tempDir("graft-incr")
     val d = Tables.documents(spark, sfDir)
     val v1 = d.filter(col("doc_id") % 11 =!= 3)
       .select(col("doc_id"), col("source"), col("lang"),

@@ -32,7 +32,7 @@ class ComposedIncrementalSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
 
     val e = Tables.embeddings(spark, sfDir)
-    val tmp = Files.createTempDirectory("graft-composed").toString
+    val tmp = tempDir("graft-composed")
     val deltaPath = s"$tmp/delta"
     val selfIdxDir = s"$tmp/selfidx"
 
@@ -52,13 +52,13 @@ class ComposedIncrementalSpec extends SparkTestBase {
         perSegmentProbeSec = 1000.0, foldSecPerMb = 1.0, minSegments = 3)
       val qFlag = StreamOps.selfIndexingPqFlagger(
         src, col("vec_id"), col("embedding"), selfIdxDir, cb, bands = 2,
-        checkpoint = Files.createTempDirectory("graft-comp-ck1").toString,
+        checkpoint = tempDir("graft-comp-ck1"),
         compaction = Some(sched)) { df =>
         df.collect().foreach(r => flagged.add(r.getLong(0)))
       }
       val qIvf = StreamOps.ivfAppendSink(
         src, "ivf_comp_spec", deltaPath, "vec_id", "embedding",
-        checkpoint = Files.createTempDirectory("graft-comp-ck2").toString)
+        checkpoint = tempDir("graft-comp-ck2"))
       var triggers = 0
       try {
         arrivals.grouped(63).foreach { chunk =>

@@ -10,8 +10,6 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.sources.kafkalike.BrokerLog
 import graft.sources.jsonl.GraftJsonl
 
@@ -31,7 +29,7 @@ import graft.sources.jsonl.GraftJsonl
   * {{{ sbt 'set Test/javaOptions += "-Dgraft.fuzz.seed=<base>"' \
   *       "testOnly graft.ConcurrencyChaosSpec" }}}
   */
-class ConcurrencyChaosSpec extends AnyFunSuite {
+class ConcurrencyChaosSpec extends SparkTestBase {
 
   private val seed = sys.props.get("graft.fuzz.seed").map(_.toLong).getOrElse(20260815L)
 
@@ -63,7 +61,7 @@ class ConcurrencyChaosSpec extends AnyFunSuite {
 
   private def brokerIteration(s: Long): Unit = {
     val rnd = new Random(s)
-    val root = Files.createTempDirectory("chaos-broker").toString
+    val root = tempDir("chaos-broker")
     val topic = "chaos"
     val nParts = 1 + rnd.nextInt(2)
     val nProducers = 3
@@ -190,7 +188,7 @@ class ConcurrencyChaosSpec extends AnyFunSuite {
     * advertised partition's directory is missing.
     */
   private def expandIteration(s: Long): Unit = {
-    val root = Files.createTempDirectory("chaos-expand").toString
+    val root = tempDir("chaos-expand")
     val topic = "grow"
     val target = 9
     // concurrent idempotent creation: both racers must succeed and agree
@@ -247,7 +245,7 @@ class ConcurrencyChaosSpec extends AnyFunSuite {
 
   private def jsonlIteration(s: Long): Unit = {
     val rnd = new Random(s)
-    val dir = Files.createTempDirectory("chaos-jsonl").toString
+    val dir = tempDir("chaos-jsonl")
     val nAppenders = 3
     val perAppender = 12
     val tornLines = 8
@@ -313,7 +311,7 @@ class ConcurrencyChaosSpec extends AnyFunSuite {
       val positions = scala.collection.mutable.Map.empty[String, Long]
       val seenPerFile = scala.collection.mutable.Map.empty[String, Int]
       while (liveWriters.get() > 0) {
-        GraftJsonl.listFiles(dir, ".jsonl").foreach { f =>
+        graft.sources.FileTail.listFiles(dir, Seq(".jsonl")).foreach { f =>
           try {
             val complete = GraftJsonl.completeLength(f)
             val last = positions.getOrElse(f.getName, 0L)

@@ -10,7 +10,7 @@ import graft.sources.CorpusIO
 class CorpusIOSpec extends SparkTestBase {
 
   test("JSONL round trip with lang partitioning preserves the corpus exactly") {
-    val out = Files.createTempDirectory("graft-jsonl").toString
+    val out = tempDir("graft-jsonl")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     CorpusIO.writeJsonl(docs, out, partitionByCols = Seq("lang"))
 
@@ -28,7 +28,7 @@ class CorpusIOSpec extends SparkTestBase {
   }
 
   test("malformed lines drop (or surface) instead of failing the read") {
-    val dir = Files.createTempDirectory("graft-jsonl-bad").toString
+    val dir = tempDir("graft-jsonl-bad")
     Files.write(java.nio.file.Paths.get(dir, "part-0.json"),
       """{"doc_id": 1, "text": "ok"}
         |this is not json

@@ -43,7 +43,7 @@ class CrawlRefreshSpec extends SparkTestBase {
       tsCol = "ts", watermarkDelay = "10 minutes",
       blockedProvider = () => blockedDomains,
       refreshEveryBatches = 1,
-      checkpointDir = Files.createTempDirectory("crawl-refresh-ckpt").toString,
+      checkpointDir = tempDir("crawl-refresh-ckpt"),
       queryName = "crawl_refresh",
       pslProvider = Some(() => graft.pipeline.Psl.parse(pslLines)),
       robotsProvider = Some(("graftbot", () => robotsTable))) { out =>
@@ -102,7 +102,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     // segments takes effect at the next trigger, and the URL-dedup state
     // spans segments (a re-crawled URL in a later segment drops)
     import graft.sources.warc.GraftWarc
-    val warcDir = Files.createTempDirectory("warc-live").toString
+    val warcDir = tempDir("warc-live")
     def rec(uri: String, i: Int) = (Seq(
       "WARC-Type" -> "response", "WARC-Target-URI" -> uri,
       "WARC-Date" -> f"2026-01-02T03:04:${i % 60}%02dZ"), body(i).getBytes("UTF-8"))
@@ -119,7 +119,7 @@ class CrawlRefreshSpec extends SparkTestBase {
       tsCol = "ts", watermarkDelay = "10 minutes",
       blockedProvider = () => blockedDomains,
       refreshEveryBatches = 1,
-      checkpointDir = Files.createTempDirectory("warc-live-ckpt").toString,
+      checkpointDir = tempDir("warc-live-ckpt"),
       queryName = "warc_live_gate") { out =>
       out.select(col("canon_url")).collect()
         .foreach(r => got.add(r.getAs[String]("canon_url")))

@@ -390,7 +390,7 @@ class DedupSpec extends SparkTestBase {
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
     val queries = e.filter(col("vec_id") < 10)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
+    val tmp = tempDir("graft-ivf-idx")
     Knn.buildIvfIndex(e, "vec_id", "embedding", nlist = 16,
       tableName = "ivf_idx_spec", path = s"$tmp/ivf_idx", buckets = 8)
     try {

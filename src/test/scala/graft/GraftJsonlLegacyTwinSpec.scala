@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import graft.SparkTestBase
+import graft.sources.SegmentCommit
 
 /** Checkpoint-compatibility of the tagged streaming segment names: a
   * checkpoint created before the query tag landed in the name replays its
@@ -17,7 +18,7 @@ class GraftJsonlLegacyTwinSpec extends SparkTestBase {
     val tmpName = s".$finalName.77.inprogress"
     Files.writeString(new File(dir, tmpName).toPath, lines)
     GraftJsonl.commitSegments(dir, tag,
-      Array(GraftJsonlCommit(tmpName, finalName, lines.linesIterator.size.toLong)))
+      Array(SegmentCommit(tmpName, finalName, lines.linesIterator.size.toLong)))
     finalName
   }
 

@@ -241,7 +241,7 @@ class GraftJsonlSourceSpec extends SparkTestBase {
   }
 
   test("offset JSON round-trips hostile file names (quotes, backslashes, control chars)") {
-    import graft.sources.jsonl.GraftJsonlOffset
+    import graft.sources.FileTailOffset
     // every class the escaper handles: quote, backslash, literal \u prefix,
     // trailing backslash, newline/tab (legal Linux filename bytes that would
     // split Spark's line-oriented offset log), plus a plain name
@@ -250,14 +250,14 @@ class GraftJsonlSourceSpec extends SparkTestBase {
       """tricky\"mix.jsonl""", """literalA.jsonl""", "trail\\",
       "new\nline.jsonl", "tab\there.jsonl", "ctl.jsonl")
     val pos = names.zipWithIndex.map { case (n, i) => n -> (i * 37L + 1) }.toMap
-    val json = GraftJsonlOffset(pos).json()
+    val json = FileTailOffset(pos).json()
     assert(!json.exists(_ < 0x20), s"offset JSON must be single-line/control-free: $json")
-    assert(GraftJsonlOffset.fromJson(json).positions == pos,
-      s"round-trip mangled the names: ${GraftJsonlOffset.fromJson(json).positions} vs $pos")
+    assert(FileTailOffset.fromJson(json).positions == pos,
+      s"round-trip mangled the names: ${FileTailOffset.fromJson(json).positions} vs $pos")
   }
 
   test("property: offset JSON escape round-trips arbitrary names and positions") {
-    import graft.sources.jsonl.GraftJsonlOffset
+    import graft.sources.FileTailOffset
     val rnd = new scala.util.Random(42)
     (0 until 300).foreach { trial =>
       val names = (0 until 1 + rnd.nextInt(5)).map { _ =>
@@ -265,10 +265,27 @@ class GraftJsonlSourceSpec extends SparkTestBase {
         (0 until len).map(_ => rnd.nextInt(0xFFFF).toChar).mkString // incl controls, ", \, surrogates
       }.distinct
       val m = names.map(_ -> math.abs(rnd.nextLong() % 1000000000000L)).toMap
-      val json = GraftJsonlOffset(m).json()
+      val json = FileTailOffset(m).json()
       assert(!json.exists(_ < 0x20), s"trial $trial: control char leaked into the offset line")
-      val back = GraftJsonlOffset.fromJson(json).positions
+      val back = FileTailOffset.fromJson(json).positions
       assert(back == m, s"trial $trial: ${m.keys.map(_.getBytes("UTF-8").toSeq)} mangled")
+    }
+    // checkpoint compatibility: offsets written by the media's former
+    // per-medium offset classes (graft-jsonl's and graft-warc's, the same
+    // sorted `{"name":pos}` JSON) resume under the one class, and
+    // re-serialize byte-identically
+    val bs = "\\" // one backslash, spelled so no unicode escape reaches the lexer
+    val committed = Seq(
+      """{"a.jsonl":123,"b.jsonl":0}""" -> Map("a.jsonl" -> 123L, "b.jsonl" -> 0L),
+      s"""{"he$bs"llo.jsonl":7,"new${bs}u000aline.jsonl":4096,"x$bs${bs}y.jsonl":1}""" ->
+        Map("he\"llo.jsonl" -> 7L, "new\nline.jsonl" -> 4096L, "x\\y.jsonl" -> 1L),
+      """{"crawl-00.warc.gz":1048576,"live.warc":812,"seg-q0123456789ab-000007-0002.warc.gz":9999999999}""" ->
+        Map("crawl-00.warc.gz" -> 1048576L, "live.warc" -> 812L,
+          "seg-q0123456789ab-000007-0002.warc.gz" -> 9999999999L),
+      "{}" -> Map.empty[String, Long])
+    committed.foreach { case (literal, positions) =>
+      assert(FileTailOffset.fromJson(literal).positions == positions, s"$literal parsed differently")
+      assert(FileTailOffset(positions).json() == literal, s"$literal re-serialized differently")
     }
   }
 
@@ -599,14 +616,14 @@ class GraftJsonlSourceSpec extends SparkTestBase {
     // 10 more complete bytes, so within the run strict mode must report the
     // loss instead of silently retiring the entry
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import graft.sources.jsonl.{GraftJsonlMicroBatchStream, GraftJsonlOffset}
+    import graft.sources.FileTailOffset
     val dir = freshDir()
     GraftJsonl.append(dir, "gone.jsonl", Seq("""{"a":1}""", """{"a":2}""")) // 2 x 8 bytes
-    val stream = new GraftJsonlMicroBatchStream(dir, ".jsonl",
+    val stream = GraftJsonl.stream(dir, ".jsonl",
       startAtLatest = false, failOnDataLoss = true,
       maxBytesPerTrigger = Some(8L))
-    val e1 = stream.latestOffset(GraftJsonlOffset(Map.empty), ReadLimit.allAvailable())
-      .asInstanceOf[GraftJsonlOffset]
+    val e1 = stream.latestOffset(FileTailOffset(Map.empty), ReadLimit.allAvailable())
+      .asInstanceOf[FileTailOffset]
     assert(e1.positions("gone.jsonl") == 8L, s"cap must defer the second line: $e1")
     assert(new File(dir, "gone.jsonl").delete())
     val ex = intercept[IllegalStateException] {
@@ -616,12 +633,12 @@ class GraftJsonlSourceSpec extends SparkTestBase {
     // the benign twin: fully consumed at vanish time retires silently
     val dir2 = freshDir()
     GraftJsonl.append(dir2, "done.jsonl", Seq("""{"a":1}"""))
-    val s2 = new GraftJsonlMicroBatchStream(dir2, ".jsonl",
+    val s2 = GraftJsonl.stream(dir2, ".jsonl",
       startAtLatest = false, failOnDataLoss = true, maxBytesPerTrigger = None)
-    val o1 = s2.latestOffset(GraftJsonlOffset(Map.empty), ReadLimit.allAvailable())
-      .asInstanceOf[GraftJsonlOffset]
+    val o1 = s2.latestOffset(FileTailOffset(Map.empty), ReadLimit.allAvailable())
+      .asInstanceOf[FileTailOffset]
     assert(new File(dir2, "done.jsonl").delete())
-    val o2 = s2.latestOffset(o1, ReadLimit.allAvailable()).asInstanceOf[GraftJsonlOffset]
+    val o2 = s2.latestOffset(o1, ReadLimit.allAvailable()).asInstanceOf[FileTailOffset]
     assert(o2.positions.isEmpty, s"fully-consumed vanish must retire, got $o2")
   }
 
@@ -655,42 +672,42 @@ class GraftJsonlSourceSpec extends SparkTestBase {
 
   test("retention never deletes a truncated-below-checkpoint file being held for regrow") {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import graft.sources.jsonl.{GraftJsonlMicroBatchStream, GraftJsonlOffset}
+    import graft.sources.FileTailOffset
     val dir = freshDir()
     GraftJsonl.append(dir, "h.jsonl", (0 until 5).map(i => s"""{"i":$i}""")) // 40 bytes
-    val stream = new GraftJsonlMicroBatchStream(dir, ".jsonl",
+    val stream = GraftJsonl.stream(dir, ".jsonl",
       startAtLatest = false, failOnDataLoss = false, maxBytesPerTrigger = None,
       retentionMs = Some(0L))
-    val o1 = stream.latestOffset(GraftJsonlOffset(Map.empty), ReadLimit.allAvailable())
-      .asInstanceOf[GraftJsonlOffset]
+    val o1 = stream.latestOffset(FileTailOffset(Map.empty), ReadLimit.allAvailable())
+      .asInstanceOf[FileTailOffset]
     assert(o1.positions("h.jsonl") == 40L)
     // copy-truncate rotation rewrote the file shorter: its current content
     // was never delivered — permissive mode holds at the checkpoint, so
     // retirement (startOf == complete is false) must NOT delete it
     val ch = new java.io.FileOutputStream(new File(dir, "h.jsonl"), true).getChannel
     ch.truncate(16L); ch.close()
-    val o2 = stream.latestOffset(o1, ReadLimit.allAvailable()).asInstanceOf[GraftJsonlOffset]
+    val o2 = stream.latestOffset(o1, ReadLimit.allAvailable()).asInstanceOf[FileTailOffset]
     assert(new File(dir, "h.jsonl").isFile, "retention deleted a held truncated file")
     assert(o2.positions("h.jsonl") == 40L, s"checkpoint must hold: $o2")
   }
 
   test("retireConsumed=false does not resurrect a retention-retired entry") {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import graft.sources.jsonl.{GraftJsonlMicroBatchStream, GraftJsonlOffset}
+    import graft.sources.FileTailOffset
     val dir = freshDir()
     GraftJsonl.append(dir, "r.jsonl", Seq("""{"i":0}"""))
-    val stream = new GraftJsonlMicroBatchStream(dir, ".jsonl",
+    val stream = GraftJsonl.stream(dir, ".jsonl",
       startAtLatest = false, failOnDataLoss = true, maxBytesPerTrigger = None,
       retireConsumed = false, retentionMs = Some(0L))
-    val o1 = stream.latestOffset(GraftJsonlOffset(Map.empty), ReadLimit.allAvailable())
-      .asInstanceOf[GraftJsonlOffset]
+    val o1 = stream.latestOffset(FileTailOffset(Map.empty), ReadLimit.allAvailable())
+      .asInstanceOf[FileTailOffset]
     assert(o1.positions("r.jsonl") == 8L)
-    val o2 = stream.latestOffset(o1, ReadLimit.allAvailable()).asInstanceOf[GraftJsonlOffset]
+    val o2 = stream.latestOffset(o1, ReadLimit.allAvailable()).asInstanceOf[FileTailOffset]
     assert(!new File(dir, "r.jsonl").isFile, "retention must have deleted the consumed file")
     assert(!o2.positions.contains("r.jsonl"),
       s"a retired name must leave the offset even with retireConsumed=false: $o2")
     // and it stays gone on the next trigger (no vanished-carry resurrection)
-    val o3 = stream.latestOffset(o2, ReadLimit.allAvailable()).asInstanceOf[GraftJsonlOffset]
+    val o3 = stream.latestOffset(o2, ReadLimit.allAvailable()).asInstanceOf[FileTailOffset]
     assert(!o3.positions.contains("r.jsonl"), s"resurrected: $o3")
   }
 
@@ -706,16 +723,17 @@ class GraftJsonlSourceSpec extends SparkTestBase {
 
   test("streaming catch-up splits a deep backlog slice into byte-range partitions") {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import graft.sources.jsonl.{GraftJsonlInputPartition, GraftJsonlMicroBatchStream, GraftJsonlOffset}
+    import graft.sources.FileTailOffset
+    import graft.sources.jsonl.GraftJsonlInputPartition
     val dir = freshDir()
     val lines = (0 until 500).map(i => s"""{"i":$i,"pad":"${"z" * (i % 23)}"}""")
     GraftJsonl.append(dir, "deep.jsonl", lines)
     // unit-level planning check: a first trigger over the whole backlog with
     // no admission cap must parallelize the slice
-    val stream = new GraftJsonlMicroBatchStream(dir, ".jsonl",
+    val stream = GraftJsonl.stream(dir, ".jsonl",
       startAtLatest = false, failOnDataLoss = true, maxBytesPerTrigger = None,
       maxSplitBytes = Some(2048L))
-    val start = GraftJsonlOffset(Map.empty)
+    val start = FileTailOffset(Map.empty)
     val end = stream.latestOffset(start, ReadLimit.allAvailable())
     val parts = stream.planInputPartitions(start, end)
       .map(_.asInstanceOf[GraftJsonlInputPartition])

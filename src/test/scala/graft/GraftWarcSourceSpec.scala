@@ -30,7 +30,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("batch read: plain records with standard headers as columns, all headers in the map") {
-    val dir = Files.createTempDirectory("warc-batch").toString
+    val dir = tempDir("warc-batch")
     GraftWarc.append(dir, "a.warc", Seq(
       rec("http://ex.com/1", "hello world"),
       rec("http://ex.com/2", "second récord ütf-8", extra = Seq("X-Custom" -> "v1"))))
@@ -57,7 +57,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("batch read: per-record gzip members with exact member offsets; multi-record member subs") {
-    val dir = Files.createTempDirectory("warc-gz").toString
+    val dir = tempDir("warc-gz")
     GraftWarc.writeGz(dir, "seg.warc.gz", Seq(
       rec("http://ex.com/a", "alpha"),
       rec("http://ex.com/b", "bravo bravo")))
@@ -81,12 +81,12 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("streaming tail: a partial record stays invisible until its framing lands") {
-    val dir = Files.createTempDirectory("warc-tail").toString
+    val dir = tempDir("warc-tail")
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
     GraftWarc.append(dir, "t.warc", Seq(rec("u://1", "one")))
     val q = spark.readStream.format("graft-warc").option("path", dir).load()
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("warc-tail-ckpt").toString)
+      .option("checkpointLocation", tempDir("warc-tail-ckpt"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         b.collect().foreach(r => got.add((r.getAs[String]("file"), r.getAs[Long]("pos"),
           new String(r.getAs[Array[Byte]]("content"), "UTF-8"))))
@@ -116,7 +116,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("maxBytesPerTrigger cuts at record boundaries and never starves") {
-    val dir = Files.createTempDirectory("warc-cap").toString
+    val dir = tempDir("warc-cap")
     GraftWarc.append(dir, "c.warc",
       (1 to 20).map(i => rec(s"u://$i", "x" * 100)))
     val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -124,7 +124,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
       .option("maxBytesPerTrigger", "150") // << one ~300-byte record
       .load()
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("warc-cap-ckpt").toString)
+      .option("checkpointLocation", tempDir("warc-cap-ckpt"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         val n = b.count(); if (n > 0) batches += n
         ()
@@ -140,7 +140,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
     // junk bytes land right after a consumed record; the per-trigger share
     // (150 B) is below the next good record's size — the progress fallback
     // must resync past the junk and still admit one record per trigger
-    val dir = Files.createTempDirectory("warc-junkcap").toString
+    val dir = tempDir("warc-junkcap")
     val f = new java.io.FileOutputStream(new File(dir, "j.warc"))
     f.write(GraftWarc.recordBytes(rec("u://0", "zero")._1, "zero".getBytes))
     f.write("JUNK bytes between records\r\n\r\n".getBytes("UTF-8"))
@@ -151,7 +151,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
     val q = spark.readStream.format("graft-warc").option("path", dir)
       .option("maxBytesPerTrigger", "150").load()
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("warc-junkcap-ckpt").toString)
+      .option("checkpointLocation", tempDir("warc-junkcap-ckpt"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         b.select(col("target_uri")).collect().foreach(r => got.add(r.getString(0)))
         ()
@@ -162,10 +162,10 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("failOnDataLoss: truncation below the checkpoint fails strict, permissive holds") {
-    val dir = Files.createTempDirectory("warc-loss").toString
+    val dir = tempDir("warc-loss")
     val f = new File(dir, "l.warc")
     GraftWarc.append(dir, "l.warc", Seq(rec("u://1", "aaaa"), rec("u://2", "bbbb")))
-    val ckpt = Files.createTempDirectory("warc-loss-ckpt").toString
+    val ckpt = tempDir("warc-loss-ckpt")
     def start(strict: Boolean) = spark.readStream.format("graft-warc")
       .option("path", dir).option("failOnDataLoss", strict.toString).load()
       .writeStream.option("checkpointLocation", ckpt)
@@ -192,7 +192,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("permissive mode resyncs past a malformed record (drop-not-fail); failfast raises") {
-    val dir = Files.createTempDirectory("warc-mal").toString
+    val dir = tempDir("warc-mal")
     val good1 = GraftWarc.recordBytes(rec("u://1", "first")._1, "first".getBytes)
     val junk = "GARBAGE not a warc record\r\nstill garbage\r\n\r\n".getBytes("UTF-8")
     val good2 = GraftWarc.recordBytes(rec("u://2", "second")._1, "second".getBytes)
@@ -210,7 +210,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("batch byte-range split: every record delivered exactly once under first-byte ownership") {
-    val dir = Files.createTempDirectory("warc-split").toString
+    val dir = tempDir("warc-split")
     // bodies that CONTAIN the WARC magic mid-content must not fool resync
     val n = 400
     GraftWarc.append(dir, "big.warc", (1 to n).map(i =>
@@ -230,7 +230,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
     // gzipMemberSize frames members without checksum validation; the
     // checked decompression is where a flipped CRC/ISIZE byte surfaces —
     // drop-not-fail must cover it
-    val dir = Files.createTempDirectory("warc-badtrailer").toString
+    val dir = tempDir("warc-badtrailer")
     GraftWarc.writeGz(dir, "t.warc.gz", Seq(rec("u://1", "alpha"), rec("u://2", "bravo")))
     // corrupt the FIRST member's trailer: find the second member's start
     // (gzip magic 1f 8b 08) and flip a CRC byte just before it
@@ -250,7 +250,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("duplicate header names: map column dedups last-wins, matching the projected columns") {
-    val dir = Files.createTempDirectory("warc-duphdr").toString
+    val dir = tempDir("warc-duphdr")
     GraftWarc.append(dir, "d.warc", Seq(
       (Seq("WARC-Type" -> "resource", "Content-Type" -> "text/a",
         "Content-Type" -> "text/b", "WARC-Target-URI" -> "u://1"),
@@ -272,7 +272,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("column pruning reaches the scan: a header-only projection drops the block column") {
-    val dir = Files.createTempDirectory("warc-prune").toString
+    val dir = tempDir("warc-prune")
     GraftWarc.append(dir, "p.warc", (1 to 50).map(i => rec(s"u://$i", "B" * 10000)))
     val proj = spark.read.format("graft-warc").option("path", dir)
       .load().select("target_uri", "content_length")
@@ -290,7 +290,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("http_body strips the HTTP message headers from response blocks; non-HTTP gives null") {
-    val dir = Files.createTempDirectory("warc-http").toString
+    val dir = tempDir("warc-http")
     val httpMsg = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<html>body bytes</html>"
     val lfMsg = "HTTP/1.0 200 OK\nServer: old\n\npayload"
     GraftWarc.append(dir, "h.warc", Seq(
@@ -309,7 +309,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("DSv2 sink: batch write roundtrips through the source; Append adds segments") {
-    val dir = Files.createTempDirectory("warc-sink").toString
+    val dir = tempDir("warc-sink")
     val docs = (1 to 40).map(i =>
       (s"https://ex.com/p/$i", s"body of $i", if (i % 2 == 0) "response" else "resource"))
       .toDF("target_uri", "content", "warc_type")
@@ -329,8 +329,8 @@ class GraftWarcSourceSpec extends SparkTestBase {
   test("DSv2 sink: streaming epochs land effectively-once (a replayed epoch replaces itself)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("warc-sink-stream").toString
-    val ckpt = Files.createTempDirectory("warc-sink-stream-ckpt").toString
+    val dir = tempDir("warc-sink-stream")
+    val ckpt = tempDir("warc-sink-stream-ckpt")
     val in = MemoryStream[(String, String)]
     def start() = in.toDF().toDF("target_uri", "content")
       .writeStream.format("graft-warc")
@@ -360,7 +360,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
     val suite = graft.testing.GuaranteeSuite()
     suite.chaosTestOver(spark,
       graft.testing.ChaosMedium.warc(
-        Files.createTempDirectory("graft-chaos-warc").toString, nFiles = 4),
+        tempDir("graft-chaos-warc"), nFiles = 4),
       nKeys = 20, total = 1000)(identity)
   }
 
@@ -418,7 +418,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
     // RAW HTTP response records — status line, headers, chunked and/or
     // gzip'd bodies, mixed charsets — read through the source, decode the
     // payloads with http_text, and drive crawlToCorpus off the parsed rows
-    val dir = Files.createTempDirectory("warc-crawl").toString
+    val dir = tempDir("warc-crawl")
     val docs = responseRecords(1, 61)
     docs.grouped(20).zipWithIndex.foreach { case (g, i) =>
       GraftWarc.writeGz(dir, f"crawl-$i%02d.warc.gz", g)
@@ -451,9 +451,9 @@ class GraftWarcSourceSpec extends SparkTestBase {
     // follows is unknowable) — unlike a corrupt TRAILER (framed, steppable)
     // or plain-file junk (resyncable). Strict modes must raise instead of
     // silently planning a truncated file.
-    val dir = Files.createTempDirectory("warc-gzjunk").toString
+    val dir = tempDir("warc-gzjunk")
     GraftWarc.writeGz(dir, "j.warc.gz", Seq(rec("u://1", "alpha")))
-    val tmp = Files.createTempDirectory("warc-gzjunk2").toString
+    val tmp = tempDir("warc-gzjunk2")
     GraftWarc.writeGz(tmp, "t.warc.gz", Seq(rec("u://2", "bravo")))
     val f = new File(dir, "j.warc.gz")
     val out = new java.io.FileOutputStream(f, true)
@@ -488,7 +488,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("unaligned split + truncation below the planned end: strict raises instead of zero rows") {
-    val dir = Files.createTempDirectory("warc-trunc-split").toString
+    val dir = tempDir("warc-trunc-split")
     GraftWarc.append(dir, "s.warc", Seq(rec("u://1", "alpha"), rec("u://2", "bravo")))
     val f = new File(dir, "s.warc")
     val len = f.length()
@@ -523,7 +523,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
     // (watermark URL-dedup + blocklist + C4 + Gopher), with a segment
     // landing MID-STREAM; the admitted canonical-URL set must equal the
     // batch crawl front over the same directory
-    val dir = Files.createTempDirectory("warc-live-crawl").toString
+    val dir = tempDir("warc-live-crawl")
     GraftWarc.writeGz(dir, "crawl-00.warc.gz", responseRecords(1, 31))
     def parse(df: DataFrame): DataFrame = df
       .filter(col("warc_type") === "response")
@@ -542,7 +542,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
       blockedDomains = blocked, gopher = gopher)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val q = gated.writeStream
-      .option("checkpointLocation", Files.createTempDirectory("warc-live-ckpt").toString)
+      .option("checkpointLocation", tempDir("warc-live-ckpt"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         b.select("canon_url").collect().foreach(r => got.add(r.getString(0)))
         ()
@@ -570,7 +570,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("WARC → WET conversion: responses become conversion records of extracted text") {
-    val dir = Files.createTempDirectory("warc-wet-src").toString
+    val dir = tempDir("warc-wet-src")
     def html(i: Int) =
       s"""<html><head><style>p{}</style></head><body><h1>Title $i</h1>
          |<p>Hello world number $i &amp; more.</p>
@@ -589,7 +589,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
     GraftWarc.writeGz(dir, "src.warc.gz", recs)
     val wet = graft.pipeline.WebCuration.toWetRecords(readBatch(dir))
     // land as a real WET segment through the sink and read it back
-    val wetDir = Files.createTempDirectory("warc-wet-out").toString
+    val wetDir = tempDir("warc-wet-out")
     wet.write.format("graft-warc").mode("append").option("path", wetDir).save()
     val back = readBatch(wetDir)
       .select(col("warc_type"), col("record_id"), col("target_uri"),
@@ -609,7 +609,7 @@ class GraftWarcSourceSpec extends SparkTestBase {
   }
 
   test("sink rejects a non-string optional column at plan time, not executor-side") {
-    val dir = Files.createTempDirectory("warc-badopt").toString
+    val dir = tempDir("warc-badopt")
     val df = Seq(("u://1", "payload", 7)).toDF("target_uri", "content", "warc_type")
     val e = intercept[Throwable] {
       df.write.format("graft-warc").option("path", dir).mode("append").save()
@@ -617,5 +617,112 @@ class GraftWarcSourceSpec extends SparkTestBase {
     val msg = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(5)
       .map(_.getMessage).mkString(" | ")
     assert(msg.contains("'warc_type' must be string"), s"wrong error: $msg")
+  }
+
+  /** The stream a `readStream.format("graft-warc")` query drives, for
+    * unit-level offset checks without a query.
+    */
+  private def tailStream(dir: String, opts: (String, String)*): graft.sources.FileTailStream = {
+    val m = new java.util.HashMap[String, String]()
+    m.put("path", dir)
+    opts.foreach { case (k, v) => m.put(k, v) }
+    new graft.sources.warc.GraftWarcScan(new org.apache.spark.sql.util.CaseInsensitiveStringMap(m))
+      .toMicroBatchStream("unused").asInstanceOf[graft.sources.FileTailStream]
+  }
+
+  /** The per-source offset JSON of the latest checkpointed batch. */
+  private def latestOffsetLog(ckpt: String): String = {
+    val offsetsDir = new File(s"$ckpt/offsets")
+    val latest = offsetsDir.listFiles().map(_.getName).filter(_.forall(_.isDigit)).map(_.toInt).max
+    new String(Files.readAllBytes(new File(offsetsDir, latest.toString).toPath), "UTF-8")
+  }
+
+  test("strict mode reports a vanished file whose OBSERVED backlog was never scheduled") {
+    // the admission cap defers the second record; the file then vanishes.
+    // Zero unread SCHEDULED bytes — but the probe cache witnessed a second
+    // complete record, so within the run strict mode must report the loss
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import graft.sources.FileTailOffset
+    val dir = tempDir("warc-gone")
+    GraftWarc.append(dir, "gone.warc", Seq(rec("u://1", "x" * 100), rec("u://2", "y" * 100)))
+    val first = GraftWarc.recordBytes(rec("u://1", "x" * 100)._1, ("x" * 100).getBytes).length
+    val stream = tailStream(dir, "maxBytesPerTrigger" -> "10")
+    val e1 = stream.latestOffset(FileTailOffset(Map.empty), ReadLimit.allAvailable())
+      .asInstanceOf[FileTailOffset]
+    assert(e1.positions("gone.warc") == first.toLong, s"cap must defer the second record: $e1")
+    assert(new File(dir, "gone.warc").delete())
+    val ex = intercept[IllegalStateException] {
+      stream.latestOffset(e1, ReadLimit.allAvailable())
+    }
+    assert(ex.getMessage.contains("observed-but-unconsumed"), ex.getMessage)
+    // the benign twin: a gz segment fully consumed at vanish time retires
+    val dir2 = tempDir("warc-done")
+    GraftWarc.writeGz(dir2, "done.warc.gz", Seq(rec("u://3", "z")))
+    val s2 = tailStream(dir2)
+    val o1 = s2.latestOffset(FileTailOffset(Map.empty), ReadLimit.allAvailable())
+      .asInstanceOf[FileTailOffset]
+    assert(o1.positions("done.warc.gz") == new File(dir2, "done.warc.gz").length())
+    assert(new File(dir2, "done.warc.gz").delete())
+    val o2 = s2.latestOffset(o1, ReadLimit.allAvailable()).asInstanceOf[FileTailOffset]
+    assert(o2.positions.isEmpty, s"fully-consumed vanish must retire, got $o2")
+  }
+
+  test("rotation of a fully consumed segment retires its offset entry; retireConsumed=false carries it") {
+    def rotate(retireConsumed: Boolean): String = {
+      val dir = tempDir("warc-rotate")
+      val ckpt = tempDir("warc-rotate-ckpt")
+      GraftWarc.writeGz(dir, "old.warc.gz", Seq(rec("u://0", "zero"), rec("u://1", "one")))
+      GraftWarc.append(dir, "live.warc", Seq(rec("u://2", "two")))
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      def start() = spark.readStream.format("graft-warc").option("path", dir)
+        .option("retireConsumed", retireConsumed.toString).load()
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.select(col("target_uri")).collect().foreach(r => got.add(r.getString(0)))
+          ()
+        }.start()
+      val q = start() // strict failOnDataLoss (the default)
+      try q.processAllAvailable() finally q.stop()
+      assert(got.size == 3, s"first run delivers the backlog: ${got.asScala.toSeq}")
+      // routine log rotation: the fully consumed segment is deleted
+      assert(new File(dir, "old.warc.gz").delete())
+      got.clear()
+      // a STRICT restart must not fail — zero unread bytes were lost
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        GraftWarc.append(dir, "live.warc", Seq(rec("u://3", "three")))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      assert(got.asScala.toVector == Vector("u://3"), s"exactly the new record: ${got.asScala.toSeq}")
+      latestOffsetLog(ckpt)
+    }
+    val retired = rotate(retireConsumed = true)
+    assert(!retired.contains("old.warc.gz"),
+      s"a rotated segment must leave the checkpointed offset map: $retired")
+    assert(retired.contains("live.warc"))
+    val carried = rotate(retireConsumed = false)
+    assert(carried.contains("old.warc.gz"), s"opt-out must carry the entry: $carried")
+  }
+
+  test("startingOffsets=latest skips the existing backlog, then tails") {
+    val dir = tempDir("warc-latest")
+    GraftWarc.append(dir, "z.warc", (0 until 5).map(i => rec(s"u://$i", s"body $i")))
+    GraftWarc.writeGz(dir, "z.warc.gz", Seq(rec("u://gz", "compressed body")))
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val q = spark.readStream.format("graft-warc").option("path", dir)
+      .option("startingOffsets", "latest").load()
+      .writeStream.option("checkpointLocation", tempDir("warc-latest-ckpt"))
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.select(col("target_uri")).collect().foreach(r => got.add(r.getString(0)))
+        ()
+      }.start()
+    try {
+      q.processAllAvailable()
+      assert(got.isEmpty, s"backlog must be skipped, got ${got.asScala.toSeq}")
+      GraftWarc.append(dir, "z.warc", Seq(rec("u://99", "ninety-nine")))
+      q.processAllAvailable()
+      assert(got.asScala.toVector == Vector("u://99"))
+    } finally q.stop()
   }
 }

@@ -72,8 +72,8 @@ class GuaranteeSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val ckpt = Files.createTempDirectory("graft-eo-ckpt").toString
-    val out = Files.createTempDirectory("graft-eo-out").toString
+    val ckpt = tempDir("graft-eo-ckpt")
+    val out = tempDir("graft-eo-out")
     val in = MemoryStream[KeyedTask]
     val total = 200
     def mk() = graft.streaming.StreamOps.effectivelyOnceParquet(in.toDF(), out, ckpt)

@@ -30,7 +30,7 @@ class IdempotentProduceSpec extends SparkTestBase {
 
   test("a retried produce is delivered once; unmarked records pass untouched") {
     IdempotentProduceSpec.reset()
-    val root = Files.createTempDirectory("graft-idem").toString
+    val root = tempDir("graft-idem")
     val topic = "tasks"
     BrokerLog.createTopic(root, topic, 2)
 
@@ -61,7 +61,7 @@ class IdempotentProduceSpec extends SparkTestBase {
     val q = GraftConsumers.dedupeByMarker(
         TaskSource.brokerStream(spark, root, topic), watermarkDelay = "1 hour")
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("graft-idem-ckpt").toString)
+      .option("checkpointLocation", tempDir("graft-idem-ckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.select(col("value").cast("string"), col("offset")).collect()
           .foreach(r => IdempotentProduceSpec.delivered.add((r.getString(0), r.getLong(1))))

@@ -23,7 +23,7 @@ class IvfIncrementalSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
 
     val e = Tables.embeddings(spark, sfDir)
-    val tmp = Files.createTempDirectory("graft-ivf-inc").toString
+    val tmp = tempDir("graft-ivf-inc")
     val deltaPath = s"$tmp/delta"
 
     // base index over the first 300 vectors; centroids derive from the base
@@ -40,7 +40,7 @@ class IvfIncrementalSpec extends SparkTestBase {
       val q = StreamOps.ivfAppendSink(
         in.toDF().toDF("vec_id", "embedding"), "ivf_inc_spec", deltaPath,
         "vec_id", "embedding",
-        checkpoint = Files.createTempDirectory("graft-ivf-inc-ckpt").toString)
+        checkpoint = tempDir("graft-ivf-inc-ckpt"))
       try {
         late.grouped(100).foreach { chunk => in.addData(chunk); q.processAllAvailable() }
       } finally q.stop()
@@ -114,7 +114,7 @@ class IvfIncrementalSpec extends SparkTestBase {
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
     val cb = graft.similarity.Pq.syntheticCodebooks(m = 8, k = 16, w = 8)
-    val tmp = Files.createTempDirectory("graft-ivfpq-inc").toString
+    val tmp = tempDir("graft-ivfpq-inc")
     val deltaPath = s"$tmp/delta"
     Knn.buildIvfIndex(e.filter(col("vec_id") < 300), "vec_id", "embedding",
       nlist = 16, tableName = "ivfpq_inc_spec", path = s"$tmp/idx", buckets = 8,

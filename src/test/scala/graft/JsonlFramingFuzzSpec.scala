@@ -6,7 +6,7 @@ import java.nio.file.Files
 
 import scala.util.Random
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestBase
 
 /** Seeded randomized torn-write fuzz of the jsonl framing primitives —
   * `completeLength` (tail semantics over a partial append) and
@@ -16,15 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the torn remainder and checks the file reads back whole — the
   * crash-mid-append / reader-races-writer story at every byte offset.
   */
-class JsonlFramingFuzzSpec extends AnyFunSuite {
+class JsonlFramingFuzzSpec extends SparkTestBase {
 
   private val seed = sys.props.get("graft.fuzz.seed").map(_.toLong).getOrElse(20260815L)
 
-  private val dir: File = {
-    val d = Files.createTempDirectory("graft-framing-fuzz").toFile
-    d.deleteOnExit()
-    d
-  }
+  private lazy val dir: File = new File(tempDir("graft-framing-fuzz"))
 
   private def write(f: File, bytes: Array[Byte], append: Boolean): Unit = {
     val out = new FileOutputStream(f, append)

@@ -49,7 +49,7 @@ class KafkaCycleSpec extends SparkTestBase {
     import spark.implicits._
     KafkaCycleSpec.reset()
 
-    val root = Files.createTempDirectory("graft-kafka-cycle").toString
+    val root = tempDir("graft-kafka-cycle")
     val origin = "tasks"
     val retryTopic = "tasks-retry"
     BrokerLog.createTopic(root, origin, 2)
@@ -74,7 +74,7 @@ class KafkaCycleSpec extends SparkTestBase {
 
     val q = TaskSource.brokerStream(spark, root, origin, Some(retryTopic))
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("graft-kafka-cycle-ckpt").toString)
+      .option("checkpointLocation", tempDir("graft-kafka-cycle-ckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val now = System.currentTimeMillis()
         val withMeta = batch

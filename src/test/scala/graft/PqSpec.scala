@@ -314,7 +314,7 @@ class PqSpec extends SparkTestBase {
   test("the persisted IVF-PQ index probe equals the inline form and prunes buckets") {
     val cb = Pq.syntheticCodebooks(m = 8, k = 16, w = 8)
     val queries = emb.filter(col("vec_id") % 50 === 0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-idx").toString
+    val tmp = tempDir("graft-ivfpq-idx")
     Knn.buildIvfIndex(emb, "vec_id", "embedding", nlist = 16,
       tableName = "ivfpq_idx_spec", path = s"$tmp/ivfpq_idx", buckets = 8,
       pqCodebooks = Some(cb))

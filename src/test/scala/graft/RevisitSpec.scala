@@ -34,7 +34,7 @@ class RevisitSpec extends SparkTestBase {
       ++ extra, Array.emptyByteArray)
 
   private def crawlDir(): String = {
-    val dir = Files.createTempDirectory("warc-revisit").toString
+    val dir = tempDir("warc-revisit")
     GraftWarc.writeGz(dir, "crawl.warc.gz", Seq(
       response("a", "https://ex.com/a", "payload-A"),
       response("b", "https://ex.com/b", "payload-B"),

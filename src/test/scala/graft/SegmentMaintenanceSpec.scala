@@ -35,7 +35,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
       .as[(String, String)].collect().toSet
 
   test("warc compaction preserves read-back exactly and folds oldest-first") {
-    val dir = Files.createTempDirectory("maint-warc").toString
+    val dir = tempDir("maint-warc")
     writeWarcEpochs(dir, epochs = 6, perEpoch = 5)
     val before = readRows(dir)
     val folded = SegmentMaintenance.compactSegments(dir, ".warc.gz", keepRecent = 2)
@@ -53,7 +53,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("jsonl compaction preserves read-back exactly (newline-framed concatenation)") {
-    val dir = Files.createTempDirectory("maint-jsonl").toString
+    val dir = tempDir("maint-jsonl")
     (0 until 5).foreach { e =>
       val f = new File(dir, f"seg-q$e%06d-0000.jsonl")
       java.nio.file.Files.write(f.toPath,
@@ -70,7 +70,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("ski-rental scheduler: rent accrues per epoch, fold fires when rent covers the price") {
-    val dir = Files.createTempDirectory("maint-sched").toString
+    val dir = tempDir("maint-sched")
     // expensive per-segment rent, cheap fold: fires as soon as minSegments
     val eager = new SinkCompaction(
       perSegmentProbeSec = 100.0, foldSecPerMb = 0.001, minSegments = 4, keepRecent = 1)
@@ -87,7 +87,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("retention drops only expired segments (count and age)") {
-    val dir = Files.createTempDirectory("maint-retain").toString
+    val dir = tempDir("maint-retain")
     writeWarcEpochs(dir, epochs = 5, perEpoch = 2)
     val dropped = SegmentMaintenance.retainByCount(dir, ".warc.gz", keep = 3)
     assert(dropped == Seq("seg-q000000-0000.warc.gz", "seg-q000001-0000.warc.gz"))
@@ -102,12 +102,12 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("tailing reader survives a compaction: no loss, folded records re-deliver once") {
-    val dir = Files.createTempDirectory("maint-tail").toString
+    val dir = tempDir("maint-tail")
     writeWarcEpochs(dir, epochs = 4, perEpoch = 3)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val q = spark.readStream.format("graft-warc").option("path", dir).load()
       .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("maint-tail-ckpt").toString)
+      .option("checkpointLocation", tempDir("maint-tail-ckpt"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         b.select("target_uri").collect().foreach(r => got.add(r.getString(0)))
         ()
@@ -139,7 +139,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("takedown purge rewrites only affected segments; survivors byte-identical") {
-    val dir = Files.createTempDirectory("maint-purge").toString
+    val dir = tempDir("maint-purge")
     writeWarcEpochs(dir, epochs = 3, perEpoch = 4)
     val untouched = new File(dir, "seg-q000001-0000.warc.gz")
     val untouchedBytes = java.nio.file.Files.readAllBytes(untouched.toPath)
@@ -161,7 +161,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("purge steps over a corrupt gz member and still removes takedowns AFTER it") {
-    val dir = Files.createTempDirectory("maint-purge3").toString
+    val dir = tempDir("maint-purge3")
     GraftWarc.writeGz(dir, "seg-q000000-0000.warc.gz", Seq(
       (Seq("WARC-Type" -> "resource", "WARC-Target-URI" -> "u://keep"), "k".getBytes),
       (Seq("WARC-Type" -> "resource", "WARC-Target-URI" -> "u://corrupt"), "c".getBytes),
@@ -184,7 +184,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("retention and folding order batch-tagged (uuid) segments by arrival, not name") {
-    val dir = Files.createTempDirectory("maint-batch-order").toString
+    val dir = tempDir("maint-batch-order")
     // batch tags are seg-b<uuid> — random names; write three with strictly
     // increasing mtimes in a SHUFFLED name order
     val names = Seq("seg-bzz9-0000.warc.gz", "seg-baa1-0000.warc.gz", "seg-bmm5-0000.warc.gz")
@@ -215,7 +215,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("purge keeps surviving members verbatim inside a rewritten multi-record segment") {
-    val dir = Files.createTempDirectory("maint-purge2").toString
+    val dir = tempDir("maint-purge2")
     // one gz file, three single-record members: purge the middle one and
     // the outer members' COMPRESSED bytes must survive byte-identically
     GraftWarc.writeGz(dir, "seg-q000000-0000.warc.gz", Seq(
@@ -238,7 +238,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("quarantine: a takedown inside a corrupt member leaves zero readable and zero persisted copies") {
-    val dir = Files.createTempDirectory("maint-purge4").toString
+    val dir = tempDir("maint-purge4")
     GraftWarc.writeGz(dir, "seg-q000000-0000.warc.gz", Seq(
       (Seq("WARC-Type" -> "resource", "WARC-Target-URI" -> "u://keep"), "k".getBytes),
       (Seq("WARC-Type" -> "resource", "WARC-Target-URI" -> "u://secret"),
@@ -265,7 +265,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
     assert(readRows(dir) == Set(("u://keep", "k"), ("u://keep2", "k2")))
     // quarantine OFF preserves the r19 step-over contract: corrupt bytes
     // persist until compaction/retention (the caller's explicit choice)
-    val dir2 = Files.createTempDirectory("maint-purge5").toString
+    val dir2 = tempDir("maint-purge5")
     java.nio.file.Files.write(new File(dir2, "seg-q000000-0000.warc.gz").toPath, bytes)
     assert(SegmentMaintenance.purgeWarcRecords(
       spark, dir2, Seq("u://secret"), quarantineCorrupt = false) == 0L)
@@ -275,7 +275,7 @@ class SegmentMaintenanceSpec extends SparkTestBase {
   }
 
   test("compactSegments sweeps a stale fold temp; a purge temp survives the sweep") {
-    val dir = Files.createTempDirectory("maint-sweep").toString
+    val dir = tempDir("maint-sweep")
     writeWarcEpochs(dir, epochs = 5, perEpoch = 2)
     val staleFold = new File(dir, ".seg-compact-0000-dead.warc.gz.xyz.inprogress")
     val purgeTemp = new File(dir, ".seg-q000001-0000.warc.gz.abc.inprogress")

@@ -17,7 +17,7 @@ class SourceChaosSpec extends SparkTestBase {
   test("chaos scenario over graft-kafka: all three guarantees hold") {
     val suite = GuaranteeSuite()
     suite.chaosTestOver(spark,
-      ChaosMedium.kafka(Files.createTempDirectory("graft-chaos-kafka").toString,
+      ChaosMedium.kafka(tempDir("graft-chaos-kafka"),
         "chaos", nPartitions = 4),
       nKeys = 20, total = 1000)(identity)
   }
@@ -25,7 +25,7 @@ class SourceChaosSpec extends SparkTestBase {
   test("chaos scenario over graft-jsonl: all three guarantees hold") {
     val suite = GuaranteeSuite()
     suite.chaosTestOver(spark,
-      ChaosMedium.jsonl(Files.createTempDirectory("graft-chaos-jsonl").toString, nFiles = 4),
+      ChaosMedium.jsonl(tempDir("graft-chaos-jsonl"), nFiles = 4),
       nKeys = 20, total = 1000)(identity)
   }
 
@@ -33,8 +33,8 @@ class SourceChaosSpec extends SparkTestBase {
     import java.io.File
     import scala.jdk.CollectionConverters._
     import graft.sources.jsonl.GraftJsonl
-    val dir = Files.createTempDirectory("graft-retire-replay").toString
-    val ckpt = Files.createTempDirectory("graft-retire-replay-ckpt").toString
+    val dir = tempDir("graft-retire-replay")
+    val ckpt = tempDir("graft-retire-replay-ckpt")
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
     def startTail() = spark.readStream.format("graft-jsonl")
       .option("path", dir).option("retentionMs", "0") // strict loss mode + active retirement
@@ -96,7 +96,7 @@ class SourceChaosSpec extends SparkTestBase {
     val suite = GuaranteeSuite()
     val e = intercept[AssertionError] {
       suite.chaosTestOver(spark,
-        ChaosMedium.jsonl(Files.createTempDirectory("graft-chaos-jsonl-neg").toString,
+        ChaosMedium.jsonl(tempDir("graft-chaos-jsonl-neg"),
           nFiles = 4),
         nKeys = 10, total = 200)(_.filter(org.apache.spark.sql.functions.col("key") =!= "key-3"))
     }

@@ -48,8 +48,8 @@ class StatefulCompactionSpec extends SparkTestBase {
   test("compaction state survives a query restart (checkpointed state store)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-compact-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-compact-out").toString
+    val checkpoint = tempDir("graft-compact-ckpt")
+    val outDir = tempDir("graft-compact-out")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Ev]
 
     // file sink (memory sink cannot recover from a checkpoint)

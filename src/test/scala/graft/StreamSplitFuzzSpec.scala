@@ -47,7 +47,7 @@ class StreamSplitFuzzSpec extends SparkTestBase {
       .withColumn("ts", timestamp_seconds(col("sec")))
     val out = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
     val q = op(src).writeStream
-      .option("checkpointLocation", Files.createTempDirectory("split-fuzz").toString)
+      .option("checkpointLocation", tempDir("split-fuzz"))
       .outputMode("append")
       .foreachBatch { (b: DataFrame, _: Long) => b.collect().foreach(out.add); () }
       .start()

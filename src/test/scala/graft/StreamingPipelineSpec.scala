@@ -37,7 +37,7 @@ class StreamingPipelineSpec extends SparkTestBase {
   private val rates = Map("en" -> 900, "zh" -> 600, "de" -> 400, "es" -> 250)
 
   test("stratified sampling + chunking over a graft-kafka stream match their batch results") {
-    val root = Files.createTempDirectory("graft-kafka-pipe").toString
+    val root = tempDir("graft-kafka-pipe")
     BrokerLog.createTopic(root, "docs", 4)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -49,7 +49,7 @@ class StreamingPipelineSpec extends SparkTestBase {
       .option("root", root).option("topic", "docs").save()
 
     StreamingPipelineSpec.reset()
-    val ckpt = Files.createTempDirectory("graft-kafka-pipe-ckpt").toString
+    val ckpt = tempDir("graft-kafka-pipe-ckpt")
     val q = spark.readStream.format("graft-kafka")
       .option("root", root).option("subscribe", "docs")
       // several micro-batches, so per-batch selection bias would be caught
@@ -94,7 +94,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     import graft.streaming.StreamOps
     import spark.implicits._
 
-    val root = Files.createTempDirectory("graft-kafka-wds").toString
+    val root = tempDir("graft-kafka-wds")
     BrokerLog.createTopic(root, "wds", 3)
     val base = 1704067200000L // 2024-01-01T00:00:00Z, hour-aligned
 
@@ -117,7 +117,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     // flush far in the future: advances the watermark past every real window
     val flush = Seq((999L, "view", base + 20 * 3600000L))
 
-    val ckpt = Files.createTempDirectory("graft-kafka-wds-ckpt").toString
+    val ckpt = tempDir("graft-kafka-wds-ckpt")
     def mkQuery() = {
       val src = spark.readStream.format("graft-kafka")
         .option("root", root).option("subscribe", "wds")
@@ -210,7 +210,7 @@ class StreamingPipelineSpec extends SparkTestBase {
         "100 seconds", "10 seconds", keepFrac = 0.6, cells = 512)
       .writeStream.outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-cal-ckpt").toString)
+        tempDir("graft-cal-ckpt"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         b.collect().foreach(r => StreamingPipelineSpec.cal.add(
           (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2),
@@ -258,7 +258,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     import graft.dedup.Dedup
     import graft.streaming.StreamOps
 
-    val root = Files.createTempDirectory("graft-kafka-nd").toString
+    val root = tempDir("graft-kafka-nd")
     BrokerLog.createTopic(root, "nd", 4)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     // corpus + planted exact duplicates (shifted ids): the dedup must
@@ -282,7 +282,7 @@ class StreamingPipelineSpec extends SparkTestBase {
         col("timestamp"))
 
     // --- signature-exact streaming dedup --------------------------------
-    val ckpt1 = Files.createTempDirectory("graft-kafka-nd-c1").toString
+    val ckpt1 = tempDir("graft-kafka-nd-c1")
     val q1 = StreamOps.nearDedupeStreamBySignature(
         stream(), col("text"), "timestamp", "10 minutes")
       .select("doc_id", "text")
@@ -304,7 +304,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     val half = docs.filter(col("doc_id") < 250)
     val index = Dedup.lshBandSignaturesWide(
       Dedup.minHashSignaturesWide(half, col("doc_id"), col("text"), 16, 5), 16, 4)
-    val ckpt2 = Files.createTempDirectory("graft-kafka-nd-c2").toString
+    val ckpt2 = tempDir("graft-kafka-nd-c2")
     val q2 = StreamOps.flagAgainstLshIndex(
         stream(), col("doc_id"), col("text"), "timestamp", "10 minutes", index)
       .writeStream.format("memory").queryName("nd_flagged")
@@ -325,7 +325,7 @@ class StreamingPipelineSpec extends SparkTestBase {
   test("end-to-end streaming curation: dedup -> quality gates -> mixing sample") {
     import graft.streaming.StreamOps
 
-    val root = Files.createTempDirectory("graft-kafka-cur").toString
+    val root = tempDir("graft-kafka-cur")
     BrokerLog.createTopic(root, "raw", 4)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val planted = docs.limit(15).select(
@@ -337,7 +337,7 @@ class StreamingPipelineSpec extends SparkTestBase {
       .write.format("graft-kafka").mode("append")
       .option("root", root).option("topic", "raw").save()
 
-    val ckpt = Files.createTempDirectory("graft-kafka-cur-ckpt").toString
+    val ckpt = tempDir("graft-kafka-cur-ckpt")
     val parsed = spark.readStream.format("graft-kafka")
       .option("root", root).option("subscribe", "raw")
       .option("maxOffsetsPerTrigger", "96")
@@ -404,7 +404,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     // SAME operator chain run in batch over the same directory
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ftp").toString
+    val dir = tempDir("graft-ftp")
     def line(id: Int, text: String): String =
       s"""{"doc_id":$id,"ts":${1704067200L + id},"text":"$text"}"""
     // planted exact dups: every 3rd doc repeats an earlier text
@@ -416,12 +416,12 @@ class StreamingPipelineSpec extends SparkTestBase {
       get_json_object(col("value"), "$.doc_id").cast("long").as("doc_id"),
       timestamp_seconds(get_json_object(col("value"), "$.ts").cast("long")).as("ts"),
       get_json_object(col("value"), "$.text").as("text"))
-    val out = java.nio.file.Files.createTempDirectory("graft-ftp-out").toString
+    val out = tempDir("graft-ftp-out")
     val q = graft.streaming.StreamOps.effectivelyOnceParquet(
       graft.streaming.StreamOps.nearDedupeStreamBySignature(
         parsed(spark.readStream.format("graft-jsonl").option("path", dir).load()),
         col("text"), "ts", "10 minutes"),
-      out, java.nio.file.Files.createTempDirectory("graft-ftp-ckpt").toString)
+      out, tempDir("graft-ftp-ckpt"))
     try {
       q.processAllAvailable()
       // second wave arrives as a NEW segment (incl. dups of wave-1 texts
@@ -449,7 +449,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     import graft.streaming.{StreamOps, SubscriptionStates}
     import SubscriptionStates._
 
-    val dir = Files.createTempDirectory("graft-jsonl-cur").toString
+    val dir = tempDir("graft-jsonl-cur")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val planted = docs.limit(15).select(
       (col("doc_id") + 200000L).as("doc_id"), col("lang"), col("text"))
@@ -488,7 +488,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     try {
       val q = curated.select("doc_id", "lang", "text")
         .writeStream.format("memory").queryName("cur_jsonl")
-        .option("checkpointLocation", Files.createTempDirectory("graft-jsonl-cur-ckpt").toString)
+        .option("checkpointLocation", tempDir("graft-jsonl-cur-ckpt"))
         .outputMode("append").start()
       try {
         q.processAllAvailable()
@@ -552,7 +552,7 @@ class StreamingPipelineSpec extends SparkTestBase {
   test("stream-stream time-bounded join matches the batch join") {
     import graft.streaming.StreamOps
 
-    val root = Files.createTempDirectory("graft-kafka-ssj").toString
+    val root = tempDir("graft-kafka-ssj")
     BrokerLog.createTopic(root, "clicks", 2)
     BrokerLog.createTopic(root, "views", 2)
     val events = Tables.events(spark, sfDir)
@@ -576,7 +576,7 @@ class StreamingPipelineSpec extends SparkTestBase {
         .select(col(s"${p}_user"), col("kv")(0).cast("long").as(s"${p}_id"),
           timestamp_micros(col("kv")(1).cast("long")).as(s"${p}_ts"))
 
-    val ckpt = Files.createTempDirectory("graft-kafka-ssj-ckpt").toString
+    val ckpt = tempDir("graft-kafka-ssj-ckpt")
     val joined = StreamOps.timeBoundedJoin(
       readSide("clicks", "c"), readSide("views", "v"),
       "c_user", "v_user", "c_ts", "v_ts",
@@ -624,7 +624,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     // late — synthetic clocks must start strictly after the epoch
     val stream = in.toDF().toDF("doc_id", "text")
       .withColumn("__ts", timestamp_micros((col("doc_id") + 3600L) * 1000000L))
-    val ckpt = Files.createTempDirectory("cdc-ckpt").toString
+    val ckpt = tempDir("cdc-ckpt")
     val q = StreamOps.admitChangedAgainstArtifact(
         stream, col("doc_id"), col("text"), "__ts", "1 hour", prev)
       .writeStream.format("memory").queryName("cdc_admitted")
@@ -658,7 +658,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     val in = MemoryStream[(Long, String)]
     val stream = in.toDF().toDF("doc_id", "text")
       .withColumn("__ts", timestamp_micros(col("doc_id") * 1000000L))
-    val ckpt = Files.createTempDirectory("drift-ckpt").toString
+    val ckpt = tempDir("drift-ckpt")
     val q = StreamOps.termDriftAlarm(
         stream, col("text"), "__ts", "10 minutes", "100 seconds", ref, nBuckets = 512)
       .writeStream.format("memory").queryName("drift_windows")
@@ -707,7 +707,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     val in = MemoryStream[(Long, String)]
     val stream = in.toDF().toDF("doc_id", "text")
       .withColumn("__ts", timestamp_micros(col("doc_id") * 1000000L))
-    val ckpt = Files.createTempDirectory("drift-refresh-ckpt").toString
+    val ckpt = tempDir("drift-refresh-ckpt")
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
     val q = StreamOps.termDriftAlarmRefreshed(
         stream, col("text"), "__ts", "10 seconds", "100 seconds",
@@ -761,7 +761,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     val in = MemoryStream[(Long, Array[Float])]
     val stream = in.toDF().toDF("vec_id", "embedding")
       .withColumn("__ts", timestamp_micros(col("vec_id") * 1000000L))
-    val ckpt = Files.createTempDirectory("pq-flag-ckpt").toString
+    val ckpt = tempDir("pq-flag-ckpt")
     val q = StreamOps.flagAgainstPqIndex(
         stream.filter(col("vec_id") % 2 === 1), col("vec_id"), col("embedding"),
         "__ts", "1 hour", index, cb, bands = 2)

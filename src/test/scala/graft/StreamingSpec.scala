@@ -147,7 +147,7 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     import graft.streaming.StateStores
     val prev = StateStores.useRocksDb(spark)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-rocksdb-ckpt").toString
+    val ckpt = tempDir("graft-rocksdb-ckpt")
     try {
       val in = mkStream()
       val out = StreamOps.dedupeStream(in.toDF(), Seq("key"), "ts", "1 minute")

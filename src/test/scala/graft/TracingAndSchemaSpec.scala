@@ -88,7 +88,7 @@ class TracingAndSchemaSpec extends SparkTestBase {
   }
 
   test("published schema JSON covers the engine properties; file values validate against it") {
-    val schemaPath = Files.createTempFile("graft-schema", ".json")
+    val schemaPath = tempFile("graft-schema", ".json")
     val defs: Seq[PropertyDefinition[_]] = Seq(
       EngineProperties.IgnoreKeys, EngineProperties.PartitionConcurrency,
       EngineProperties.MaxPendingRecords, EngineProperties.ProcessingRate,
@@ -99,7 +99,7 @@ class TracingAndSchemaSpec extends SparkTestBase {
     defs.foreach(d => assert(json.contains(d.name), s"schema must list ${d.name}"))
     assert(json.contains("\"type\": \"integer\"") && json.contains("\"type\": \"boolean\""))
 
-    val cfg = Files.createTempFile("graft-conf", ".properties")
+    val cfg = tempFile("graft-conf", ".properties")
     Files.writeString(cfg,
       """decaton.processing.rate.per.partition=2000000
         |decaton.partition.concurrency=4

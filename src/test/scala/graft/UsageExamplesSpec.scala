@@ -36,7 +36,7 @@ class UsageExamplesSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val tmp = java.nio.file.Files.createTempDirectory("usage-selfidx").toString
+    val tmp = tempDir("usage-selfidx")
     val n = new java.util.concurrent.atomic.AtomicLong()
     val q = graft.streaming.StreamOps.selfIndexingLshFlagger(
       in.toDF().toDF("doc_id", "text"), col("doc_id"), col("text"),
@@ -184,7 +184,7 @@ class UsageExamplesSpec extends SparkTestBase {
     val h = ZOrder.hilbertValue(Seq(
       (col("o_orderkey"), 1L, 6000000L),
       (col("o_custkey"), 1L, 150000L)), bits = 16)
-    val dir = java.nio.file.Files.createTempDirectory("usage_zorder").toString
+    val dir = tempDir("usage_zorder")
     try {
       ZOrder.writeZOrdered(orders, z, s"$dir/z", numFiles = 4)
       ZOrder.writeHilbertOrdered(orders, h, s"$dir/h", numFiles = 4)

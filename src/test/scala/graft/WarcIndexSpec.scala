@@ -23,7 +23,7 @@ class WarcIndexSpec extends SparkTestBase {
       body.getBytes("UTF-8"))
 
   test("index coordinates point-fetch their exact records with single-record I/O") {
-    val dir = Files.createTempDirectory("warc-idx").toString
+    val dir = tempDir("warc-idx")
     // INCOMPRESSIBLE bodies (seeded pseudo-random printable chars) so the
     // gz file is record-count × body-size big and "single-record I/O" is
     // measurably below file size — repetitive bodies would deflate the
@@ -63,7 +63,7 @@ class WarcIndexSpec extends SparkTestBase {
   }
 
   test("digest-free index of plain files never reads block bytes (pruning reaches the scan)") {
-    val dir = Files.createTempDirectory("warc-idx-nodigest").toString
+    val dir = tempDir("warc-idx-nodigest")
     GraftWarc.append(dir, "p.warc", (0 until 10).map(i => rec(i, "x" * 5000)))
     val idx = WarcIndex.build(spark, dir, includeDigest = false)
     assert(!idx.columns.contains("digest"))
@@ -78,7 +78,7 @@ class WarcIndexSpec extends SparkTestBase {
   }
 
   test("fetchMany random-accesses a coordinate frame (the serving-tier join)") {
-    val dir = Files.createTempDirectory("warc-idx-many").toString
+    val dir = tempDir("warc-idx-many")
     GraftWarc.writeGz(dir, "m.warc.gz", (0 until 30).map(i => rec(i, s"body-$i")))
     val idx = WarcIndex.build(spark, dir, includeDigest = false)
     // fetch an arbitrary subset, as a serving query would
@@ -95,7 +95,7 @@ class WarcIndexSpec extends SparkTestBase {
   }
 
   test("stale coordinates (truncated file) fetch empty instead of garbage") {
-    val dir = Files.createTempDirectory("warc-idx-stale").toString
+    val dir = tempDir("warc-idx-stale")
     GraftWarc.writeGz(dir, "s.warc.gz", (0 until 5).map(i => rec(i, "z" * 2000)))
     val f = new File(dir, "s.warc.gz")
     val idx = WarcIndex.build(spark, dir, includeDigest = false)
@@ -110,9 +110,9 @@ class WarcIndexSpec extends SparkTestBase {
   }
 
   test("bucketed index round-trips through the catalog with bucket metadata") {
-    val dir = Files.createTempDirectory("warc-idx-bkt").toString
+    val dir = tempDir("warc-idx-bkt")
     GraftWarc.writeGz(dir, "k.warc.gz", (0 until 12).map(i => rec(i, s"v$i")))
-    val path = Files.createTempDirectory("warc-idx-bkt-out").toString
+    val path = tempDir("warc-idx-bkt-out")
     val table = "warc_index_spec_tbl"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     WarcIndex.writeBucketed(

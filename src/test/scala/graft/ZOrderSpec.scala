@@ -167,7 +167,7 @@ class ZOrderSpec extends SparkTestBase {
       Seq((col("o_orderkey"), okMin, okMax), (col("o_custkey"), ckMin, ckMax)),
       bits = 10)
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val tmp = tempDir("graft-zorder")
     ZOrder.writeZOrdered(o, zv, s"$tmp/z", numFiles = 16)
     // the baseline layout: globally sorted by the FIRST column only
     o.repartitionByRange(16, col("o_orderkey"))
